@@ -4,10 +4,16 @@ reference's streaming envelopes (topic_db CDC, topic_log behavior log).
 The reference declares schemas per job as Flink SQL DDL strings
 (reference: gmall-realtime utils/MyKafkaUtil.java:91-100 for the CDC
 envelope, app/dwd/log/BaseLogApp.java:47-57 for the log). Here every
-schema lives in one module and is explicit — no inference anywhere.
+streaming schema lives in one module and is explicit. The parquet test
+tables are the exception: a load infers their schema from the file
+footers, once per file signature (``load_table`` memoizes the resolved
+relation per session).
 """
 
 from __future__ import annotations
+
+import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -99,16 +105,75 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+# Session confs that a load bakes into the resolved plan: the timezone
+# of the events NTZ -> TIMESTAMP cast, and how TIMESTAMP(NANOS) is read.
+_MEMO_CONFS = ("spark.sql.session.timeZone",
+               "spark.sql.legacy.parquet.nanosAsLong")
+# Most paths one session's memo keeps; the least recently loaded goes
+# first. Bounds a long session that reads many short-lived directories.
+_MEMO_PATHS = 64
+
+
+def _file_signature(path: str) -> tuple | None:
+    """What a fresh load of ``path`` would see: inode, size, mtime and
+    ctime of a single file, or the sorted listing of every file under a
+    directory. ctime is there because mtime can be set back (``cp -p``,
+    ``os.utime``) and ctime cannot. None when ``path`` is missing or not
+    a local path."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_ino, st.st_size, st.st_mtime_ns, st.st_ctime_ns)
+    listing = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            full = os.path.join(root, f)
+            try:
+                s = os.stat(full)
+            except OSError:
+                return None
+            listing.append((os.path.relpath(full, path), s.st_ino,
+                            s.st_size, s.st_mtime_ns, s.st_ctime_ns))
+    return tuple(sorted(listing))
+
+
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
+    df = spark.read.parquet(path)
     if name == "events":
         df = normalize_event_ts(df)
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str,
-                names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """The table as a DataFrame, resolved once per session and file
+    signature.
+
+    Resolving a parquet relation lists its files and infers the schema
+    from their footers, one Spark job per call. The session memo keeps
+    the resolved DataFrame per path, keyed on the file signature and the
+    confs in ``_MEMO_CONFS``; while neither changes, a load returns the
+    same DataFrame and starts no job. A rewrite of the files (in place or
+    by rename, or a part file added) changes the signature, and the next
+    load re-resolves and replaces that path's entry. The signature is
+    taken before the load, so a rewrite racing the load is seen by the
+    next one. Paths that are not local files are loaded on every call.
+    """
+    path = f"{sf_dir}/{name}.parquet"
+    sig = _file_signature(path)
+    if sig is None:
+        return _read_table(spark, path, name)
+    key = (sig, *(spark.conf.get(c, None) for c in _MEMO_CONFS))
+    # on the session object, so the memo ends with its session
+    memo = vars(spark).setdefault("_relation_memo", {})
+    entry = memo.pop(path, None)
+    if entry is None or entry[0] != key:
+        entry = (key, _read_table(spark, path, name))
+    memo[path] = entry
+    if len(memo) > _MEMO_PATHS:
+        del memo[next(iter(memo))]
+    return entry[1]
 
 
 def register_views(spark: SparkSession, sf_dir: str,

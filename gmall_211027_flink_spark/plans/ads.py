@@ -10,14 +10,21 @@ delegates to the Flink/Calcite stack (SURVEY §3).
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
-from gmall_211027_flink_spark.catalog import register_views
+from gmall_211027_flink_spark.catalog import TABLES, register_views
 from gmall_211027_flink_spark.registry import query
 
 
 def _sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
-    register_views(spark, sf_dir)
+    """Plan ``text`` over the tables it names as words. Their views are
+    re-registered on every call (cheap over memoized loads), so a view
+    that other code replaced, or one from another ``sf_dir``, never
+    leaks into this query."""
+    words = set(re.findall(r"\w+", text.lower()))
+    register_views(spark, sf_dir, tuple(n for n in TABLES if n in words))
     return spark.sql(text)
 
 
