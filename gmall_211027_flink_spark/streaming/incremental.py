@@ -24,21 +24,19 @@ either.
 from __future__ import annotations
 
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# op -> (partial expr builder, merge expr builder)
+from gmall_211027_flink_spark.streaming.sinks import (
+    commit, last_epoch, recover)
+
+# op -> (partial aggregate of the input column, re-aggregate of partials)
 _MERGE = {
-    "count": (lambda c: F.count("*"),
-              lambda a, b: F.coalesce(a, F.lit(0)) + F.coalesce(b, F.lit(0))),
-    "sum":   (lambda c: F.sum(c),
-              lambda a, b: F.when(a.isNull(), b).when(b.isNull(), a)
-                            .otherwise(a + b)),
-    "min":   (lambda c: F.min(c), F.least),
-    "max":   (lambda c: F.max(c), F.greatest),
+    "count": (lambda c: F.count("*"), F.sum),
+    "sum":   (F.sum, F.sum),
+    "min":   (F.min, F.min),
+    "max":   (F.max, F.max),
 }
 
 
@@ -59,60 +57,28 @@ class IncrementalAggStore:
                 raise ValueError(f"{name}: unmergeable op {op!r} — "
                                  f"decompose it (avg = sum/count)")
 
-    # epoch marker: same replay-guard scheme as ParquetUpsertSink /
-    # the SCD2 merge — merging a re-delivered batch would double-count
-    @property
-    def _marker(self) -> str:
-        return f"{self.path}._epoch"
-
-    def _last_epoch(self) -> int:
-        try:
-            with open(self._marker) as fh:
-                return int(fh.read().strip())
-        except (OSError, ValueError):
-            return -1
-
-    def _partial(self, batch: DataFrame) -> DataFrame:
-        aggs = [_MERGE[op][0](col).alias(name)
-                for name, (op, col) in self.specs.items()]
-        return batch.groupBy(*self.key_cols).agg(*aggs)
-
     def write_batch(self, batch: DataFrame, epoch_id: int) -> None:
-        if epoch_id <= self._last_epoch():
+        # replay guard: merging a re-delivered batch would double-count;
+        # the epoch is committed by the same rename as the rows
+        if epoch_id <= last_epoch(self.path):
             return
-        if batch.isEmpty():
-            return
-        spark = batch.sparkSession
-        part = self._partial(batch)
+        recover(self.path)
+        part = batch.groupBy(*self.key_cols).agg(
+            *[_MERGE[op][0](col).alias(name)
+              for name, (op, col) in self.specs.items()])
+        merged = part
         if os.path.exists(self.path):
-            cur = spark.read.parquet(self.path)
-            # full outer on keys; merge each aggregate column pairwise
-            c = cur.alias("c")
-            p = part.alias("p")
-            cond = [F.col(f"c.{k}").eqNullSafe(F.col(f"p.{k}"))
-                    for k in self.key_cols]
-            joined = c.join(p, cond, "full_outer")
-            keys = [F.coalesce(F.col(f"c.{k}"), F.col(f"p.{k}")).alias(k)
-                    for k in self.key_cols]
-            merged_cols = [
-                _MERGE[op][1](F.col(f"c.{name}"), F.col(f"p.{name}"))
-                .alias(name)
-                for name, (op, _col) in self.specs.items()]
-            merged = joined.select(*keys, *merged_cols)
-        else:
-            merged = part
-        tmp = f"{self.path}._tmp-{uuid.uuid4().hex[:8]}"
-        merged.write.mode("overwrite").parquet(tmp)
-        final = spark.read.parquet(tmp)
-        final.write.mode("overwrite").parquet(self.path)
-        shutil.rmtree(tmp, ignore_errors=True)
-        m = self._marker + ".tmp"
-        with open(m, "w") as fh:
-            fh.write(str(epoch_id))
-        os.replace(m, self._marker)
-
-    def foreach_batch(self):
-        return self.write_batch
+            # the store holds partials: re-aggregate their union, read
+            # with the partial's schema (no footer job) and cast back to
+            # it (a decimal sum would widen by one digit per batch)
+            cur = batch.sparkSession.read.schema(part.schema) \
+                .parquet(self.path)
+            merged = (cur.unionByName(part).groupBy(*self.key_cols)
+                      .agg(*[_MERGE[op][1](name).alias(name)
+                             for name, (op, _col) in self.specs.items()])
+                      .select(*[F.col(f.name).cast(f.dataType)
+                                for f in part.schema]))
+        commit(merged, self.path, epoch_id)
 
     def read(self, spark) -> DataFrame:
         return spark.read.parquet(self.path)
@@ -121,7 +87,7 @@ class IncrementalAggStore:
 def run_incremental_agg(stream: DataFrame, store: IncrementalAggStore,
                         checkpoint: str) -> "object":
     return (stream.writeStream
-            .foreachBatch(store.foreach_batch())
+            .foreachBatch(store.write_batch)
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start())

@@ -27,13 +27,17 @@ for O(batch) commits at a 1000x store-to-batch ratio.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from gmall_211027_flink_spark.operators.windows import scd2_versions
+from gmall_211027_flink_spark.streaming.sinks import (
+    commit, last_epoch, recover)
 
-# store schema: pk bigint, status string, eff_from ts, eff_to ts,
-# is_current int
+_STORE_SCHEMA = ("pk bigint, status string, eff_from timestamp, "
+                 "eff_to timestamp, is_current int")
 
 
 def scd2_merge_batch(store: DataFrame, batch: DataFrame) -> DataFrame:
@@ -64,54 +68,42 @@ def scd2_merge_batch(store: DataFrame, batch: DataFrame) -> DataFrame:
     return untouched.unionByName(recomputed)
 
 
+def scd2_foreach_batch(store_path: str):
+    """The foreachBatch function that merges each (pk, ts, seq, status)
+    micro-batch into the parquet SCD2 store at ``store_path``."""
+
+    def merge(batch_df: DataFrame, epoch_id: int) -> None:
+        # Replay guard, before any Spark job: the merge is NOT idempotent
+        # — re-applying a committed batch would feed already-folded
+        # events back through the collapse against the post-merge open
+        # rows and corrupt version order. foreachBatch re-delivers the
+        # same epoch_id after a crash; skip it.
+        if epoch_id <= last_epoch(store_path):
+            return
+        if batch_df.isEmpty():
+            return
+        recover(store_path)
+        spark = batch_df.sparkSession
+        store = (spark.read.schema(_STORE_SCHEMA).parquet(store_path)
+                 if os.path.exists(store_path)
+                 else spark.createDataFrame([], _STORE_SCHEMA))
+        new_store = scd2_merge_batch(store, batch_df)
+        # rewrite-on-commit for the test store; production uses the
+        # bucketed O(batch) upsert layout (module docstring)
+        commit(new_store.select(*[F.col(f.name).cast(f.dataType)
+                                  for f in store.schema]),
+               store_path, epoch_id)
+
+    return merge
+
+
 def run_scd2_stream(changelog_stream: DataFrame, store_path: str,
                     checkpoint: str) -> "object":
     """Wire a (pk, ts, seq, status) stream into a parquet SCD2 store via
     foreachBatch. Returns the StreamingQuery (availableNow callers wait
     on it)."""
-
-    import os
-
-    marker = store_path + "._epoch"
-
-    def _last_epoch() -> int:
-        try:
-            with open(marker) as fh:
-                return int(fh.read().strip())
-        except (OSError, ValueError):
-            return -1
-
-    def merge(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        # Replay guard (same scheme as ParquetUpsertSink): the merge is
-        # NOT idempotent — re-applying a committed batch would feed
-        # already-folded events back through the collapse against the
-        # post-merge open rows and corrupt version order. foreachBatch
-        # re-delivers the same epoch_id after a crash; skip it.
-        if epoch_id <= _last_epoch():
-            return
-        try:
-            store = spark.read.parquet(store_path)
-        except Exception:
-            store = spark.createDataFrame(
-                [], "pk bigint, status string, eff_from timestamp, "
-                    "eff_to timestamp, is_current int")
-        new_store = scd2_merge_batch(store, batch_df)
-        # rewrite-on-commit for the test store; production uses the
-        # bucketed O(batch) upsert layout (module docstring)
-        tmp = store_path + "._staged"
-        new_store.write.mode("overwrite").parquet(tmp)
-        final = spark.read.parquet(tmp)
-        final.write.mode("overwrite").parquet(store_path)
-        tmp_marker = marker + ".tmp"
-        with open(tmp_marker, "w") as fh:
-            fh.write(str(epoch_id))
-        os.replace(tmp_marker, marker)
-
     return (changelog_stream.writeStream
-            .foreachBatch(merge)
+            .foreachBatch(scd2_foreach_batch(store_path))
             .option("checkpointLocation", checkpoint)
             .trigger(availableNow=True)
             .start())

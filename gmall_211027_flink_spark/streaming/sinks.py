@@ -13,6 +13,11 @@ micro-batch rewrites the (old ∖ batch-keys) ∪ batch rows atomically via
 a temp dir + rename. Last-wins within a batch is resolved by
 (ts, monotonic tiebreak) — the same last-row-wins rule as the
 reference's OrderDetailFilterFunction.java:42-81.
+
+That rename swap, :func:`commit`, is the one commit path of every store
+here (also IncrementalAggStore and the SCD2 store): it publishes a
+batch's rows and its epoch together. It needs atomic directory rename
+(local FS, HDFS); object stores need a pointer file or a table format.
 """
 
 from __future__ import annotations
@@ -28,6 +33,87 @@ from pyspark.sql import functions as F
 log = logging.getLogger(__name__)
 
 
+EPOCH_FILE = "_epoch"   # parquet readers skip "_"-prefixed files
+
+
+def staging_root(path: str) -> str:
+    """Sibling of ``path``, never inside it, where readers never scan."""
+    return f"{path}._staging"
+
+
+def last_epoch(path: str, run_tag: str = "default") -> int:
+    """Last epoch committed to the store at ``path`` by ``run_tag``, or
+    -1. Reads the marker inside the store, else the ``<path>._epoch``
+    beside it, which the bucketed upsert store (not one rename) and
+    stores written before the in-store marker keep."""
+    for marker in (os.path.join(path, EPOCH_FILE), f"{path}._epoch"):
+        try:
+            with open(marker) as fh:
+                lines = fh.read().splitlines() or [""]
+        except OSError:
+            continue
+        try:
+            epoch = int(lines[0].strip())
+        except ValueError:
+            return -1
+        stored_tag = lines[1].strip() if len(lines) > 1 else "default"
+        if stored_tag != run_tag:
+            log.warning(
+                "store %s: epoch marker belongs to run_tag %r (current "
+                "%r) — treating store as un-committed for this query; no "
+                "batches will be skipped", path, stored_tag, run_tag)
+            return -1
+        return epoch
+    return -1
+
+
+def write_epoch(marker: str, epoch_id: int, run_tag: str) -> None:
+    tmp = f"{marker}.tmp-{uuid.uuid4().hex[:8]}"
+    with open(tmp, "w") as fh:
+        fh.write(f"{epoch_id}\n{run_tag}")
+    os.replace(tmp, marker)
+
+
+def recover(path: str) -> None:
+    """Repair a crashed commit before the next one: a displaced copy
+    whose target is missing (a crash between the swap's two renames) is
+    the last committed store and goes back in place; every other
+    leftover under the staging root is dropped."""
+    root = staging_root(path)
+    if not os.path.isdir(root):
+        return
+    for name in os.listdir(root):
+        if name == "old" or name.startswith("old-"):
+            target = (path if name == "old"
+                      else os.path.join(path, name[len("old-"):]))
+            if not os.path.exists(target):
+                log.warning("store %s: restoring %s displaced by a "
+                            "crashed commit", path, target)
+                os.rename(os.path.join(root, name), target)
+    shutil.rmtree(root, ignore_errors=True)
+
+
+def commit(df: DataFrame, path: str, epoch_id: int | None = None,
+           run_tag: str = "default", sub: str | None = None) -> None:
+    """Replace the store at ``path`` (or its sub-directory ``sub``) with
+    ``df``: one parquet write into the staging root, ``epoch_id`` stamped
+    into the staged directory, then the swap by rename. Callers run
+    :func:`recover` first."""
+    root = staging_root(path)
+    os.makedirs(root, exist_ok=True)
+    tmp = os.path.join(root, f"tmp-{uuid.uuid4().hex[:8]}")
+    df.write.parquet(tmp)
+    if epoch_id is not None:
+        write_epoch(os.path.join(tmp, EPOCH_FILE), epoch_id, run_tag)
+    target = os.path.join(path, sub) if sub else path
+    old = os.path.join(root, f"old-{sub}" if sub else "old")
+    if os.path.exists(target):
+        os.rename(target, old)
+    os.rename(tmp, target)
+    if os.path.exists(old):
+        shutil.rmtree(old)
+
+
 class ParquetUpsertSink:
     """Keyed upsert into a parquet directory (PK last-wins).
 
@@ -36,12 +122,14 @@ class ParquetUpsertSink:
     - **Idempotent replay (effectively-once).** After a failure between
       the sink write and the checkpoint commit, Structured Streaming
       re-delivers the SAME micro-batch under the SAME epoch_id. The sink
-      records the last committed epoch in a sibling marker file and
-      skips re-delivered epochs, so foreachBatch + checkpointing yields
+      records the last committed epoch in a marker file and skips
+      re-delivered epochs, so foreachBatch + checkpointing yields
       exactly-once table state (the guarantee the reference scaffolds
       with Flink checkpoint configs, DwdTradePayDetailSuc.java:27-39).
-      A crash mid-write simply re-runs the (deterministic) upsert before
-      the marker advances — same final state.
+      Unbucketed, the epoch is published by the same rename as the rows
+      (:func:`commit`); bucketed, it is written after the last bucket
+      swap, and a crash before it re-runs the (deterministic, hence
+      idempotent) upsert — same final state.
     - **Bucketed partial rewrite (the default).** Rows live in
       hash(pk)-bucket subdirectories and a micro-batch rewrites ONLY
       the buckets its keys touch — O(batch ∩ buckets), not O(table).
@@ -56,7 +144,7 @@ class ParquetUpsertSink:
       under a sibling ``<path>._staging/`` directory — never inside
       ``path`` — so a crash between the parquet write and the rename
       cannot leave orphan files that ``read()`` would pick up as live
-      rows. Leftover staging dirs are swept on the next write.
+      rows; the next write repairs them (:func:`recover`).
     """
 
     DEFAULT_BUCKETS = 64
@@ -91,62 +179,13 @@ class ParquetUpsertSink:
             .filter(F.col("_rn") == 1).drop("_rn")
         )
 
-    # -- idempotent-replay marker ------------------------------------------
-
-    @property
-    def _epoch_marker(self) -> str:
-        return f"{self.path}._epoch"
-
     def _last_epoch(self) -> int:
         """Last committed epoch FOR THIS run_tag (-1 if none/foreign)."""
-        try:
-            with open(self._epoch_marker) as f:
-                content = f.read()
-        except OSError:
-            return -1
-        lines = content.splitlines() or [""]
-        try:
-            epoch = int(lines[0].strip())
-        except ValueError:
-            return -1
-        stored_tag = lines[1].strip() if len(lines) > 1 else "default"
-        if stored_tag != self.run_tag:
-            log.warning(
-                "upsert sink %s: epoch marker belongs to run_tag %r "
-                "(current %r) — treating store as un-committed for this "
-                "query; no batches will be skipped", self.path,
-                stored_tag, self.run_tag)
-            return -1
-        return epoch
-
-    def _commit_epoch(self, epoch_id: int) -> None:
-        tmp = f"{self._epoch_marker}.tmp-{uuid.uuid4().hex[:8]}"
-        with open(tmp, "w") as f:
-            f.write(f"{epoch_id}\n{self.run_tag}")
-        os.replace(tmp, self._epoch_marker)
-
-    # -- write paths --------------------------------------------------------
+        return last_epoch(self.path, self.run_tag)
 
     @property
     def _staging_root(self) -> str:
-        # Sibling of self.path — NEVER inside it, so a crash mid-swap
-        # can't leave files where read() scans.
-        return f"{self.path}._staging"
-
-    def _sweep_staging(self) -> None:
-        if os.path.isdir(self._staging_root):
-            shutil.rmtree(self._staging_root, ignore_errors=True)
-
-    def _atomic_swap(self, merged: DataFrame, target: str) -> None:
-        os.makedirs(self._staging_root, exist_ok=True)
-        tmp = os.path.join(self._staging_root, f"tmp-{uuid.uuid4().hex[:8]}")
-        merged.write.mode("overwrite").parquet(tmp)
-        old = os.path.join(self._staging_root, f"old-{uuid.uuid4().hex[:8]}")
-        if os.path.exists(target):
-            os.rename(target, old)
-        os.rename(tmp, target)
-        if os.path.exists(old):
-            shutil.rmtree(old)
+        return staging_root(self.path)
 
     def _bucket_col(self) -> Column:
         return F.pmod(F.xxhash64(*self.key_cols), F.lit(self.num_buckets))
@@ -158,7 +197,7 @@ class ParquetUpsertSink:
             log.warning("upsert sink %s: skipping already-committed epoch "
                         "%d (run_tag=%r)", self.path, epoch_id, self.run_tag)
             return
-        self._sweep_staging()  # clear orphans from any crashed swap
+        recover(self.path)
         spark = batch.sparkSession
         compacted = self._compact(batch)
         # tombstone split: ALL compacted keys leave the old store (the
@@ -177,7 +216,7 @@ class ParquetUpsertSink:
                 merged = keep.unionByName(survivors)
             else:
                 merged = survivors
-            self._atomic_swap(merged, self.path)
+            commit(merged, self.path, epoch_id, self.run_tag)
         else:
             bucketed = compacted.withColumn("_b", self._bucket_col()).cache()
             # bucket IDs only (bounded by num_buckets) — not data rows
@@ -185,7 +224,8 @@ class ParquetUpsertSink:
                               bucketed.select("_b").distinct().collect())
             os.makedirs(self.path, exist_ok=True)
             for b in affected:
-                bdir = os.path.join(self.path, f"bucket={b}")
+                sub = f"bucket={b}"
+                bdir = os.path.join(self.path, sub)
                 part = bucketed.filter(F.col("_b") == b).drop("_b")
                 touched_keys = part.select(*self.key_cols).distinct()
                 if self.op_col is not None:
@@ -196,9 +236,9 @@ class ParquetUpsertSink:
                     keep = spark.read.parquet(bdir).join(
                         touched_keys, self.key_cols, "left_anti")
                     part = keep.unionByName(part)
-                self._atomic_swap(part, bdir)
+                commit(part, self.path, sub=sub)
             bucketed.unpersist()
-        self._commit_epoch(epoch_id)
+            write_epoch(f"{self.path}._epoch", epoch_id, self.run_tag)
 
     def foreach_batch(self):
         return self.write_batch
