@@ -689,7 +689,7 @@ def dedup_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = (pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
              .union(pairs.select(F.col("doc_b").alias("u"),
                                  F.col("doc_a").alias("v")))
-             .distinct().cache())
+             .distinct())
     labels = min_label_components(edges)
     w_sz = F.count("*").over(Window.partitionBy("canonical_doc_id"))
     return (

@@ -78,6 +78,47 @@ def min_label_components(edges: DataFrame) -> DataFrame:
     return labels
 
 
+def _pairs(df: DataFrame, key: str, item: str,
+           max_list: int | None = None) -> DataFrame:
+    """(a, b) rows with a < b, one per pair of ``item`` values sharing a
+    ``key``: one shuffle to key grain, then pairs expanded map-side from
+    each key's sorted list ``ps``. Keys with more than ``max_list``
+    items are skipped (a hub cap on the quadratic fan-out)."""
+    keep = F.size("ps") > 1
+    if max_list is not None:
+        keep = keep & (F.size("ps") <= max_list)
+    return (df.groupBy(key)
+            .agg(F.sort_array(F.collect_list(item)).alias("ps"))
+            .filter(keep)
+            .select(F.explode(F.expr(
+                "flatten(transform(ps, (x, i) -> transform("
+                "slice(ps, i+2, size(ps)-i-1),"
+                " y -> struct(x as a, y as b))))")).alias("p"))
+            .select("p.a", "p.b"))
+
+
+def copurchase_pairs(spark: SparkSession, sf_dir: str,
+                     min_ct: int) -> DataFrame:
+    """Oriented co-purchase pairs (part_a < part_b, together_ct) of parts
+    bought together in >= ``min_ct`` orders — the posting-list plan over
+    (order, part), never a lineitem self-join."""
+    op = (load_table(spark, sf_dir, "lineitem")
+          .select("l_orderkey", "l_partkey").distinct())
+    return (_pairs(op, "l_orderkey", "l_partkey")
+            .groupBy(F.col("a").alias("part_a"), F.col("b").alias("part_b"))
+            .agg(F.count("*").alias("together_ct"))
+            .filter(F.col("together_ct") >= min_ct))
+
+
+def symmetrize(pairs: DataFrame) -> DataFrame:
+    """Undirected (u, v) edges, both directions of every oriented pair.
+    The pairs are distinct with part_a < part_b, so the union needs no
+    dedup shuffle."""
+    return (pairs.select(F.col("part_a").alias("u"), F.col("part_b").alias("v"))
+            .unionAll(pairs.select(F.col("part_b").alias("u"),
+                                   F.col("part_a").alias("v"))))
+
+
 _EDGES_SQL = f"""
     op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
     pairs AS (
@@ -114,27 +155,7 @@ _EDGES_SQL = f"""
     """,
 )
 def graph_components_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    # same posting-list pair generation as ads_copurchase_pairs: one
-    # shuffle to order grain, pairs expanded map-side from each order's
-    # (small) sorted part list — never a lineitem self-join
-    pairs = (
-        op.groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_list("l_partkey")).alias("ps"))
-        .filter(F.size("ps") > 1)
-        .select(F.explode(F.expr(
-            "flatten(transform(ps, (x, i) -> transform(slice(ps, i+2, size(ps)-i-1),"
-            " y -> struct(x as part_a, y as part_b))))")).alias("p"))
-        .groupBy("p.part_a", "p.part_b")
-        .agg(F.count("*").alias("together_ct"))
-        .filter(F.col("together_ct") >= MIN_TOGETHER)
-        .select("part_a", "part_b")
-    )
-    edges = (pairs.select(F.col("part_a").alias("u"), F.col("part_b").alias("v"))
-             .union(pairs.select(F.col("part_b").alias("u"),
-                                 F.col("part_a").alias("v")))
-             .distinct().cache())
+    edges = symmetrize(copurchase_pairs(spark, sf_dir, MIN_TOGETHER))
     labels = min_label_components(edges)
     w_sz = F.count("*").over(Window.partitionBy("component_id"))
     return (
@@ -160,7 +181,7 @@ def graph_components_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
 # dangling nodes (every node has out-degree >= 1), so no dangling-mass
 # term. Scale shape: each iteration is ONE shuffle join keyed by node
 # (ranks are node-sized, edges are the big side — the Pregel layout);
-# localCheckpoint truncates the per-round lineage like CC above.
+# checkpoint truncates the per-round lineage like CC above.
 # ---------------------------------------------------------------------------
 
 PR_DAMPING = 0.85
@@ -200,38 +221,25 @@ def _pagerank_ctes() -> str:
 )
 def graph_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank (d=0.85, 3 iterations) over the co-purchase graph."""
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    pairs = (op.alias("a").join(op.alias("b"),
-             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-             & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-             .groupBy(F.col("a.l_partkey").alias("part_a"),
-                      F.col("b.l_partkey").alias("part_b"))
-             .agg(F.count("*").alias("ct"))
-             .filter(F.col("ct") >= MIN_TOGETHER)
-             .select("part_a", "part_b"))
-    edges = (pairs.select(F.col("part_a").alias("u"), F.col("part_b").alias("v"))
-             .union(pairs.select(F.col("part_b").alias("u"),
-                                 F.col("part_a").alias("v")))
-             .distinct().localCheckpoint())
+    edges = checkpoint(symmetrize(copurchase_pairs(spark, sf_dir,
+                                                   MIN_TOGETHER)))
     deg = edges.groupBy("u").agg(F.count("*").alias("d"))
     n_nodes = deg.agg(F.count("*").cast("double").alias("n_nodes"))
-    ranks = (deg.crossJoin(F.broadcast(n_nodes))
-             .select(F.col("u").alias("node"),
-                     (F.lit(1.0) / F.col("n_nodes")).alias("r"))
-             .localCheckpoint())
+    ranks = checkpoint(deg.crossJoin(F.broadcast(n_nodes))
+                       .select(F.col("u").alias("node"),
+                               (F.lit(1.0) / F.col("n_nodes")).alias("r")))
     for _ in range(PR_ITER):
         contrib = (edges.join(ranks, edges.u == ranks.node)
                    .join(deg, "u")
                    .select("v", (F.col("r") / F.col("d"))
                            .cast("decimal(28,14)").alias("c")))
-        ranks = (contrib.groupBy(F.col("v").alias("node"))
-                 .agg(F.sum("c").cast("double").alias("s"))
-                 .crossJoin(F.broadcast(n_nodes))
-                 .select("node",
-                         ((1 - PR_DAMPING) / F.col("n_nodes")
-                          + PR_DAMPING * F.col("s")).alias("r"))
-                 .localCheckpoint())
+        ranks = checkpoint(
+            contrib.groupBy(F.col("v").alias("node"))
+            .agg(F.sum("c").cast("double").alias("s"))
+            .crossJoin(F.broadcast(n_nodes))
+            .select("node",
+                    ((1 - PR_DAMPING) / F.col("n_nodes")
+                     + PR_DAMPING * F.col("s")).alias("r")))
     return ranks.select(F.col("node").alias("part_id"),
                         F.round("r", 8).alias("pagerank"))
 
@@ -283,17 +291,9 @@ TRI_MIN_TOGETHER = 2   # denser edge set than CC/PageRank: at the CC
 )
 def graph_triangles_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle counts over the co-purchase graph."""
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    pairs = (op.alias("a").join(op.alias("b"),
-             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-             & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-             .groupBy(F.col("a.l_partkey").alias("u"),
-                      F.col("b.l_partkey").alias("v"))
-             .agg(F.count("*").alias("ct"))
-             .filter(F.col("ct") >= TRI_MIN_TOGETHER)
-             .select("u", "v"))   # already oriented u < v
-    oriented = pairs.localCheckpoint()
+    oriented = checkpoint(copurchase_pairs(spark, sf_dir, TRI_MIN_TOGETHER)
+                          .select(F.col("part_a").alias("u"),
+                                  F.col("part_b").alias("v")))
     a = oriented.select(F.col("u").alias("x"), F.col("v").alias("y"))
     b = oriented.select(F.col("u").alias("x"), F.col("v").alias("z"))
     wedges = a.join(b, "x").filter(F.col("y") < F.col("z"))
@@ -357,25 +357,8 @@ def _lpa_oracle() -> str:
 
 @query("graph_label_propagation", oracle=_lpa_oracle())
 def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    pairs = (
-        op.groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_list("l_partkey")).alias("ps"))
-        .filter(F.size("ps") > 1)
-        .select(F.explode(F.expr(
-            "flatten(transform(ps, (x, i) -> transform("
-            "slice(ps, i+2, size(ps)-i-1),"
-            " y -> struct(x as part_a, y as part_b))))")).alias("p"))
-        .groupBy("p.part_a", "p.part_b")
-        .agg(F.count("*").alias("together_ct"))
-        .filter(F.col("together_ct") >= MIN_TOGETHER)
-        .select("part_a", "part_b"))
-    edges = (pairs.select(F.col("part_a").alias("u"),
-                          F.col("part_b").alias("v"))
-             .union(pairs.select(F.col("part_b").alias("u"),
-                                 F.col("part_a").alias("v")))
-             .distinct().localCheckpoint())
+    edges = checkpoint(symmetrize(copurchase_pairs(spark, sf_dir,
+                                                   MIN_TOGETHER)))
     labels = (edges.select(F.col("u").alias("node")).distinct()
               .withColumn("label", F.col("node")))
     for _ in range(LPA_ROUNDS):
@@ -383,10 +366,9 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
                .groupBy(F.col("u").alias("node"), "label")
                .agg(F.count("*").alias("c")))
         w = Window.partitionBy("node").orderBy(F.desc("c"), "label")
-        labels = (cnt.withColumn("rk", F.row_number().over(w))
-                  .filter(F.col("rk") == 1)
-                  .select("node", "label")
-                  .localCheckpoint())
+        labels = checkpoint(cnt.withColumn("rk", F.row_number().over(w))
+                            .filter(F.col("rk") == 1)
+                            .select("node", "label"))
     w_sz = F.count("*").over(Window.partitionBy("label"))
     return labels.select(
         F.col("node").alias("part_id"),
@@ -411,7 +393,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale: each round is one degree aggregation + two node-keyed
 # semi-joins of the shrinking edge list; lineage truncated per round
-# via localCheckpoint (min_label_components discipline). The oracle's
+# via checkpoint (min_label_components discipline). The oracle's
 # unrolled CTEs are MATERIALIZED — each e{r} is referenced twice, and
 # DuckDB's default inlining would go exponential (the BPE-oracle
 # lesson). Unlike the other graph queries this one uses the UNFILTERED
@@ -466,22 +448,7 @@ def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nodes of the K-core (K = 65% of initial mean degree) of the
     unfiltered co-purchase graph, with their in-core degree, after
     up to KCORE_ROUNDS peel rounds."""
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    pairs = (
-        op.groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_list("l_partkey")).alias("ps"))
-        .filter(F.size("ps") > 1)
-        .select(F.explode(F.expr(
-            "flatten(transform(ps, (x, i) -> transform("
-            "slice(ps, i+2, size(ps)-i-1),"
-            " y -> struct(x as part_a, y as part_b))))")).alias("p"))
-        .select("p.part_a", "p.part_b").distinct())
-    edges = (pairs.select(F.col("part_a").alias("u"),
-                          F.col("part_b").alias("v"))
-             .union(pairs.select(F.col("part_b").alias("u"),
-                                 F.col("part_a").alias("v")))
-             .distinct().localCheckpoint())
+    edges = checkpoint(symmetrize(copurchase_pairs(spark, sf_dir, 1)))
     # K from the initial degree distribution: one bounded 1-row collect
     deg0 = edges.groupBy("u").agg(F.count("*").alias("deg"))
     row = deg0.agg((F.expr("sum(deg) div count(*)") * KCORE_PCT)
@@ -491,10 +458,10 @@ def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(KCORE_ROUNDS):
         keep = (edges.groupBy("u").agg(F.count("*").alias("deg"))
                 .filter(F.col("deg") >= k).select("u"))
-        new_edges = (edges
-                     .join(keep, "u")
-                     .join(keep.withColumnRenamed("u", "v"), "v")
-                     .select("u", "v").localCheckpoint())
+        new_edges = checkpoint(edges
+                               .join(keep, "u")
+                               .join(keep.withColumnRenamed("u", "v"), "v")
+                               .select("u", "v"))
         n_new = new_edges.count()
         edges = new_edges
         if n_new == n_edges:   # peel converged: further rounds no-op
@@ -510,8 +477,8 @@ def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
 # degree histogram predicts hot-key skew in every edge-keyed shuffle
 # (PageRank's contribution join, LPA's neighbor vote), and the max
 # degree bounds the worst partition. Pure integer counts end to end.
-# Plan: the posting-list pair expansion (one shuffle to order grain),
-# then two count aggregations — no self-join, no iteration.
+# Plan: the co-purchase pairs, then two count aggregations — no
+# iteration.
 # ---------------------------------------------------------------------------
 
 @query(
@@ -525,24 +492,7 @@ def graph_kcore_bounded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    pairs = (
-        op.groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_list("l_partkey")).alias("ps"))
-        .filter(F.size("ps") > 1)
-        .select(F.explode(F.expr(
-            "flatten(transform(ps, (x, i) -> transform(slice(ps, i+2, size(ps)-i-1),"
-            " y -> struct(x as part_a, y as part_b))))")).alias("p"))
-        .groupBy("p.part_a", "p.part_b")
-        .agg(F.count("*").alias("together_ct"))
-        .filter(F.col("together_ct") >= MIN_TOGETHER)
-        .select("part_a", "part_b")
-    )
-    edges = (pairs.select(F.col("part_a").alias("u"),
-                          F.col("part_b").alias("v"))
-             .union(pairs.select(F.col("part_b").alias("u"),
-                                 F.col("part_a").alias("v"))))
+    edges = symmetrize(copurchase_pairs(spark, sf_dir, MIN_TOGETHER))
     deg = edges.groupBy("u").agg(F.count("*").cast("bigint").alias("degree"))
     return (deg.groupBy("degree")
             .agg(F.count("*").cast("bigint").alias("node_ct")))
@@ -590,24 +540,7 @@ def graph_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    pairs = (
-        op.groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_list("l_partkey")).alias("ps"))
-        .filter(F.size("ps") > 1)
-        .select(F.explode(F.expr(
-            "flatten(transform(ps, (x, i) -> transform(slice(ps, i+2, size(ps)-i-1),"
-            " y -> struct(x as part_a, y as part_b))))")).alias("p"))
-        .groupBy("p.part_a", "p.part_b")
-        .agg(F.count("*").alias("together_ct"))
-        .filter(F.col("together_ct") >= MIN_TOGETHER)
-        .select("part_a", "part_b")
-    )
-    edges = (pairs.select(F.col("part_a").alias("u"),
-                          F.col("part_b").alias("v"))
-             .union(pairs.select(F.col("part_b").alias("u"),
-                                 F.col("part_a").alias("v"))))
+    edges = symmetrize(copurchase_pairs(spark, sf_dir, MIN_TOGETHER))
     deg = edges.groupBy("u").agg(F.count("*").cast("bigint").alias("d"))
     du = deg.select(F.col("u").alias("ku"), F.col("d").alias("x"))
     dv = deg.select(F.col("u").alias("kv"), F.col("d").alias("y"))
@@ -674,18 +607,9 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def graph_clustering_coefficient(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    oriented = (op.alias("a").join(
-        op.alias("b"),
-        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-        & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-        .groupBy(F.col("a.l_partkey").alias("u"),
-                 F.col("b.l_partkey").alias("v"))
-        .agg(F.count("*").alias("ct"))
-        .filter(F.col("ct") >= TRI_MIN_TOGETHER)
-        .select("u", "v")
-        .localCheckpoint())
+    oriented = checkpoint(copurchase_pairs(spark, sf_dir, TRI_MIN_TOGETHER)
+                          .select(F.col("part_a").alias("u"),
+                                  F.col("part_b").alias("v")))
     a = oriented.select(F.col("u").alias("x"), F.col("v").alias("y"))
     b = oriented.select(F.col("u").alias("x"), F.col("v").alias("z"))
     wedges = a.join(b, "x").filter(F.col("y") < F.col("z"))
@@ -779,33 +703,17 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked by neighborhood Jaccard (common neighbors over union of
     neighborhoods), with hub centers above {LP_HUB_CAP} neighbors
     excluded from wedge generation."""
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    oriented = (op.alias("a").join(
-        op.alias("b"),
-        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-        & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-        .groupBy(F.col("a.l_partkey").alias("u"),
-                 F.col("b.l_partkey").alias("v"))
-        .agg(F.count("*").alias("ct"))
-        .filter(F.col("ct") >= TRI_MIN_TOGETHER)
-        .select("u", "v")
-        .localCheckpoint())
+    oriented = checkpoint(copurchase_pairs(spark, sf_dir, TRI_MIN_TOGETHER)
+                          .select(F.col("part_a").alias("u"),
+                                  F.col("part_b").alias("v")))
     adj = (oriented.select(F.col("u").alias("center"), F.col("v").alias("leaf"))
            .unionAll(oriented.select(F.col("v").alias("center"),
                                      F.col("u").alias("leaf"))))
     deg = (adj.groupBy(F.col("center").alias("node"))
            .agg(F.count("*").cast("bigint").alias("d")))
-    # posting-list wedge expansion: one shuffle to center grain, pairs
-    # generated map-side from each center's sorted (capped) adjacency
-    wedge = (adj.groupBy("center")
-             .agg(F.sort_array(F.collect_list("leaf")).alias("ps"))
-             .filter((F.size("ps") > 1) & (F.size("ps") <= LP_HUB_CAP))
-             .select(F.explode(F.expr(
-                 "flatten(transform(ps, (x, i) -> transform("
-                 "slice(ps, i+2, size(ps)-i-1),"
-                 " y -> struct(x as y, y as z))))")).alias("p"))
-             .groupBy("p.y", "p.z")
+    # wedges: leaf pairs of each center's (capped) adjacency list
+    wedge = (_pairs(adj, "center", "leaf", LP_HUB_CAP)
+             .groupBy(F.col("a").alias("y"), F.col("b").alias("z"))
              .agg(F.count("*").cast("bigint").alias("common_ct")))
     cand = wedge.join(
         oriented, (wedge.y == oriented.u) & (wedge.z == oriented.v),
@@ -879,25 +787,11 @@ def _bfs_oracle() -> str:
 def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """{BFS_ROUNDS}-hop BFS distance histogram from the
     part_id % {BFS_SEED_MOD} == 0 seed set over the co-purchase graph."""
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    pairs = (
-        op.groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_list("l_partkey")).alias("ps"))
-        .filter(F.size("ps") > 1)
-        .select(F.explode(F.expr(
-            "flatten(transform(ps, (x, i) -> transform(slice(ps, i+2, size(ps)-i-1),"
-            " y -> struct(x as part_a, y as part_b))))")).alias("p"))
-        .groupBy("p.part_a", "p.part_b")
-        .agg(F.count("*").alias("together_ct"))
-        .filter(F.col("together_ct") >= BFS_MIN_TOGETHER)
-        .select("part_a", "part_b"))
-    edges = (pairs.select(F.col("part_a").alias("u"), F.col("part_b").alias("v"))
-             .union(pairs.select(F.col("part_b").alias("u"),
-                                 F.col("part_a").alias("v")))
-             .distinct().localCheckpoint(eager=False))
-    nodes = edges.select(F.col("u").alias("node")).distinct() \
-        .localCheckpoint(eager=False)
+    edges = checkpoint(symmetrize(copurchase_pairs(spark, sf_dir,
+                                                   BFS_MIN_TOGETHER)),
+                       eager=False)
+    nodes = checkpoint(edges.select(F.col("u").alias("node")).distinct(),
+                       eager=False)
     unreached = BFS_ROUNDS + 1
     d = nodes.select(
         "node",
@@ -908,11 +802,11 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
                           .withColumnRenamed("dist", "du"), "u")
                .groupBy(F.col("v").alias("node"))
                .agg((F.min("du") + 1).alias("via")))
-        d = (d.join(nbr, "node", "left")
-             .select("node", F.least(
-                 "dist", F.coalesce("via", F.lit(unreached)))
-                 .alias("dist"))
-             .localCheckpoint(eager=False))
+        d = checkpoint(d.join(nbr, "node", "left")
+                       .select("node", F.least(
+                           "dist", F.coalesce("via", F.lit(unreached)))
+                           .alias("dist")),
+                       eager=False)
     return (d.groupBy(F.when(F.col("dist") > BFS_ROUNDS, -1)
                       .otherwise(F.col("dist")).cast("bigint")
                       .alias("dist"))
@@ -938,7 +832,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # Scale shape: each half-round is ONE shuffle keyed by the side being
 # scored (the Pregel layout, same as PageRank); score vectors are
-# node-sized; the edge list is localCheckpoint'ed once and reused by
+# node-sized; the edge list is checkpointed once and reused by
 # all 2*HITS_ITER joins. At 100 TB the edge join dominates and stays
 # a plain shuffle equi-join — nothing is all-pairs.
 # ---------------------------------------------------------------------------
@@ -1016,21 +910,21 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     bipartite graph; top-{HITS_TOPK} hubs and authorities."""
     orders = load_table(spark, sf_dir, "orders")
     li = load_table(spark, sf_dir, "lineitem")
-    ed = (orders.join(li, orders.o_orderkey == li.l_orderkey)
-          .select(F.col("o_custkey").alias("u"),
-                  F.col("l_partkey").alias("p"))
-          .distinct().localCheckpoint(eager=False))
+    ed = checkpoint(orders.join(li, orders.o_orderkey == li.l_orderkey)
+                    .select(F.col("o_custkey").alias("u"),
+                            F.col("l_partkey").alias("p"))
+                    .distinct(), eager=False)
 
     def _normalize(df: DataFrame, key: str, out: str) -> DataFrame:
         wr = df.select(F.round(F.col("w").cast("double"), 9)
                        .cast("decimal(18,9)").alias("wr"))
         nrm = wr.agg(F.sqrt(F.sum(F.col("wr") * F.col("wr"))
                             .cast("double")).alias("nrm"))
-        return (df.crossJoin(F.broadcast(nrm))
-                .select(key, F.round(F.col("w").cast("double")
-                                     / F.col("nrm"), 6)
-                        .cast("decimal(12,6)").alias(out))
-                .localCheckpoint(eager=False))
+        return checkpoint(df.crossJoin(F.broadcast(nrm))
+                          .select(key, F.round(F.col("w").cast("double")
+                                               / F.col("nrm"), 6)
+                                  .cast("decimal(12,6)").alias(out)),
+                          eager=False)
 
     h = (ed.select("u").distinct()
          .select("u", F.lit(1).cast("decimal(12,6)").alias("hv")))
@@ -1065,7 +959,7 @@ def graph_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 # round; the restart mass is an exact 1/|S| double recomputed
 # identically per round in both engines. Scale shape: identical to
 # PageRank — one node-keyed shuffle join per round over the
-# localCheckpoint'ed edge list; the seed vector is node-sized.
+# checkpointed edge list; the seed vector is node-sized.
 # ---------------------------------------------------------------------------
 
 PPR_DAMPING = 0.85
@@ -1123,34 +1017,15 @@ def _ppr_ctes() -> str:
 def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank (d={PPR_DAMPING}, {PPR_ITER} rounds)
     restarting onto the partkey % {PPR_SEED_MOD} == 0 anchor set."""
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    # posting-list pair generation (one shuffle to order grain,
-    # pairs expanded map-side) — never a lineitem self-join
-    pairs = (
-        op.groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_list("l_partkey")).alias("ps"))
-        .filter(F.size("ps") > 1)
-        .select(F.explode(F.expr(
-            "flatten(transform(ps, (x, i) -> transform(slice(ps, i+2, size(ps)-i-1),"
-            " y -> struct(x as part_a, y as part_b))))")).alias("p"))
-        .groupBy("p.part_a", "p.part_b")
-        .agg(F.count("*").alias("ct"))
-        .filter(F.col("ct") >= 2)
-        .select("part_a", "part_b"))
-    edges = (pairs.select(F.col("part_a").alias("u"), F.col("part_b").alias("v"))
-             .union(pairs.select(F.col("part_b").alias("u"),
-                                 F.col("part_a").alias("v")))
-             .distinct().localCheckpoint())
+    edges = checkpoint(symmetrize(copurchase_pairs(spark, sf_dir, 2)))
     deg = edges.groupBy("u").agg(F.count("*").alias("d"))
     n_seeds = (deg.filter(F.col("u") % PPR_SEED_MOD == 0)
                .agg(F.count("*").cast("double").alias("n_seeds")))
-    sv = (deg.crossJoin(F.broadcast(n_seeds))
-          .select(F.col("u").alias("node"),
-                  F.when(F.col("u") % PPR_SEED_MOD == 0,
-                         F.lit(1.0) / F.col("n_seeds"))
-                  .otherwise(F.lit(0.0)).alias("s"))
-          .localCheckpoint())
+    sv = checkpoint(deg.crossJoin(F.broadcast(n_seeds))
+                    .select(F.col("u").alias("node"),
+                            F.when(F.col("u") % PPR_SEED_MOD == 0,
+                                   F.lit(1.0) / F.col("n_seeds"))
+                            .otherwise(F.lit(0.0)).alias("s")))
     ranks = sv.select("node", F.col("s").alias("r"))
     for _ in range(PPR_ITER):
         contrib = (edges.join(ranks, edges.u == ranks.node)
@@ -1159,12 +1034,11 @@ def graph_ppr_seeded(spark: SparkSession, sf_dir: str) -> DataFrame:
                            .cast("decimal(28,14)").alias("c")))
         agg = (contrib.groupBy(F.col("v").alias("node"))
                .agg(F.sum("c").cast("double").alias("m")))
-        ranks = (sv.join(agg, "node", "left")
-                 .select("node",
-                         ((1 - PPR_DAMPING) * F.col("s")
-                          + PPR_DAMPING * F.coalesce("m", F.lit(0.0)))
-                         .alias("r"))
-                 .localCheckpoint())
+        ranks = checkpoint(sv.join(agg, "node", "left")
+                           .select("node",
+                                   ((1 - PPR_DAMPING) * F.col("s")
+                                    + PPR_DAMPING * F.coalesce("m", F.lit(0.0)))
+                                   .alias("r")))
     return ranks.select(F.col("node").alias("part_id"),
                         (F.col("node") % PPR_SEED_MOD == 0).alias("is_seed"),
                         F.round("r", 8).alias("ppr"))
@@ -1233,17 +1107,9 @@ def graph_two_hop_neighborhood(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     """Top-{TWO_HOP_TOPK} parts by exact distance-2 reach in the
     co-purchase graph (see block comment)."""
-    op = (load_table(spark, sf_dir, "lineitem")
-          .select("l_orderkey", "l_partkey").distinct())
-    b = op.select(F.col("l_orderkey").alias("ok"),
-                  F.col("l_partkey").alias("pk2"))
-    oriented = (op.join(b, (F.col("l_orderkey") == F.col("ok"))
-                        & (F.col("l_partkey") < F.col("pk2")))
-                .groupBy(F.col("l_partkey").alias("u"),
-                         F.col("pk2").alias("v"))
-                .agg(F.count("*").alias("ct"))
-                .filter(F.col("ct") >= TRI_MIN_TOGETHER)
-                .select("u", "v"))
+    oriented = (copurchase_pairs(spark, sf_dir, TRI_MIN_TOGETHER)
+                .select(F.col("part_a").alias("u"),
+                        F.col("part_b").alias("v")))
     adj = oriented.select(F.col("u").alias("center"),
                           F.col("v").alias("leaf")).unionAll(
         oriented.select(F.col("v").alias("center"),
@@ -1281,7 +1147,7 @@ def graph_two_hop_neighborhood(spark: SparkSession,
 # number is honestly "diameter >= ecc_K(B) within a K-hop horizon".
 #
 # Scale shape: two fixed-K sequences of edge-keyed min-aggregations
-# with per-round localCheckpoint; seeds are broadcast one-row frames,
+# with per-round checkpoint; seeds are broadcast one-row frames,
 # never a collect. Exact integer distances throughout.
 # ---------------------------------------------------------------------------
 
@@ -1345,27 +1211,11 @@ def graph_diameter_double_sweep(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     """Hop-bounded double-sweep diameter lower bound on the
     >= {BFS_MIN_TOGETHER}-co-purchase graph (see block comment)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    pairs = (
-        op.groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_list("l_partkey")).alias("ps"))
-        .filter(F.size("ps") > 1)
-        .select(F.explode(F.expr(
-            "flatten(transform(ps, (x, i) -> transform("
-            "slice(ps, i+2, size(ps)-i-1),"
-            " y -> struct(x as part_a, y as part_b))))")).alias("p"))
-        .groupBy("p.part_a", "p.part_b")
-        .agg(F.count("*").alias("together_ct"))
-        .filter(F.col("together_ct") >= BFS_MIN_TOGETHER)
-        .select("part_a", "part_b"))
-    edges = (pairs.select(F.col("part_a").alias("u"),
-                          F.col("part_b").alias("v"))
-             .union(pairs.select(F.col("part_b").alias("u"),
-                                 F.col("part_a").alias("v")))
-             .distinct().localCheckpoint(eager=False))
-    nodes = (edges.select(F.col("u").alias("node")).distinct()
-             .localCheckpoint(eager=False))
+    edges = checkpoint(symmetrize(copurchase_pairs(spark, sf_dir,
+                                                   BFS_MIN_TOGETHER)),
+                       eager=False)
+    nodes = checkpoint(edges.select(F.col("u").alias("node")).distinct(),
+                       eager=False)
     k = BFS_ROUNDS
     unreached = k + 1
 
@@ -1380,12 +1230,13 @@ def graph_diameter_double_sweep(spark: SparkSession,
                               .withColumnRenamed("dist", "du"), "u")
                    .groupBy(F.col("v").alias("node"))
                    .agg((F.min("du") + 1).alias("via")))
-            d = (d.join(nbr, "node", "left")
-                 .select("node",
-                         F.least("dist",
-                                 F.coalesce("via", F.lit(unreached)))
-                         .alias("dist"))
-                 .localCheckpoint(eager=False))
+            d = checkpoint(d.join(nbr, "node", "left")
+                           .select("node",
+                                   F.least("dist",
+                                           F.coalesce("via",
+                                                      F.lit(unreached)))
+                                   .alias("dist")),
+                           eager=False)
         return d
 
     aseed = nodes.agg(F.min("node").alias("s"))
@@ -1482,36 +1333,18 @@ def _lpa_ctes() -> str:
 def graph_lpa_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synchronous {LPA_ROUNDS}-round LPA communities + exact-integer
     modularity terms (see block comment)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    pairs = (
-        op.groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_list("l_partkey")).alias("ps"))
-        .filter(F.size("ps") > 1)
-        .select(F.explode(F.expr(
-            "flatten(transform(ps, (x, i) -> transform(slice(ps, i+2,"
-            " size(ps)-i-1), y -> struct(x as part_a, y as part_b))))"))
-            .alias("p"))
-        .groupBy("p.part_a", "p.part_b")
-        .agg(F.count("*").alias("together_ct"))
-        .filter(F.col("together_ct") >= MIN_TOGETHER)
-        .select("part_a", "part_b"))
-    edges = (pairs.select(F.col("part_a").alias("u"),
-                          F.col("part_b").alias("v"))
-             .union(pairs.select(F.col("part_b").alias("u"),
-                                 F.col("part_a").alias("v")))
-             .distinct().localCheckpoint())
-    labels = (edges.select(F.col("u").alias("node")).distinct()
-              .withColumn("lab", F.col("node")).localCheckpoint())
+    edges = checkpoint(symmetrize(copurchase_pairs(spark, sf_dir,
+                                                   MIN_TOGETHER)))
+    labels = checkpoint(edges.select(F.col("u").alias("node")).distinct()
+                        .withColumn("lab", F.col("node")))
     wu = Window.partitionBy("nu").orderBy(F.desc("ct"), "lab")
     for _ in range(LPA_ROUNDS):
-        labels = (edges.join(labels, F.col("node") == F.col("v"))
-                  .groupBy(F.col("u").alias("nu"), "lab")
-                  .agg(F.count("*").alias("ct"))
-                  .withColumn("rk", F.row_number().over(wu))
-                  .filter(F.col("rk") == 1)
-                  .select(F.col("nu").alias("node"), "lab")
-                  .localCheckpoint())
+        labels = checkpoint(edges.join(labels, F.col("node") == F.col("v"))
+                            .groupBy(F.col("u").alias("nu"), "lab")
+                            .agg(F.count("*").alias("ct"))
+                            .withColumn("rk", F.row_number().over(wu))
+                            .filter(F.col("rk") == 1)
+                            .select(F.col("nu").alias("node"), "lab"))
     und = edges.filter(F.col("u") < F.col("v"))
     m = und.agg(F.count("*").cast("bigint").alias("m"))
     deg = edges.groupBy(F.col("u").alias("node")).agg(
@@ -1550,7 +1383,7 @@ def graph_lpa_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # with d <= 4, h = sum_d count_d * (12/d) stays an integer at x12
 # scale (12, 6, 4, 3).  SCALE: state is reached (seed, node) pairs
 # only; seeds = node % {CLOSENESS_SEED_MOD} == 0 (~1%), so state is
-# ~|V|^2/100 bounded, keyed joins throughout, localCheckpoint per
+# ~|V|^2/100 bounded, keyed joins throughout, checkpoint per
 # round to cut lineage.
 # ---------------------------------------------------------------------------
 
@@ -1595,25 +1428,8 @@ def _closeness_oracle() -> str:
 def graph_closeness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Harmonic closeness (x12 integer) of ~1% sampled seeds via
     4-round multi-source BFS (see block comment)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    pairs = (
-        op.groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_list("l_partkey")).alias("ps"))
-        .filter(F.size("ps") > 1)
-        .select(F.explode(F.expr(
-            "flatten(transform(ps, (x, i) -> transform(slice(ps, i+2,"
-            " size(ps)-i-1), y -> struct(x as part_a, y as part_b))))"))
-            .alias("p"))
-        .groupBy("p.part_a", "p.part_b")
-        .agg(F.count("*").alias("together_ct"))
-        .filter(F.col("together_ct") >= 2)
-        .select("part_a", "part_b"))
-    edges = (pairs.select(F.col("part_a").alias("u"),
-                          F.col("part_b").alias("v"))
-             .union(pairs.select(F.col("part_b").alias("u"),
-                                 F.col("part_a").alias("v")))
-             .distinct().localCheckpoint(eager=False))
+    edges = checkpoint(symmetrize(copurchase_pairs(spark, sf_dir, 2)),
+                       eager=False)
     state = (edges.select(F.col("u").alias("node")).distinct()
              .filter(F.col("node") % CLOSENESS_SEED_MOD == 0)
              .select(F.col("node").alias("s"), "node",
@@ -1624,7 +1440,7 @@ def graph_closeness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
                          (F.col("d") + 1).alias("d"))
                  .unionByName(state)
                  .groupBy("s", "node").agg(F.min("d").alias("d")))
-        state = grown.localCheckpoint(eager=False)
+        state = checkpoint(grown, eager=False)
     h = (F.when(F.col("d") == 1, 12).when(F.col("d") == 2, 6)
          .when(F.col("d") == 3, 4).when(F.col("d") == 4, 3).otherwise(0))
     return (state.groupBy(F.col("s").cast("bigint").alias("seed"))
@@ -1642,7 +1458,7 @@ def graph_closeness_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
 # peel rounds (no convergence test — the per-round edge counts are the
 # readout, so a non-converged tail is visible, not hidden), keyed
 # triangle-support joins only (edge x adjacency x adjacency on node
-# keys), localCheckpoint per round.  EXACTNESS: pure integer counts.
+# keys), checkpoint per round.  EXACTNESS: pure integer counts.
 # SCALE: support counting is the standard two-hop keyed join; each
 # round shrinks the edge set, and rounds are bounded a priori.
 # ---------------------------------------------------------------------------
@@ -1686,19 +1502,9 @@ def _truss_oracle() -> str:
 def graph_k_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edge counts after each of {TRUSS_ROUNDS} bounded 4-truss peel
     rounds over the >=2-co-purchase graph (see block comment)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    e = (
-        op.groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_list("l_partkey")).alias("ps"))
-        .filter(F.size("ps") > 1)
-        .select(F.explode(F.expr(
-            "flatten(transform(ps, (x, i) -> transform(slice(ps, i+2,"
-            " size(ps)-i-1), y -> struct(x as a, y as b))))")).alias("p"))
-        .groupBy("p.a", "p.b")
-        .agg(F.count("*").alias("together_ct"))
-        .filter(F.col("together_ct") >= 2)
-        .select("a", "b").localCheckpoint(eager=False))
+    e = checkpoint(copurchase_pairs(spark, sf_dir, 2)
+                   .select(F.col("part_a").alias("a"),
+                           F.col("part_b").alias("b")), eager=False)
     counts = [e.agg(F.count("*").cast("bigint").alias("n_edges"))
               .select(F.lit(0).cast("bigint").alias("round"), "n_edges")]
     for r in range(1, TRUSS_ROUNDS + 1):
@@ -1707,13 +1513,13 @@ def graph_k_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
                                      F.col("a").alias("v"))))
         n1 = und.select(F.col("u").alias("u1"), F.col("v").alias("w1"))
         n2 = und.select(F.col("u").alias("u2"), F.col("v").alias("w2"))
-        e = (e.join(n1, F.col("a") == F.col("u1"))
-             .join(n2, (F.col("b") == F.col("u2"))
-                   & (F.col("w1") == F.col("w2")))
-             .groupBy("a", "b")
-             .agg(F.count("*").alias("support"))
-             .filter(F.col("support") >= TRUSS_SUPPORT)
-             .select("a", "b").localCheckpoint(eager=False))
+        e = checkpoint(e.join(n1, F.col("a") == F.col("u1"))
+                       .join(n2, (F.col("b") == F.col("u2"))
+                             & (F.col("w1") == F.col("w2")))
+                       .groupBy("a", "b")
+                       .agg(F.count("*").alias("support"))
+                       .filter(F.col("support") >= TRUSS_SUPPORT)
+                       .select("a", "b"), eager=False)
         counts.append(
             e.agg(F.count("*").cast("bigint").alias("n_edges"))
             .select(F.lit(r).cast("bigint").alias("round"), "n_edges"))
@@ -1776,24 +1582,9 @@ RICH_CLUB_KS = (2, 4, 8, 16)
 def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rich-club coefficient phi(k) over the >=2-co-purchase graph for
     k in RICH_CLUB_KS (see block comment)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    pairs = (
-        op.groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_list("l_partkey")).alias("ps"))
-        .filter(F.size("ps") > 1)
-        .select(F.explode(F.expr(
-            "flatten(transform(ps, (x, i) -> transform(slice(ps, i+2,"
-            " size(ps)-i-1), y -> struct(x as part_a, y as part_b))))"))
-            .alias("p"))
-        .groupBy("p.part_a", "p.part_b")
-        .agg(F.count("*").alias("together_ct"))
-        .filter(F.col("together_ct") >= 2)
-        .select("part_a", "part_b").localCheckpoint(eager=False))
-    edges = (pairs.select(F.col("part_a").alias("u"),
-                          F.col("part_b").alias("v"))
-             .union(pairs.select(F.col("part_b").alias("u"),
-                                 F.col("part_a").alias("v"))).distinct())
+    pairs = checkpoint(copurchase_pairs(spark, sf_dir, 2)
+                       .select("part_a", "part_b"), eager=False)
+    edges = symmetrize(pairs)
     deg = edges.groupBy(F.col("u").alias("node")).agg(
         F.count("*").cast("bigint").alias("d"))
     ks = spark.range(0).sql_ctx.sparkSession.createDataFrame(
@@ -1872,18 +1663,9 @@ def graph_rich_club(spark: SparkSession, sf_dir: str) -> DataFrame:
 def graph_square_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 4-cycle count over the co-purchase graph via the
     common-neighbor pair formula (see block comment)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    oriented = (op.alias("a").join(
-        op.alias("b"),
-        (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-        & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-        .groupBy(F.col("a.l_partkey").alias("u"),
-                 F.col("b.l_partkey").alias("v"))
-        .agg(F.count("*").alias("ct"))
-        .filter(F.col("ct") >= TRI_MIN_TOGETHER)
-        .select("u", "v")
-        .localCheckpoint())
+    oriented = checkpoint(copurchase_pairs(spark, sf_dir, TRI_MIN_TOGETHER)
+                          .select(F.col("part_a").alias("u"),
+                                  F.col("part_b").alias("v")))
     adj = (oriented.select(F.col("u").alias("x"), F.col("v").alias("n"))
            .unionAll(oriented.select(F.col("v").alias("x"),
                                      F.col("u").alias("n"))))
@@ -1918,7 +1700,7 @@ def graph_square_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 #
 # SCALE: each round is ONE shuffle join keyed by node (walk counts are
 # node-sized, edges are the big side — the Pregel layout);
-# localCheckpoint truncates per-round lineage like CC/PageRank above.
+# checkpoint truncates per-round lineage like CC/PageRank above.
 # EXACTNESS: y_k <= max_deg^k ~ 1e7 at this graph's degree bound —
 # everything BIGINT, the only double is the final /512 readout (a
 # binary fraction: exact in IEEE, identical in both engines).
@@ -1956,31 +1738,16 @@ def _katz_ctes() -> str:
 def graph_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Katz centrality (alpha=1/8, 3 rounds, exact x512 integers) over
     the co-purchase graph (see block comment)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    op = li.select("l_orderkey", "l_partkey").distinct()
-    pairs = (op.alias("a").join(op.alias("b"),
-             (F.col("a.l_orderkey") == F.col("b.l_orderkey"))
-             & (F.col("a.l_partkey") < F.col("b.l_partkey")))
-             .groupBy(F.col("a.l_partkey").alias("part_a"),
-                      F.col("b.l_partkey").alias("part_b"))
-             .agg(F.count("*").alias("ct"))
-             .filter(F.col("ct") >= MIN_TOGETHER)
-             .select("part_a", "part_b"))
-    edges = (pairs.select(F.col("part_a").alias("u"),
-                          F.col("part_b").alias("v"))
-             .union(pairs.select(F.col("part_b").alias("u"),
-                                 F.col("part_a").alias("v")))
-             .distinct().localCheckpoint())
-    walks = [edges.groupBy(F.col("u").alias("node"))
-             .agg(F.count("*").cast("bigint").alias("y"))
-             .localCheckpoint()]
+    edges = checkpoint(symmetrize(copurchase_pairs(spark, sf_dir,
+                                                   MIN_TOGETHER)))
+    walks = [checkpoint(edges.groupBy(F.col("u").alias("node"))
+                        .agg(F.count("*").cast("bigint").alias("y")))]
     for _ in range(KATZ_ROUNDS - 1):
         prev = walks[-1]
-        walks.append(
-            (edges.join(prev, edges.u == prev.node)
-             .groupBy(F.col("v").alias("node"))
-             .agg(F.sum("y").cast("bigint").alias("y")))
-            .localCheckpoint())
+        walks.append(checkpoint(
+            edges.join(prev, edges.u == prev.node)
+            .groupBy(F.col("v").alias("node"))
+            .agg(F.sum("y").cast("bigint").alias("y"))))
     y1, y2, y3 = (w.withColumnRenamed("y", f"y{i + 1}")
                   for i, w in enumerate(walks))
     x512 = (F.lit(512) + 64 * F.col("y1") + 8 * F.col("y2")

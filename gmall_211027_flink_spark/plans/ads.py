@@ -488,11 +488,11 @@ def ads_funnel_view_click_purchase(spark: SparkSession, sf_dir: str) -> DataFram
 # ---------------------------------------------------------------------------
 # Market-basket co-purchase pairs (recommendation-feed shape): part
 # pairs appearing together in >= 3 orders, with support and lift.
-# Pair generation is the posting-list pattern shared with the dedup
-# family (collect the small per-order part list, expand pairs map-side)
-# — never a lineitem self-join. Lift denominators come from the tiny
-# per-part order counts, broadcast back onto the pair rows. Doubles are
-# rounded to 6 dp so both engines rank/filter identically.
+# Pairs come from `operators.graph.copurchase_pairs` (posting list per
+# order, pairs expanded map-side) — never a lineitem self-join. Lift
+# denominators come from the tiny per-part order counts, broadcast back
+# onto the pair rows. Doubles are rounded to 6 dp so both engines
+# rank/filter identically.
 # ---------------------------------------------------------------------------
 
 _COPURCHASE = """
@@ -527,24 +527,13 @@ def ads_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from gmall_211027_flink_spark.catalog import load_table
+    from gmall_211027_flink_spark.operators.graph import copurchase_pairs
 
     li = load_table(spark, sf_dir, "lineitem")
     op = li.select("l_orderkey", "l_partkey").distinct()
     n_orders = op.select(F.countDistinct("l_orderkey").alias("n"))
     part_ct = op.groupBy("l_partkey").agg(F.count("*").alias("ct"))
-    # posting-list pair expansion: one shuffle to order grain, pairs
-    # generated map-side from each order's (tiny) part list
-    pairs = (
-        op.groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_list("l_partkey")).alias("ps"))
-        .filter(F.size("ps") > 1)
-        .select(F.explode(F.expr(
-            "flatten(transform(ps, (x, i) -> transform(slice(ps, i+2, size(ps)-i-1),"
-            " y -> struct(x as part_a, y as part_b))))")).alias("p"))
-        .groupBy("p.part_a", "p.part_b")
-        .agg(F.count("*").alias("together_ct"))
-        .filter(F.col("together_ct") >= 3)
-    )
+    pairs = copurchase_pairs(spark, sf_dir, 3)
     ca = part_ct.select(F.col("l_partkey").alias("part_a"),
                         F.col("ct").alias("ct_a"))
     cb = part_ct.select(F.col("l_partkey").alias("part_b"),
@@ -713,21 +702,12 @@ def ads_basket_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from gmall_211027_flink_spark.catalog import load_table
+    from gmall_211027_flink_spark.operators.graph import copurchase_pairs
 
     li = load_table(spark, sf_dir, "lineitem")
     op = li.select("l_orderkey", "l_partkey").distinct()
     part_ct = op.groupBy("l_partkey").agg(F.count("*").alias("ct"))
-    pairs = (
-        op.groupBy("l_orderkey")
-        .agg(F.sort_array(F.collect_list("l_partkey")).alias("ps"))
-        .filter(F.size("ps") > 1)
-        .select(F.explode(F.expr(
-            "flatten(transform(ps, (x, i) -> transform(slice(ps, i+2,"
-            " size(ps)-i-1), y -> struct(x as part_a, y as part_b))))"
-        )).alias("p"))
-        .groupBy("p.part_a", "p.part_b")
-        .agg(F.count("*").alias("together_ct"))
-        .filter(F.col("together_ct") >= 3))
+    pairs = copurchase_pairs(spark, sf_dir, 3)
     rules = (pairs.select(F.col("part_a").alias("antecedent"),
                           F.col("part_b").alias("consequent"),
                           "together_ct")

@@ -763,6 +763,22 @@ def test_ppr_pairs_are_posting_list_not_selfjoin(spark, sf_dir):
     assert plan.count("lineitem.parquet") <= 1, plan
 
 
+def test_copurchase_pairs_are_posting_list_without_join(spark, sf_dir):
+    """The one co-purchase pair build behind every graph query and the
+    basket panels: pairs expand map-side from each order's sorted part
+    list, so its plan has no join at all — lineitem is never joined to
+    itself and scanned once."""
+    from gmall_211027_flink_spark.operators.graph import copurchase_pairs
+
+    out = copurchase_pairs(spark, str(sf_dir), 2)
+    out.collect()
+    plan = executed_plan(out)
+    assert "Join" not in plan and "CartesianProduct" not in plan, plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert "explode(" in final, plan
+    assert final.count("lineitem.parquet") == 1, plan
+
+
 def test_shapley_lattice_math_is_broadcast_only(spark, sf_dir):
     """Shapley's coalition lattice must never shuffle: the only
     SortMergeJoins allowed are the user-grain journey joins; the
