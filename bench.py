@@ -6,8 +6,7 @@ JSON line {"metric": ..., "value": total_sec, "unit": "sec",
 Each query is executed to completion through the noop sink (computes
 every column of every row — guide §1.4; r15 fix, count() let the
 optimizer prune final aggregate expressions) so lazy plans can't fake
-speed; a count()-timed legacy series rides along for cross-round
-comparisons. Timings include plan+execute, not session startup.
+speed. Timings include plan+execute, not session startup.
 """
 
 from __future__ import annotations
@@ -43,11 +42,8 @@ def main() -> None:
     if os.path.isdir(warm_dir) and warm_dir != sf_dir:
         for name in names:
             try:
-                # warm BOTH timed shapes: the noop plan and the count()
-                # plan compile different whole-stage-codegen classes
                 QUERIES[name](spark, warm_dir).write.format("noop") \
                     .mode("overwrite").save()
-                QUERIES[name](spark, warm_dir).count()
             except Exception as exc:  # warmup must never fail the bench
                 print(f"WARNING: warmup {name}: {exc}", file=sys.stderr)
         spark.catalog.clearCache()  # drop warm-dir caches before timing
@@ -65,11 +61,8 @@ def main() -> None:
     # l_linestatus]` with no aggregate expressions and a 3-column scan
     # instead of 7) — so the r1-r14 numbers under-measured every
     # query whose tail is an aggregate/projection. The noop sink
-    # computes every column of every row and discards it. The OLD
-    # methodology is kept alongside (`queries_count_legacy`) so
-    # cross-round comparisons have a like-for-like series.
+    # computes every column of every row and discards it.
     timings: dict[str, float] = {}
-    timings_count: dict[str, float] = {}
     # per-query cpu/steal/gc for the min-wall run (VERDICT r5 #5, r6 #4):
     # lets a wall-time delta be read as regression-vs-noise off the
     # artifact alone — a query whose wall grew but whose cpu_s held is
@@ -99,22 +92,9 @@ def main() -> None:
         q_cpu[name] = round(best_cpu, 3)
         q_steal[name] = round(best_steal, 3)
         q_gc[name] = round(best_gc, 3)
-        # legacy count()-timed series (the r1-r14 methodology), min-of-3
-        # on the same warm session — kept so round-over-round deltas can
-        # be read against a like-for-like baseline. Ordering caveat
-        # (ADVICE r15): this loop runs AFTER the three noop executions
-        # above, so it is warmer (page cache, JIT, codegen) than the
-        # r1-r14 single-methodology series; the r15 and r16 legacy
-        # numbers share that ordering, so r15->r16 deltas are clean —
-        # only comparisons back to <= r14 inherit the small warm bias.
-        n = 0
-        best_c = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            n = QUERIES[name](spark, sf_dir).count()
-            best_c = min(best_c, time.perf_counter() - t0)
-        timings_count[name] = round(best_c, 3)
-        if n == 0:
+        # untimed sanity check: a headline query over empty output
+        # would time nothing
+        if QUERIES[name](spark, sf_dir).count() == 0:
             print(f"WARNING: {name} returned 0 rows", file=sys.stderr)
         spark.sparkContext.setJobDescription(None)
     # same self-diagnosis as the scale probe, over the whole headline
@@ -148,10 +128,12 @@ def main() -> None:
         # cross-round comparisons should note the change
         "headline_runs": 3,
         # r15: the timed action for "queries" is the noop sink (every
-        # column computed); "queries_count_legacy" is the r1-r14
-        # count()-timed series for like-for-like deltas
+        # column computed)
         "timed_action": "noop_write",
-        "queries_count_legacy": timings_count,
+        # since the count()-timed series was retired, these two cover
+        # 3 noop runs plus 1 untimed count() per query (before: 3 noop
+        # plus 3 timed count() runs), so they do not compare with
+        # earlier rounds' values
         "headline_cpu_s": hl_cpu,
         "headline_steal_s": hl_steal,
         "queries": timings,

@@ -8,13 +8,30 @@ streaming schema lives in one module and is explicit. The parquet test
 tables are the exception: a load infers their schema from the file
 footers, once per file signature (``load_table`` memoizes the resolved
 relation per session).
+
+Two session memos live here, both keyed on what ``load_table`` sees:
+the relation memo (one resolved DataFrame per path, file signature and
+``_MEMO_CONFS``) and, on top of it, the panel memo (``prepared``: one
+built ADS panel DataFrame per panel and ``sf_dir``, valid while every
+relation it was built on is still the memoized one). A panel hit
+re-executes the same DataFrame, so its plan keeps the session confs it
+was analyzed and planned under. A change to a conf in ``_MEMO_CONFS``
+invalidates it. Every other session conf keeps its first-call value on
+a hit: planning confs (shuffle partitions, broadcast threshold, AQE),
+and also confs that change results, such as ``spark.sql.ansi.enabled``,
+``spark.sql.caseSensitive`` or
+``spark.sql.decimalOperations.allowPrecisionLoss``.
 """
 
 from __future__ import annotations
 
 import os
 import stat
+import threading
+from collections.abc import Callable
+from functools import wraps
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -109,9 +126,10 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
 # of the events NTZ -> TIMESTAMP cast, and how TIMESTAMP(NANOS) is read.
 _MEMO_CONFS = ("spark.sql.session.timeZone",
                "spark.sql.legacy.parquet.nanosAsLong")
-# Most paths one session's memo keeps; the least recently loaded goes
-# first. Bounds a long session that reads many short-lived directories.
-_MEMO_PATHS = 64
+# Most entries one session's memo keeps (relations by path, panels by
+# panel and sf_dir); the least recently used goes first. Bounds a long
+# session that reads many short-lived directories.
+_MEMO_SIZE = 64
 
 
 def _file_signature(path: str) -> tuple | None:
@@ -139,11 +157,30 @@ def _file_signature(path: str) -> tuple | None:
     return tuple(sorted(listing))
 
 
-def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
-    df = spark.read.parquet(path)
+def _footer(path: str) -> tuple | None:
+    """The parquet schema and key-value metadata of a single-file table,
+    all that Spark infers its schema from. None for a directory or an
+    unreadable footer."""
+    if not os.path.isfile(path):
+        return None
+    try:
+        f = pq.ParquetFile(path)
+    except (OSError, ValueError):
+        return None
+    return f.schema, f.metadata.metadata
+
+
+def _read_table(spark: SparkSession, path: str, name: str,
+                schema: T.StructType | None = None
+                ) -> tuple[DataFrame, T.StructType]:
+    """The table and the schema it was read with. Given ``schema``,
+    Spark skips the job that infers one from the footers."""
+    df = (spark.read if schema is None else spark.read.schema(schema)
+          ).parquet(path)
+    schema = df.schema
     if name == "events":
         df = normalize_event_ts(df)
-    return df
+    return df, schema
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -156,23 +193,31 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     confs in ``_MEMO_CONFS``; while neither changes, a load returns the
     same DataFrame and starts no job. A rewrite of the files (in place or
     by rename, or a part file added) changes the signature, and the next
-    load re-resolves and replaces that path's entry. The signature is
-    taken before the load, so a rewrite racing the load is seen by the
-    next one. Paths that are not local files are loaded on every call.
+    load re-resolves and replaces that path's entry; when a single-file
+    rewrite keeps the footer schema and the confs, the new relation is
+    read with the old inferred schema, without the inference job. The
+    signature is taken before the load, so a rewrite racing the load is
+    seen by the next one. Paths that are not local files are loaded on
+    every call.
     """
     path = f"{sf_dir}/{name}.parquet"
     sig = _file_signature(path)
     if sig is None:
-        return _read_table(spark, path, name)
+        _record(None)
+        return _read_table(spark, path, name)[0]
     key = (sig, *(spark.conf.get(c, None) for c in _MEMO_CONFS))
     # on the session object, so the memo ends with its session
     memo = vars(spark).setdefault("_relation_memo", {})
     entry = memo.pop(path, None)
     if entry is None or entry[0] != key:
-        entry = (key, _read_table(spark, path, name))
-    memo[path] = entry
-    if len(memo) > _MEMO_PATHS:
-        del memo[next(iter(memo))]
+        footer = _footer(path)
+        same = (entry is not None and footer is not None
+                and (entry[0][1:], entry[2]) == (key[1:], footer))
+        df, schema = _read_table(spark, path, name,
+                                 entry[3] if same else None)
+        entry = (key, df, footer, schema)
+    _remember(memo, path, entry)
+    _record(("load", sf_dir, name, entry[1]))
     return entry[1]
 
 
@@ -180,4 +225,78 @@ def register_views(spark: SparkSession, sf_dir: str,
                    names: tuple[str, ...] = TABLES) -> None:
     """Register each test table as a temp view (for spark.sql plans)."""
     for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
+        _register_view(n, load_table(spark, sf_dir, n))
+
+
+def _register_view(name: str, rel: DataFrame) -> None:
+    rel.createOrReplaceTempView(name)
+    _record(("view", name, rel))
+
+
+def _remember(memo: dict, key, entry) -> None:
+    """Put ``entry`` last in ``memo``, evicting the least recently used."""
+    memo[key] = entry
+    if len(memo) > _MEMO_SIZE:
+        del memo[next(iter(memo))]
+
+
+# The calls of each panel build in progress on this thread, innermost
+# last: ("load", sf_dir, name, relation), ("view", name, relation), or
+# None for a load that is not memoized (so the panel cannot be).
+_building = threading.local()
+
+
+def _record(call: tuple | None) -> None:
+    for calls in getattr(_building, "panels", ()):
+        calls.append(call)
+
+
+def _replay(spark: SparkSession, calls: list[tuple]) -> bool:
+    """Repeat a panel build's catalog calls: False as soon as a load
+    returns another relation than the build got, else register the
+    build's views again, from the relations just checked current."""
+    if any(c[0] == "load" and load_table(spark, c[1], c[2]) is not c[3]
+           for c in calls):
+        return False
+    for c in calls:
+        if c[0] == "view":
+            _register_view(c[1], c[2])
+    return True
+
+
+Panel = Callable[[SparkSession, str], DataFrame]
+
+
+def prepared(build: Panel) -> Panel:
+    """An ADS panel that is built once per session and ``sf_dir`` and
+    re-executed while its inputs are unchanged.
+
+    The first call records the panel's ``load_table`` and view calls
+    with the relations they returned, and keeps them with the built
+    DataFrame. A later call replays the loads, each a stat-only
+    relation-memo lookup. If every load returns the identical relation,
+    the call registers the panel's views again and returns the same
+    DataFrame; re-executing it reuses its planned ``QueryExecution``,
+    and Spark skips the shuffle stages that already ran. Any change the
+    relation memo sees (a rewrite, a part file added or removed, a
+    ``_MEMO_CONFS`` change) gives a new relation, and the call rebuilds
+    the panel. A panel that loads a non-local path is never kept.
+    """
+    @wraps(build)
+    def panel(spark: SparkSession, sf_dir: str) -> DataFrame:
+        memo = vars(spark).setdefault("_panel_memo", {})
+        key = (build, sf_dir)
+        entry = memo.pop(key, None)
+        if entry is None or not _replay(spark, entry[0]):
+            calls: list = []
+            stack = vars(_building).setdefault("panels", [])
+            stack.append(calls)
+            try:
+                entry = (calls, build(spark, sf_dir))
+            finally:
+                stack.pop()
+            if not calls or not all(calls):
+                return entry[1]
+        _remember(memo, key, entry)
+        return entry[1]
+    return panel

@@ -378,6 +378,7 @@ def _register_merge() -> None:
 
     from ..catalog import load_table
     from ..registry import query
+    from ..session import checkpoint
 
     @query(
         "lake_merge_upsert",
@@ -417,7 +418,7 @@ def _register_merge() -> None:
             F.col("c_custkey").alias("k"),
             F.col("c_nationkey").alias("nk"),
             F.col("c_acctbal").cast("decimal(18,2)").alias("bal"))
-        base = base.localCheckpoint(eager=False)  # source of the changes too
+        base = checkpoint(base, eager=False)  # source of the changes too
         changes = (
             base.filter(F.col("k") % 5 == 0)
             .select("k", "nk", (F.col("bal") + 100).alias("bal"),

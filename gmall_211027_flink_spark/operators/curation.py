@@ -41,6 +41,7 @@ from gmall_211027_flink_spark.operators.similarity import (
     _with_norm,
 )
 from gmall_211027_flink_spark.registry import query
+from gmall_211027_flink_spark.session import checkpoint
 
 # Eval membership must be a pure function of the row (reproducible), so
 # the "benchmark suite" is carved deterministically: doc_id % EVAL_MOD.
@@ -972,12 +973,12 @@ def curation_token_budget_allocation(spark: SparkSession,
                                      sf_dir: str) -> DataFrame:
     """{WFA_ROUNDS}-round water-filling of a {WFA_BUDGET_PCT}% token
     budget across sources (equal-share with capacity caps)."""
-    cap = (load_table(spark, sf_dir, "documents")
-           .groupBy("source")
-           .agg(F.sum("n_chars").cast("bigint").alias("t"))
-           .withColumn("w", F.expr(
-               f"cast({_WFA_W_SQL} as bigint)"))
-           .localCheckpoint(eager=False))      # the rounds reuse it
+    cap = checkpoint(                          # the rounds reuse it
+        load_table(spark, sf_dir, "documents")
+        .groupBy("source")
+        .agg(F.sum("n_chars").cast("bigint").alias("t"))
+        .withColumn("w", F.expr(f"cast({_WFA_W_SQL} as bigint)")),
+        eager=False)
     tot = cap.agg(F.expr(
         f"cast(div(sum(t) * {WFA_BUDGET_PCT}, 100) as bigint)")
         .alias("budget"))

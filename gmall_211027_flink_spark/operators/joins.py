@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from gmall_211027_flink_spark.catalog import load_table
 from gmall_211027_flink_spark.functions import dec, dsum, dsum_expr, day_str
 from gmall_211027_flink_spark.registry import query
+from gmall_211027_flink_spark.session import checkpoint
 
 
 # ---------------------------------------------------------------------------
@@ -876,7 +877,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
         bits = p if bits is None else bits.unionAll(p)
     # materialize the position set ONCE — without this each of the k
     # semi-joins would rebuild the dim scan + distinct
-    bits = bits.distinct().localCheckpoint()
+    bits = checkpoint(bits.distinct())
 
     fact = load_table(spark, sf_dir, "events").select("user_id", "value")
     # membership = ALL k positions set: k chained broadcast semi-joins

@@ -39,6 +39,7 @@ from pyspark.sql.window import Window
 
 from gmall_211027_flink_spark.catalog import load_table
 from gmall_211027_flink_spark.registry import query
+from gmall_211027_flink_spark.session import checkpoint
 
 B_ISO = 32
 # (sum * ISO_KEY_SCALE) // cnt is exact while sum <= 9.2e5 (BIGINT
@@ -129,11 +130,11 @@ def ml_isotonic_calibration_pava(spark: SparkSession,
     # <= B_ISO rows from here on: unpartitioned windows / grid joins are
     # the documented bounded-grid pattern, not a scale hazard.
     w = Window.orderBy("bin")
-    posd = bins.select(
+    posd = checkpoint(bins.select(
         "bin", "cnt", "pos",
         F.row_number().over(w).cast("bigint").alias("p"),
         F.sum("cnt").over(w).cast("bigint").alias("cc"),
-        F.sum("pos").over(w).cast("bigint").alias("cs")).localCheckpoint()
+        F.sum("pos").over(w).cast("bigint").alias("cs")))
     j = posd.select(F.col("p").alias("pj"), F.col("pos").alias("jpos"),
                     F.col("cnt").alias("jcnt"),
                     F.col("cs").alias("jcs"), F.col("cc").alias("jcc"))

@@ -34,6 +34,7 @@ from pyspark.sql import types as T
 
 from gmall_211027_flink_spark.catalog import load_table
 from gmall_211027_flink_spark.registry import query
+from gmall_211027_flink_spark.session import checkpoint
 
 
 def decode_parallel(df: DataFrame) -> DataFrame:
@@ -1020,16 +1021,15 @@ def multimodal_ahash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
                                 ahash_sig=ahash_signed64(ahash_bits(gray))))
             yield pd.DataFrame(out)[["doc_id", "ahash_sig"]]
 
-    # localCheckpoint (eager), not cache(): materializes once for the
+    # checkpoint (eager), not cache(): materializes once for the
     # double read below AND releases its blocks via the ContextCleaner
     # when the plan is GC'd — repeated bench/driver runs don't
     # accumulate permanent storage entries (ADVICE r6)
-    sig = (load_table(spark, sf_dir, "documents")
-           .filter(F.col("doc_id") % 4 == 2)
-           .select("doc_id", "text")
-           .repartition(spark.sparkContext.defaultParallelism)
-           .mapInPandas(_sig_batch, sig_schema)
-           .localCheckpoint())
+    sig = checkpoint(load_table(spark, sf_dir, "documents")
+                     .filter(F.col("doc_id") % 4 == 2)
+                     .select("doc_id", "text")
+                     .repartition(spark.sparkContext.defaultParallelism)
+                     .mapInPandas(_sig_batch, sig_schema))
     bands = spark.range(AHASH_BANDS).withColumnRenamed("id", "band_id")
     banded = (sig.crossJoin(F.broadcast(bands))
               .withColumn("band_val", F.expr(

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from gmall_211027_flink_spark.catalog import load_table
 from gmall_211027_flink_spark.registry import query
+from gmall_211027_flink_spark.session import checkpoint
 
 # ---------------------------------------------------------------------------
 # BM25 ranked retrieval (Robertson-Sparck Jones; the Okapi BM25 form
@@ -726,9 +727,9 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("emb")))
     emb = emb.withColumn("norm", F.expr(
         "sqrt(aggregate(emb, cast(0 as double), (acc, x) -> acc + x * x))"))
-    corpus = (docs.join(emb, "doc_id")
-              .withColumn("w", F.split("text", " "))
-              .localCheckpoint(eager=False))   # reused by both legs + qv
+    corpus = checkpoint(                       # reused by both legs + qv
+        docs.join(emb, "doc_id").withColumn("w", F.split("text", " ")),
+        eager=False)
 
     # ---- lexical leg: BM25 over the shared corpus -----------------------
     dl = corpus.select("doc_id", F.size("w").alias("dl"))

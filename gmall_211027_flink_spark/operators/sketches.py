@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from gmall_211027_flink_spark.catalog import load_table
 from gmall_211027_flink_spark.functions.scalar import hex_to_long
 from gmall_211027_flink_spark.registry import query
+from gmall_211027_flink_spark.session import checkpoint
 
 CM_DEPTH = 4      # independent hash rows
 CM_WIDTH = 512    # buckets per row
@@ -105,10 +106,10 @@ def sketch_countmin_freq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
            .select(F.explode(F.split("text", " ")).alias("token")))
     exact = tok.groupBy("token").agg(
         F.count("*").cast("bigint").alias("exact_cnt"))
-    # localCheckpoint, not cache(): its blocks are released by the
+    # checkpoint, not cache(): its blocks are released by the
     # ContextCleaner when the plan is GC'd, so repeated bench/driver runs
     # don't accumulate permanent storage entries (ADVICE r6)
-    exact = exact.localCheckpoint()
+    exact = checkpoint(exact)
     seeds = spark.range(CM_DEPTH).withColumnRenamed("id", "seed")
     bucket = F.expr(
         f"cast(conv(substring(md5(concat(cast(seed as string), ':', token)),"

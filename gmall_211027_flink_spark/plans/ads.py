@@ -6,6 +6,11 @@ shell is out of engine scope).
 These run as plain SQL text so Catalyst handles the whole
 parse→analyze→optimize→execute lifecycle — same lifecycle the reference
 delegates to the Flink/Calcite stack (SURVEY §3).
+
+Dashboards poll the same panels while the tables under them change only
+on a commit, so every panel is ``catalog.prepared``: built once per
+session and ``sf_dir``, then re-executed until one of its tables
+changes.
 """
 
 from __future__ import annotations
@@ -14,15 +19,29 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from gmall_211027_flink_spark.catalog import TABLES, register_views
-from gmall_211027_flink_spark.registry import query
+from gmall_211027_flink_spark import registry
+from gmall_211027_flink_spark.catalog import TABLES, prepared, register_views
+
+
+def query(name: str, **kw):
+    """``registry.query`` for this module: every panel registered here
+    is ``prepared``."""
+    return lambda build: registry.query(name, **kw)(prepared(build))
 
 
 def _sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
     """Plan ``text`` over the tables it names as words. Their views are
     re-registered on every call (cheap over memoized loads), so a view
     that other code replaced, or one from another ``sf_dir``, never
-    leaks into this query."""
+    leaks into this query.
+
+    Every panel here is ``prepared``: a repeat call over unchanged
+    tables replays only the loads and view registrations and returns
+    the DataFrame planned on the first call, so this text is not parsed
+    or planned again. That plan keeps every session conf it was planned
+    under, including ones that change results such as ANSI mode; only a
+    change to a table or to a conf in ``catalog._MEMO_CONFS`` makes the
+    next call plan anew."""
     words = set(re.findall(r"\w+", text.lower()))
     register_views(spark, sf_dir, tuple(n for n in TABLES if n in words))
     return spark.sql(text)

@@ -1025,6 +1025,7 @@ _OR["stream_dedup_minhash_incremental"] = _lsh_incremental_oracle()
 def dim_scd2_stream_maintenance(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
+    from gmall_211027_flink_spark.session import checkpoint
     from gmall_211027_flink_spark.streaming.scd2 import scd2_merge_batch
 
     log = load_table(spark, sf_dir, "lineitem").select(
@@ -1041,9 +1042,9 @@ def dim_scd2_stream_maintenance(spark: SparkSession,
         log.filter(F.col("ts") >= cuts[1]),
     ]
     for sl in slices:
-        # localCheckpoint stands in for the parquet store rewrite the
+        # the checkpoint stands in for the parquet store rewrite the
         # foreachBatch driver (run_scd2_stream) performs per commit
-        store = scd2_merge_batch(store, sl).localCheckpoint()
+        store = checkpoint(scd2_merge_batch(store, sl))
     return store.select(
         "pk", "status",
         F.date_format("eff_from", "yyyy-MM-dd HH:mm:ss")

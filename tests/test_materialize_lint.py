@@ -27,24 +27,16 @@ MATERIALIZE_ATTRS = {"localCheckpoint", "cache", "persist"}
 NOT_YET_MIGRATED: dict[str, int] = {
     "jobs/dwd_log_split.py": 1,
     "operators/aggregates.py": 2,
-    "operators/bucketing.py": 1,
-    "operators/curation.py": 1,
     "operators/dedup.py": 6,
     "operators/inference.py": 2,
-    "operators/joins.py": 1,
     "operators/kmeans.py": 3,
-    "operators/mlfit.py": 1,
-    "operators/multimodal.py": 1,
     "operators/pca.py": 9,
     "operators/sampling.py": 4,
-    "operators/search.py": 1,
     "operators/semdedup.py": 3,
-    "operators/sketches.py": 1,
     "operators/text.py": 3,
     "plans/behavior.py": 3,
     "streaming/dim_router.py": 1,
     "streaming/sinks.py": 1,
-    "streaming/windows.py": 1,
 }
 
 
