@@ -5,6 +5,19 @@ multi-hundred-executor cluster: AQE enabled (runtime coalesce + skew-join
 handling), Arrow for any pandas exchange, UTC session timezone so results
 are comparable with a tz-naive oracle (DuckDB), and shuffle partitions
 sized by environment rather than hardcoded.
+
+Streaming checkpoint files (offset, commit, source and file-sink logs;
+RocksDB state zips and checksums) are written through Spark's
+``FileSystemBasedCheckpointFileManager``, always: Spark's default
+FileContext manager forks ``readlink`` about five times per rename when
+Hadoop has no native library (30.9 ms against 0.43 ms per rename; every
+micro-batch renames several files, SCALE.md §24). Overwrite semantics
+under it: a write with ``overwriteIfPossible=false`` onto an existing
+file still fails (exists-then-rename; FileContext on ``file:`` is
+check-then-rename too, and HDFS rename refuses to overwrite). A write
+with ``overwriteIfPossible=true`` onto an existing file keeps that file
+and leaves its temp file beside it, where FileContext would replace it;
+Spark's CheckpointFileManager contract allows this best effort.
 """
 
 from __future__ import annotations
@@ -53,6 +66,10 @@ def get_spark(app_name: str = "gmall_211027_flink_spark",
                     "SPARK_STATESTORE_PROVIDER",
                     "org.apache.spark.sql.execution.streaming.state."
                     "RocksDBStateStoreProvider"))
+        # checkpoint writes without forked `readlink` (module docstring)
+        .config("spark.sql.streaming.checkpointFileManagerClass",
+                "org.apache.spark.sql.execution.streaming.checkpointing."
+                "FileSystemBasedCheckpointFileManager")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -31,12 +31,13 @@ from pyspark.sql import functions as F
 from gmall_211027_flink_spark.streaming.sinks import (
     commit, last_epoch, recover)
 
-# op -> (partial aggregate of the input column, re-aggregate of partials)
+# op -> (partial aggregate of the input column, re-aggregate of partials,
+#        one input row as a partial of its own)
 _MERGE = {
-    "count": (lambda c: F.count("*"), F.sum),
-    "sum":   (F.sum, F.sum),
-    "min":   (F.min, F.min),
-    "max":   (F.max, F.max),
+    "count": (lambda c: F.count("*"), F.sum, lambda c: F.lit(1)),
+    "sum":   (F.sum, F.sum, F.col),
+    "min":   (F.min, F.min, F.col),
+    "max":   (F.max, F.max, F.col),
 }
 
 
@@ -68,16 +69,22 @@ class IncrementalAggStore:
               for name, (op, col) in self.specs.items()])
         merged = part
         if os.path.exists(self.path):
-            # the store holds partials: re-aggregate their union, read
-            # with the partial's schema (no footer job) and cast back to
-            # it (a decimal sum would widen by one digit per batch)
-            cur = batch.sparkSession.read.schema(part.schema) \
-                .parquet(self.path)
-            merged = (cur.unionByName(part).groupBy(*self.key_cols)
+            # the store holds partials: union it with the batch rows as
+            # one-row partials and re-aggregate once (one shuffle; a
+            # batch pre-aggregate would add a second). The partial's
+            # schema comes from analysis alone (no job); the store is
+            # read with it (no footer job) and the result cast back to
+            # it (a decimal sum would widen by one digit per batch).
+            schema = part.schema
+            rows = batch.select(*self.key_cols, *[
+                _MERGE[op][2](col).cast(schema[name].dataType).alias(name)
+                for name, (op, col) in self.specs.items()])
+            cur = batch.sparkSession.read.schema(schema).parquet(self.path)
+            merged = (cur.unionByName(rows).groupBy(*self.key_cols)
                       .agg(*[_MERGE[op][1](name).alias(name)
                              for name, (op, _col) in self.specs.items()])
                       .select(*[F.col(f.name).cast(f.dataType)
-                                for f in part.schema]))
+                                for f in schema]))
         commit(merged, self.path, epoch_id)
 
     def read(self, spark) -> DataFrame:

@@ -28,8 +28,8 @@ key that returns is treated as never-seen (daily_unique re-emits — the
 reference accepts the same; backflow defaults its TTL far above the
 back-flow gap so detection survives eviction).
 
-Processor bodies are vectorized pandas (cummax/masks/groupby-head) —
-no per-row Python loops inside the Arrow batches.
+Processor bodies are vectorized numpy/pandas (lexsort, running maxima,
+masks, groupby-head) — no per-row Python loops inside the Arrow batches.
 
 IMPORTANT — why ``ttl_ms`` defaults to ``None``: Structured Streaming's
 ``Trigger.AvailableNow`` does NOT terminate while any processing-time
@@ -48,6 +48,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
@@ -89,7 +90,8 @@ def daily_unique(events: DataFrame, key_col: str, ts_col: str,
     """Emit each key's first row per calendar day (incremental UV detail).
 
     ``events`` must already carry a ``dt`` (yyyy-MM-dd) column derived
-    from ``ts_col``; output_schema must be a subset of input columns.
+    from ``ts_col``; it is parsed to a day number, so another format
+    raises. output_schema must be a subset of input columns.
     ``order_cols`` (default ``[ts_col]``) defines "first" — pass a
     tiebreaker column for a total order.
 
@@ -111,23 +113,21 @@ def daily_unique(events: DataFrame, key_col: str, ts_col: str,
         pdf = _concat(pdfs)
         if pdf is None:
             return
-        pdf = pdf.sort_values(order_cols)
-        dt = pdf["dt"]
+        order = np.lexsort([pdf[c].to_numpy() for c in reversed(order_cols)])
+        dt = pdf["dt"].to_numpy()[order]
+        day = dt.astype("datetime64[D]").view(np.int64)
         # first row of each strictly-increasing day prefix: emit when the
         # day exceeds everything seen before it (incl. carried state)
-        prev_max = dt.cummax().shift(1)
-        mask = prev_max.isna() | (dt > prev_max)
-        if last_seen is not None:
-            mask &= dt > last_seen
-        new_last = dt.max()
-        if last_seen is not None and last_seen > new_last:
-            new_last = last_seen
-        state.update((new_last,))
+        seen = (np.datetime64(last_seen, "D").view(np.int64)
+                if last_seen is not None else np.iinfo(np.int64).min)
+        prev_max = np.maximum.accumulate(np.concatenate(([seen], day[:-1])))
+        mask = day > prev_max
+        top = day.argmax()
+        state.update((dt[top] if day[top] > seen else last_seen,))
         if ttl_ms:
             state.setTimeoutDuration(ttl_ms)
-        out = pdf[mask]
-        if len(out):
-            yield out[out_cols]
+        if mask.any():
+            yield pdf[out_cols].take(order[mask])
 
     return (
         events.groupBy(key_col)
@@ -316,7 +316,6 @@ def funnel_levels(events: DataFrame, window_s: int,
     pandas (cummax/shift) — no per-row loops.
     """
     def fn(key, pdfs, state: GroupState):
-        import numpy as np
         if state.hasTimedOut:
             state.remove()
             return

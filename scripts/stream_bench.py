@@ -2,7 +2,9 @@
 (JVM window agg, stateful Python processor, fan-out split) with a file
 stream at $SPARK_GRAFT_SF_DIR (default sf0.1) and prints ONE JSON line
 {"metric": "streaming_throughput", "paths": {name: {rows, sec,
-rows_per_sec}}}.
+rows_per_sec, batches}}}. ``batches`` splits each micro-batch into its
+offset fetch, WAL write, addBatch, commit log write and state-store
+commit, so a checkpoint or state-store change shows per layer.
 
 Context: the reference runs at parallelism 1-4 on a 3-node dev cluster
 with per-record Phoenix/Redis lookups at 136-148 ms cold per dim row
@@ -50,18 +52,19 @@ def run(df, name: str, mode: str = "append"):
     return q
 
 
+def _progress(q) -> list[dict]:
+    return [p if isinstance(p, dict) else json.loads(p.json)
+            for p in q.recentProgress]
+
+
 def _state_series(q) -> list[dict]:
     """Per-batch state-store telemetry from the query's progress events
     (VERDICT r7 #6): numRowsTotal + memoryUsedBytes per stateful
     operator per micro-batch, plus RocksDB's own memory gauge when the
     RocksDB provider is active. This turns 'state stays O(batch)' from
     an asserted property into a recorded series."""
-    import json as _json
-
     series = []
-    for p in q.recentProgress:
-        if not isinstance(p, dict):       # StreamingQueryProgress object
-            p = _json.loads(p.json)
+    for p in _progress(q):
         for op in (p.get("stateOperators") or []):
             cm = op.get("customMetrics") or {}
             series.append({
@@ -70,9 +73,33 @@ def _state_series(q) -> list[dict]:
                 "rows_total": op.get("numRowsTotal"),
                 "rows_updated": op.get("numRowsUpdated"),
                 "mem_bytes": op.get("memoryUsedBytes"),
+                "commit_ms": op.get("commitTimeMs"),
                 "rocksdb_mem_bytes": cm.get("rocksdbTotalMemoryUsage"),
             })
     return series
+
+
+def _batch_series(q) -> list[dict]:
+    """Per-batch layers from the query's progress: the source's offset
+    fetch, the offset WAL write, the batch itself and the commit log
+    write (``durationMs``), plus the state stores' commit time summed
+    over stateful operators (0 for a stateless query)."""
+    series = []
+    for p in _progress(q):
+        d = p.get("durationMs") or {}
+        series.append({
+            "batch": p.get("batchId"),
+            **{k: d.get(k) for k in ("latestOffset", "walCommit",
+                                      "addBatch", "commitOffsets")},
+            "state_commit_ms": sum(op.get("commitTimeMs") or 0
+                                   for op in p.get("stateOperators") or []),
+        })
+    return series
+
+
+def _record(q, rows: int, sec: float) -> dict:
+    return {"rows": rows, "sec": round(sec, 2),
+            "rows_per_sec": round(rows / sec), "batches": _batch_series(q)}
 
 
 def main() -> None:
@@ -89,11 +116,9 @@ def main() -> None:
         [F.count("*").alias("pv_ct"),
          F.approx_count_distinct("user_id").alias("uv_ct")])
     name = f"sb_window_{uuid.uuid4().hex[:6]}"
-    run(agg, name, "complete")
+    q = run(agg, name, "complete")
     sec = time.perf_counter() - t0
-    results["window_agg"] = {
-        "rows": n_input, "sec": round(sec, 2),
-        "rows_per_sec": round(n_input / sec)}
+    results["window_agg"] = _record(q, n_input, sec)
 
     # 2. Python-state path: applyInPandasWithState daily-unique (A5)
     t0 = time.perf_counter()
@@ -105,11 +130,9 @@ def main() -> None:
         T.StructField("event_id", T.LongType()),
     ])
     name = f"sb_state_{uuid.uuid4().hex[:6]}"
-    run(daily_unique(stream, "user_id", "ts", out_schema), name)
+    q = run(daily_unique(stream, "user_id", "ts", out_schema), name)
     sec = time.perf_counter() - t0
-    results["stateful_daily_unique"] = {
-        "rows": n_input, "sec": round(sec, 2),
-        "rows_per_sec": round(n_input / sec)}
+    results["stateful_daily_unique"] = _record(q, n_input, sec)
 
     # 3. fan-out path: one parsed stream, filtered 3 ways into one union
     # (the BaseLogApp split shape, measured as a single query)
@@ -123,11 +146,9 @@ def main() -> None:
                      .withColumn("lane", F.lit("other")))
         .select("lane", "event_id"))
     name = f"sb_split_{uuid.uuid4().hex[:6]}"
-    run(split, name)
+    q = run(split, name)
     sec = time.perf_counter() - t0
-    results["fanout_split"] = {
-        "rows": n_input, "sec": round(sec, 2),
-        "rows_per_sec": round(n_input / sec)}
+    results["fanout_split"] = _record(q, n_input, sec)
 
     # 4. stream-static dim enrichment (per-batch broadcast of the dim)
     n_li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").count()
@@ -142,11 +163,9 @@ def main() -> None:
                         F.col("l_partkey") == F.col("p_partkey"))
                 .groupBy("p_type").agg(F.count("*").alias("ct")))
     name = f"sb_ssdim_{uuid.uuid4().hex[:6]}"
-    run(enriched, name, "complete")
+    q = run(enriched, name, "complete")
     sec = time.perf_counter() - t0
-    results["stream_static_dim_join"] = {
-        "rows": n_li, "sec": round(sec, 2),
-        "rows_per_sec": round(n_li / sec)}
+    results["stream_static_dim_join"] = _record(q, n_li, sec)
 
     # 5. stream-stream left outer join with the 3-day TTL bound (the
     # DwdTradeOrderDetail shape; state = both sides until expiry)
@@ -172,11 +191,9 @@ def main() -> None:
            + F.expr("INTERVAL 3 DAYS")),
         "left_outer")
     name = f"sb_ssjoin_{uuid.uuid4().hex[:6]}"
-    run(joined, name)
+    q = run(joined, name)
     sec = time.perf_counter() - t0
-    results["stream_stream_ttl_left_join"] = {
-        "rows": n_o + n_li, "sec": round(sec, 2),
-        "rows_per_sec": round((n_o + n_li) / sec)}
+    results["stream_stream_ttl_left_join"] = _record(q, n_o + n_li, sec)
 
     # 6. incremental aggregate maintenance (O(batch) DWS store merge)
     t0 = time.perf_counter()
@@ -192,9 +209,7 @@ def main() -> None:
     q = run_incremental_agg(inc_stream, inc_store, f"{tmp6}/ckpt")
     _await(q, "incremental_agg_maintenance")
     sec = time.perf_counter() - t0
-    results["incremental_agg_maintenance"] = {
-        "rows": n_input, "sec": round(sec, 2),
-        "rows_per_sec": round(n_input / sec)}
+    results["incremental_agg_maintenance"] = _record(q, n_input, sec)
 
     # 7. SCD2 store maintenance (changelog -> versioned dim merge)
     t0 = time.perf_counter()
@@ -212,9 +227,7 @@ def main() -> None:
     q = run_scd2_stream(log, f"{tmp7}/store", f"{tmp7}/ckpt")
     _await(q, "scd2_store_maintenance")
     sec = time.perf_counter() - t0
-    results["scd2_store_maintenance"] = {
-        "rows": n_li, "sec": round(sec, 2),
-        "rows_per_sec": round(n_li / sec)}
+    results["scd2_store_maintenance"] = _record(q, n_li, sec)
 
     # 8. incremental MinHash-LSH bucket store (streaming near-dup ingest)
     # (count + schema read BEFORE the timer — sections time only the
@@ -235,9 +248,7 @@ def main() -> None:
                             f"{tmp8}/ckpt")
     _await(q, "lsh_bucket_store_maintenance")
     sec = time.perf_counter() - t0
-    results["lsh_bucket_store_maintenance"] = {
-        "rows": n_docs, "sec": round(sec, 2),
-        "rows_per_sec": round(n_docs / sec)}
+    results["lsh_bucket_store_maintenance"] = _record(q, n_docs, sec)
 
     # 9. stateful windowed funnel (CEP-as-state; numpy-vectorized
     # applyInPandasWithState — per-user anchor maxima)
@@ -252,11 +263,9 @@ def main() -> None:
     fl = funnel_levels(fstream, FUNNEL_WINDOW_S, T9.StructType([
         T9.StructField("user_id", T9.LongType()),
         T9.StructField("level", T9.LongType())]))
-    run(fl, f"sb_funnel_{uuid.uuid4().hex[:6]}")
+    q = run(fl, f"sb_funnel_{uuid.uuid4().hex[:6]}")
     sec = time.perf_counter() - t0
-    results["stateful_window_funnel"] = {
-        "rows": n_input, "sec": round(sec, 2),
-        "rows_per_sec": round(n_input / sec)}
+    results["stateful_window_funnel"] = _record(q, n_input, sec)
 
     # 10. per-batch STATE-SIZE telemetry (VERDICT r7 #6): feed events in
     # 8 hash-split files with maxFilesPerTrigger=1 so the query runs 8

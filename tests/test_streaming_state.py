@@ -72,6 +72,79 @@ def test_daily_unique_matches_batch(spark, sf_dir, events_stream_path):
     assert got.select("user_id", "dt").distinct().count() == expected.count()
 
 
+class _Capture:
+    """Stands in for a streaming DataFrame: keeps the group function
+    ``daily_unique`` hands to ``applyInPandasWithState``."""
+
+    def groupBy(self, *cols):
+        return self
+
+    def applyInPandasWithState(self, fn, *args):
+        self.fn = fn
+        return self
+
+
+class _State:
+    hasTimedOut = False
+
+    def __init__(self, last_seen):
+        self.value = last_seen
+
+    @property
+    def exists(self):
+        return self.value is not None
+
+    @property
+    def get(self):
+        return (self.value,)
+
+    def update(self, row):
+        self.value = row[0]
+
+
+def test_daily_unique_group_body_matches_row_loop():
+    """The vectorized group body against a row-at-a-time reference:
+    walk the rows in (ts, event_id) order and emit each row whose day
+    is later than every day seen before it, carried state included."""
+    import random
+
+    import pandas as pd
+
+    out_schema = T.StructType([
+        T.StructField("user_id", T.LongType()),
+        T.StructField("dt", T.StringType()),
+        T.StructField("event_id", T.LongType()),
+    ])
+    cap = _Capture()
+    daily_unique(cap, "user_id", "ts", out_schema,
+                 order_cols=["ts", "event_id"])
+    rng = random.Random(7)
+    base = pd.Timestamp("2024-01-01")
+    for _ in range(300):
+        n = rng.randint(1, 20)
+        pdf = pd.DataFrame({
+            "user_id": [1] * n,
+            "ts": [base + pd.Timedelta(hours=rng.randint(0, 96))
+                   for _ in range(n)],
+            "event_id": rng.sample(range(1000), n)})
+        pdf["dt"] = pdf["ts"].dt.strftime("%Y-%m-%d")
+        last_seen = rng.choice(
+            [None, "2023-12-31", "2024-01-02", "2024-01-06"])
+
+        want, hi = [], last_seen
+        for r in sorted(pdf.itertuples(index=False),
+                        key=lambda r: (r.ts, r.event_id)):
+            if hi is None or r.dt > hi:
+                want.append((r.user_id, r.dt, r.event_id))
+                hi = r.dt
+
+        state = _State(last_seen)
+        chunks = [pdf.iloc[i:i + 6] for i in range(0, n, 6)]
+        got = [tuple(r) for out in cap.fn((1,), iter(chunks), state)
+               for r in out.itertuples(index=False)]
+        assert (got, state.value) == (want, hi)
+
+
 def test_first_wins_single_row_per_key(spark, events_stream_path):
     schema = spark.read.parquet(events_stream_path).schema
     stream = spark.readStream.schema(schema).parquet(events_stream_path)
