@@ -11,12 +11,27 @@ partial aggregation happens map-side before the shuffle (the reference's
 "来一条聚合一条" incremental reduce, for free), and late rows beyond the
 watermark are dropped exactly like the reference (no allowedLateness
 anywhere in it — W3).
+
+The registered gate queries below prove each stream against a batch
+oracle. They share one drain path: ``_drain`` runs a stream through a
+memory sink (``_await`` is its checked wait), ``_temp_store`` gives a
+query a scratch dir and materializes its bounded result, and
+``_persisted_fold`` folds input slices into a parquet-persisted state.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+import functools
+import shutil
+import tempfile
+import uuid
+from collections.abc import Callable, Iterable, Iterator
+
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
+
+from gmall_211027_flink_spark.registry import query
 
 
 def tumbling_agg(events: DataFrame, ts_col: str, window_size: str,
@@ -53,18 +68,78 @@ def session_agg(events: DataFrame, ts_col: str, gap: str, watermark: str,
 
 
 # ---------------------------------------------------------------------------
+# The gate-query drain path. No registered query in this module starts
+# a sink, waits on a query, makes a temp dir or collects on its own;
+# these helpers do.
+# ---------------------------------------------------------------------------
+
+def _await(q: StreamingQuery, label: str) -> None:
+    """Wait for an ``availableNow`` query to finish. A timeout stops the
+    query and raises: a gate must never read a partially drained sink."""
+    if not q.awaitTermination(600):
+        q.stop()
+        raise RuntimeError(f"{label} timed out")
+
+
+def _drain(spark: SparkSession, df: DataFrame, mode: str,
+           label: str) -> DataFrame:
+    """Run streaming ``df`` to completion through a memory sink in output
+    ``mode`` and return the drained rows. The sink's temp view is dropped
+    before returning; the returned frame still holds the sink's rows, so
+    no view outlives the call."""
+    name = f"{label}_{uuid.uuid4().hex[:8]}"
+    q = (df.writeStream.format("memory").queryName(name)
+         .outputMode(mode).trigger(availableNow=True).start())
+    try:
+        _await(q, label)
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
+
+
+def _temp_store(fn: Callable[[SparkSession, str, str], DataFrame]):
+    """Turn ``fn(spark, sf_dir, tmp_dir) -> DataFrame`` into a query
+    ``(spark, sf_dir) -> DataFrame`` that runs ``fn`` over a fresh temp dir
+    (its store, checkpoint or staged stream files) and removes the dir in
+    ``finally``. The result is collected into a local frame first, so it
+    never reads a deleted file. This is gate-harness materialization only:
+    ``fn``'s result must be bounded (each decorated query is an audited
+    collect site in tests/test_collect_lint.py), and production reads a
+    persistent store directly, with no driver collect."""
+    @functools.wraps(fn)
+    def run_in_temp_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
+        d = tempfile.mkdtemp(prefix=f"{fn.__name__}_")
+        try:
+            out = fn(spark, sf_dir, d)
+            return spark.createDataFrame(out.collect(), out.schema)
+        finally:
+            shutil.rmtree(d, ignore_errors=True)
+    return run_in_temp_dir
+
+
+def _persisted_fold(spark: SparkSession, tmp_dir: str,
+                    batches: Iterable[DataFrame],
+                    merge: Callable[[DataFrame], DataFrame],
+                    ) -> Iterator[DataFrame]:
+    """Fold ``batches`` into one state, one commit per slice: union the
+    batch into the state, ``merge`` the union, write it to
+    ``tmp_dir/state_<i>`` and read it back, so the next slice folds into
+    the persisted state, not a growing lineage. Yields each re-read state;
+    the caller checks its bounded-state invariant on it."""
+    state = None
+    for i, batch in enumerate(batches):
+        merged = batch if state is None else state.unionByName(batch)
+        merge(merged).write.mode("overwrite").parquet(f"{tmp_dir}/state_{i}")
+        state = spark.read.parquet(f"{tmp_dir}/state_{i}")
+        yield state
+
+
+# ---------------------------------------------------------------------------
 # Registered correctness query: the DWS tumbling window run AS A STREAM
 # (readStream → watermark → window agg → memory sink), hash-checked
 # against the same SQL oracle as the batch form — streaming and batch
 # produce identical results by construction (complete output mode).
 # ---------------------------------------------------------------------------
-
-import uuid as _uuid
-
-from pyspark.sql import DataFrame, SparkSession  # noqa: E402
-
-from gmall_211027_flink_spark.registry import query  # noqa: E402
-
 
 @query(
     "dws_tumble_streaming",
@@ -88,11 +163,7 @@ def dws_tumble_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
          F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
           .alias("value_sum")],
     ).select("stt", "event_type", "pv_ct", "value_sum")
-    name = f"dws_tumble_stream_{_uuid.uuid4().hex[:8]}"
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(600)
-    return spark.table(name)
+    return _drain(spark, agg, "complete", "dws_tumble_streaming")
 
 
 # ---------------------------------------------------------------------------
@@ -135,11 +206,7 @@ def dws_daily_uv_detail_streaming(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     uv = daily_unique(renamed, "user_id", "ts", out_schema,
                       order_cols=["ts", "first_event_id"])
-    name = f"dws_daily_uv_stream_{_uuid.uuid4().hex[:8]}"
-    q = (uv.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(600)
-    return spark.table(name)
+    return _drain(spark, uv, "append", "dws_daily_uv_detail_streaming")
 
 
 # ---------------------------------------------------------------------------
@@ -189,11 +256,8 @@ def dwd_interval_join_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("b_ts") <= F.col("a_ts") + F.expr("INTERVAL 10 MINUTES")),
     ).select("user_id",
              (F.unix_micros("b_ts") - F.unix_micros("a_ts")).alias("gap_us"))
-    name = f"dwd_interval_join_stream_{_uuid.uuid4().hex[:8]}"
-    q = (pairs.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(600)
-    return (spark.table(name).groupBy("user_id")
+    return (_drain(spark, pairs, "append", "dwd_interval_join_streaming")
+            .groupBy("user_id")
             .agg(F.count("*").alias("pair_ct"),
                  F.min("gap_us").alias("min_gap_us"),
                  F.max("gap_us").alias("max_gap_us")))
@@ -229,11 +293,9 @@ def dwd_stream_dedup_within_watermark(spark: SparkSession, sf_dir: str) -> DataF
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type")
     )
-    name = f"dwd_stream_dedup_{_uuid.uuid4().hex[:8]}"
-    q = (deduped.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(600)
-    return (spark.table(name).groupBy("event_type")
+    return (_drain(spark, deduped, "append",
+                   "dwd_stream_dedup_within_watermark")
+            .groupBy("event_type")
             .agg(F.countDistinct("user_id").alias("uu_ct")))
 
 
@@ -286,11 +348,7 @@ def dws_session_window_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
          F.sum(F.col("value").cast("decimal(18,2)")).cast("double")
           .alias("value_sum")],
     ).select("user_id", "stt", "edt", "event_ct", "value_sum")
-    name = f"dws_session_stream_{_uuid.uuid4().hex[:8]}"
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(600)
-    return spark.table(name)
+    return _drain(spark, agg, "complete", "dws_session_window_streaming")
 
 
 # ---------------------------------------------------------------------------
@@ -337,11 +395,7 @@ def dws_union_streams_window(spark: SparkSession, sf_dir: str) -> DataFrame:
          F.sum("purchase").cast("bigint").alias("purchase_ct"),
          F.sum("error").cast("bigint").alias("error_ct")],
     ).select("stt", "click_ct", "purchase_ct", "error_ct")
-    name = f"dws_union_stream_{_uuid.uuid4().hex[:8]}"
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(600)
-    return spark.table(name)
+    return _drain(spark, agg, "complete", "dws_union_streams_window")
 
 
 # ---------------------------------------------------------------------------
@@ -381,11 +435,8 @@ def dws_backflow_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("gap_days", T.IntegerType()),
     ])
     bf = backflow(stream.select("user_id", "dt"), "user_id", out_schema)
-    name = f"dws_backflow_stream_{_uuid.uuid4().hex[:8]}"
-    q = (bf.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(600)
-    return (spark.table(name).groupBy("dt")
+    return (_drain(spark, bf, "append", "dws_backflow_streaming")
+            .groupBy("dt")
             .agg(F.count("*").alias("backflow_ct")))
 
 
@@ -442,11 +493,7 @@ def dws_cumulate_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
              .alias("edt"),
             "event_type", "pv_ct", "value_sum")
     )
-    name = f"dws_cumulate_stream_{_uuid.uuid4().hex[:8]}"
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(600)
-    return spark.table(name)
+    return _drain(spark, agg, "complete", "dws_cumulate_streaming")
 
 
 # ---------------------------------------------------------------------------
@@ -508,11 +555,7 @@ def dws_ohlc_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("last_row.value").alias("close"),
             "tick_ct")
     )
-    name = f"dws_ohlc_stream_{_uuid.uuid4().hex[:8]}"
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(600)
-    return spark.table(name)
+    return _drain(spark, agg, "complete", "dws_ohlc_streaming")
 
 
 # ---------------------------------------------------------------------------
@@ -546,11 +589,7 @@ def stream_dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
            .groupBy(F.md5("text").alias("content_hash"))
            .agg(F.count("*").alias("copy_ct"),
                 F.min("doc_id").alias("canonical_doc_id")))
-    name = f"stream_dedup_{_uuid.uuid4().hex[:8]}"
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(600)
-    return spark.table(name)
+    return _drain(spark, agg, "complete", "stream_dedup_exact_documents")
 
 
 from gmall_211027_flink_spark.operators.text import (  # noqa: E402
@@ -618,11 +657,7 @@ def stream_quality_filter_documents(spark: SparkSession,
     agg = (stream.select("lang", verdict.alias("verdict"))
            .groupBy("lang", "verdict")
            .agg(F.count("*").alias("doc_ct")))
-    name = f"stream_qf_{_uuid.uuid4().hex[:8]}"
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(600)
-    return spark.table(name)
+    return _drain(spark, agg, "complete", "stream_quality_filter_documents")
 
 
 # ---------------------------------------------------------------------------
@@ -695,12 +730,8 @@ def dwd_order_detail_join_streaming(spark: SparkSession,
         "left_outer",
     ).select("o_orderkey", "o_orderpriority", "o_orderdate",
              "l_orderkey", "l_quantity")
-    name = f"dwd_odj_stream_{_uuid.uuid4().hex[:8]}"
-    q = (joined.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(600)
     return (
-        spark.table(name)
+        _drain(spark, joined, "append", "dwd_order_detail_join_streaming")
         .filter(F.col("o_orderdate") < F.lit(ODJ_CUTOFF).cast("timestamp"))
         .groupBy("o_orderpriority")
         .agg(F.count("l_orderkey").alias("matched_line_ct"),
@@ -750,11 +781,7 @@ def stream_sample_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
            .groupBy("source")
            .agg(F.count("*").alias("total_ct"),
                 F.sum("kept").cast("bigint").alias("kept_ct")))
-    name = f"stream_sample_{_uuid.uuid4().hex[:8]}"
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(600)
-    return spark.table(name)
+    return _drain(spark, agg, "complete", "stream_sample_ingest")
 
 
 # ---------------------------------------------------------------------------
@@ -797,11 +824,7 @@ def dwd_stream_static_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
            .groupBy("p_type")
            .agg(F.count("*").alias("line_ct"),
                 F.sum("rev").cast("double").alias("revenue")))
-    name = f"dwd_ss_dim_{_uuid.uuid4().hex[:8]}"
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(600)
-    return spark.table(name)
+    return _drain(spark, agg, "complete", "dwd_stream_static_dim_join")
 
 
 # ---------------------------------------------------------------------------
@@ -846,11 +869,7 @@ def dws_tumble_append_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
                     .alias("stt"),
                    F.col("window.end").alias("edt_ts"),
                    "event_type", "pv_ct"))
-    name = f"dws_tumble_append_{_uuid.uuid4().hex[:8]}"
-    q = (agg.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(600)
-    return (spark.table(name)
+    return (_drain(spark, agg, "append", "dws_tumble_append_streaming")
             .filter(F.col("edt_ts")
                     <= F.lit(TUMBLE_APPEND_CUTOFF).cast("timestamp"))
             .select("stt", "event_type", "pv_ct"))
@@ -874,10 +893,9 @@ def dws_tumble_append_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY 1, 2
     """,
 )
-def dws_incremental_agg_maintenance(spark: SparkSession,
-                                    sf_dir: str) -> DataFrame:
-    import tempfile
-
+@_temp_store
+def dws_incremental_agg_maintenance(spark: SparkSession, sf_dir: str,
+                                    tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
     from gmall_211027_flink_spark.streaming.incremental import (
         IncrementalAggStore)
@@ -885,9 +903,8 @@ def dws_incremental_agg_maintenance(spark: SparkSession,
     events = load_table(spark, sf_dir, "events").select(
         "event_type", F.date_format("ts", "yyyy-MM-dd").alias("dt"),
         F.col("value").cast("decimal(18,2)").alias("v"), "ts")
-    d = tempfile.mkdtemp(prefix="inc_agg_gate_")
     store = IncrementalAggStore(
-        f"{d}/store", ["event_type", "dt"],
+        f"{tmp_dir}/store", ["event_type", "dt"],
         {"pv_ct": ("count", None), "value_sum": ("sum", "v")})
     # three deterministic event-time slices = three commits
     cuts = ["2024-01-11", "2024-01-21"]
@@ -923,56 +940,44 @@ def dws_incremental_agg_maintenance(spark: SparkSession,
     "stream_dedup_minhash_incremental",
     oracle=None,  # assigned below (reuses dedup.py band CTE fragments)
 )
-def stream_dedup_minhash_incremental(spark: SparkSession,
-                                     sf_dir: str) -> DataFrame:
-    import tempfile
-
+@_temp_store
+def stream_dedup_minhash_incremental(spark: SparkSession, sf_dir: str,
+                                     tmp_dir: str) -> DataFrame:
+    from gmall_211027_flink_spark.catalog import load_table
     from gmall_211027_flink_spark.operators.dedup import (
         bands_for_docs, minhash_bands)
     from gmall_211027_flink_spark.streaming.incremental import (
         IncrementalAggStore)
 
-    import shutil
-
-    from gmall_211027_flink_spark.catalog import load_table
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    d = tempfile.mkdtemp(prefix="lsh_store_gate_")
-    try:
-        store = IncrementalAggStore(
-            f"{d}/store", ["band_id", "band_key"],
-            {"min_doc": ("min", "doc_id"), "n_docs": ("count", None)})
-        # three deterministic crawl slices = three commits (doc_id mod 3
-        # — deliberately interleaved, NOT contiguous ranges, so the
-        # order-insensitivity claim is actually exercised)
-        for i in range(3):
-            sl = bands_for_docs(docs.filter(F.col("doc_id") % 3 == i))
-            store.write_batch(sl, i)
-        buckets = store.read(spark)
-        bands = minhash_bands(spark, sf_dir)
-        per_doc = (bands.join(buckets, ["band_id", "band_key"])
-                   .groupBy("doc_id")
-                   .agg(F.min("min_doc").alias("best_mate")))
-        verdicts = per_doc.agg(
-            F.count("*").alias("n_docs"),
-            F.sum(F.when(F.col("best_mate") < F.col("doc_id"), 1)
-                  .otherwise(0))
-             .cast("bigint").alias("n_dup_candidates"))
-        bucket_stats = buckets.agg(
-            F.count("*").alias("n_buckets"),
-            F.sum(F.when(F.col("n_docs") > 1, 1).otherwise(0))
-             .cast("bigint").alias("n_collision_buckets"))
-        out = (verdicts.crossJoin(bucket_stats)
-               .select("n_docs", "n_dup_candidates",
-                       (F.col("n_docs") - F.col("n_dup_candidates"))
-                       .alias("n_kept"),
-                       "n_buckets", "n_collision_buckets"))
-        # The store dir must outlive only THIS materialization — force
-        # the fold's result out of it before removing (repeated driver
-        # runs were accumulating lsh_store_gate_* temp dirs otherwise).
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    store = IncrementalAggStore(
+        f"{tmp_dir}/store", ["band_id", "band_key"],
+        {"min_doc": ("min", "doc_id"), "n_docs": ("count", None)})
+    # three deterministic crawl slices = three commits (doc_id mod 3
+    # — deliberately interleaved, NOT contiguous ranges, so the
+    # order-insensitivity claim is actually exercised)
+    for i in range(3):
+        sl = bands_for_docs(docs.filter(F.col("doc_id") % 3 == i))
+        store.write_batch(sl, i)
+    buckets = store.read(spark)
+    bands = minhash_bands(spark, sf_dir)
+    per_doc = (bands.join(buckets, ["band_id", "band_key"])
+               .groupBy("doc_id")
+               .agg(F.min("min_doc").alias("best_mate")))
+    verdicts = per_doc.agg(
+        F.count("*").alias("n_docs"),
+        F.sum(F.when(F.col("best_mate") < F.col("doc_id"), 1)
+              .otherwise(0))
+         .cast("bigint").alias("n_dup_candidates"))
+    bucket_stats = buckets.agg(
+        F.count("*").alias("n_buckets"),
+        F.sum(F.when(F.col("n_docs") > 1, 1).otherwise(0))
+         .cast("bigint").alias("n_collision_buckets"))
+    return (verdicts.crossJoin(bucket_stats)
+            .select("n_docs", "n_dup_candidates",
+                    (F.col("n_docs") - F.col("n_dup_candidates"))
+                    .alias("n_kept"),
+                    "n_buckets", "n_collision_buckets"))
 
 
 def _lsh_incremental_oracle() -> str:
@@ -1113,25 +1118,19 @@ def stream_decontaminate_ingest(spark: SparkSession,
               .filter(F.col("doc_id") % EVAL_MOD != 0)
               .select("doc_id", "lang", F.split("text", " ").alias("w")))
 
-    run = _uuid.uuid4().hex[:8]
     # (1) stateless per-lang train counters
-    t_name = f"sdi_train_{run}"
-    qt = (stream.groupBy("lang").agg(F.count("*").alias("train_ct"))
-          .writeStream.format("memory").queryName(t_name)
-          .outputMode("complete").trigger(availableNow=True).start())
+    train = _drain(spark,
+                   stream.groupBy("lang").agg(F.count("*").alias("train_ct")),
+                   "complete", "stream_decontaminate_ingest")
     # (2) contaminated-doc set via map-side gram explode + stream-static
     # semi join against the broadcast eval grams
-    c_name = f"sdi_cont_{run}"
-    qc = (stream.select("doc_id", "lang", F.explode(grams_expr).alias("g"))
-          .join(F.broadcast(eval_grams), "g", "left_semi")
-          .groupBy("lang", "doc_id").agg(F.count("*").alias("hits"))
-          .writeStream.format("memory").queryName(c_name)
-          .outputMode("complete").trigger(availableNow=True).start())
-    qt.awaitTermination(600)
-    qc.awaitTermination(600)
-    cont = (spark.table(c_name).groupBy("lang")
+    hits = (stream.select("doc_id", "lang", F.explode(grams_expr).alias("g"))
+            .join(F.broadcast(eval_grams), "g", "left_semi")
+            .groupBy("lang", "doc_id").agg(F.count("*").alias("hits")))
+    cont = (_drain(spark, hits, "complete", "stream_decontaminate_ingest")
+            .groupBy("lang")
             .agg(F.count("*").alias("contaminated_ct")))
-    return (spark.table(t_name).join(cont, "lang", "left")
+    return (train.join(cont, "lang", "left")
             .select(
                 "lang", "train_ct",
                 F.coalesce("contaminated_ct", F.lit(0)).cast("bigint")
@@ -1184,11 +1183,9 @@ _OR["stream_decontaminate_ingest"] = _stream_decon_oracle()
     ) WHERE rn = 1
     """,
 )
-def stream_last_value_compaction(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_temp_store
+def stream_last_value_compaction(spark: SparkSession, sf_dir: str,
+                                 tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.sources.files import stream_events
     from gmall_211027_flink_spark.streaming.incremental import (
         IncrementalAggStore, run_incremental_agg)
@@ -1208,29 +1205,17 @@ def stream_last_value_compaction(spark: SparkSession,
         _enc12(F.unix_timestamp("ts")),
         _enc12(F.col("event_id")),
         F.col("event_type"))
-    d = tempfile.mkdtemp(prefix="lastval_gate_")
-    try:
-        store = IncrementalAggStore(
-            f"{d}/store", ["user_id"], {"last_enc": ("max", "enc")})
-        stream = stream_events(spark, sf_dir).select(
-            "user_id", enc.alias("enc"))
-        q = run_incremental_agg(stream, store, f"{d}/ckpt")
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("stream_last_value_compaction timed out")
-        out = store.read(spark).select(
-            "user_id",
-            F.substring("last_enc", 1, 12).cast("bigint").alias("last_es"),
-            F.substring("last_enc", 13, 12).cast("bigint")
-             .alias("last_event_id"),
-            F.substring("last_enc", 25, 100).alias("last_event_type"))
-        # gate-harness materialization only (the temp store is removed
-        # in `finally`, so the frame must leave it first); production
-        # reads the persistent store directly — no driver collect
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    store = IncrementalAggStore(
+        f"{tmp_dir}/store", ["user_id"], {"last_enc": ("max", "enc")})
+    stream = stream_events(spark, sf_dir).select("user_id", enc.alias("enc"))
+    _await(run_incremental_agg(stream, store, f"{tmp_dir}/ckpt"),
+           "stream_last_value_compaction")
+    return store.read(spark).select(
+        "user_id",
+        F.substring("last_enc", 1, 12).cast("bigint").alias("last_es"),
+        F.substring("last_enc", 13, 12).cast("bigint")
+         .alias("last_event_id"),
+        F.substring("last_enc", 25, 100).alias("last_event_type"))
 
 
 # ---------------------------------------------------------------------------
@@ -1258,45 +1243,32 @@ def stream_last_value_compaction(spark: SparkSession,
     FROM ranked WHERE rnk <= 5
     """,
 )
-def stream_topk_gmv_maintenance(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_temp_store
+def stream_topk_gmv_maintenance(spark: SparkSession, sf_dir: str,
+                                tmp_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from gmall_211027_flink_spark.streaming.incremental import (
         IncrementalAggStore, run_incremental_agg)
 
     schema = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
-    d = tempfile.mkdtemp(prefix="topk_gmv_gate_")
-    try:
-        store = IncrementalAggStore(
-            f"{d}/store", ["order_day"], {"gmv": ("sum", "gmv_part")})
-        stream = (spark.readStream.schema(schema)
-                  .option("pathGlobFilter", "orders.parquet")
-                  .parquet(sf_dir)
-                  .select(
-                      F.date_format("o_orderdate", "yyyy-MM-dd")
-                       .alias("order_day"),
-                      F.col("o_totalprice").cast("decimal(18,2)")
-                       .alias("gmv_part")))
-        q = run_incremental_agg(stream, store, f"{d}/ckpt")
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("stream_topk_gmv_maintenance timed out")
-        w = Window.orderBy(F.desc("gmv"), "order_day")
-        out = (store.read(spark)
-               .select("order_day", F.col("gmv").cast("double")
-                       .alias("gmv"))
-               .withColumn("rnk", F.rank().over(w).cast("bigint"))
-               .filter(F.col("rnk") <= 5))
-        # gate-harness materialization (temp store removed in finally);
-        # production reads the persistent store — no driver collect
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    store = IncrementalAggStore(
+        f"{tmp_dir}/store", ["order_day"], {"gmv": ("sum", "gmv_part")})
+    stream = (spark.readStream.schema(schema)
+              .option("pathGlobFilter", "orders.parquet")
+              .parquet(sf_dir)
+              .select(
+                  F.date_format("o_orderdate", "yyyy-MM-dd")
+                   .alias("order_day"),
+                  F.col("o_totalprice").cast("decimal(18,2)")
+                   .alias("gmv_part")))
+    _await(run_incremental_agg(stream, store, f"{tmp_dir}/ckpt"),
+           "stream_topk_gmv_maintenance")
+    w = Window.orderBy(F.desc("gmv"), "order_day")
+    return (store.read(spark)
+            .select("order_day", F.col("gmv").cast("double").alias("gmv"))
+            .withColumn("rnk", F.rank().over(w).cast("bigint"))
+            .filter(F.col("rnk") <= 5))
 
 
 # ---------------------------------------------------------------------------
@@ -1316,60 +1288,49 @@ def stream_topk_gmv_maintenance(spark: SparkSession,
     "stream_index_stats_maintenance",
     oracle=None,  # assigned below (shares the term list with search.py)
 )
-def stream_index_stats_maintenance(spark: SparkSession,
-                                   sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
+@_temp_store
+def stream_index_stats_maintenance(spark: SparkSession, sf_dir: str,
+                                   tmp_dir: str) -> DataFrame:
+    import os
 
     from gmall_211027_flink_spark.operators.search import _ALL_TERMS
     from gmall_211027_flink_spark.streaming.incremental import (
-        IncrementalAggStore, run_incremental_agg)
+        IncrementalAggStore)
 
     batch_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    d = tempfile.mkdtemp(prefix="idx_stats_gate_")
-    try:
-        store = IncrementalAggStore(
-            f"{d}/store", ["term"],
-            {"df": ("count", None), "tf_total": ("sum", "tf")})
-        stream = (spark.readStream.schema(batch_schema)
-                  .option("pathGlobFilter", "documents.parquet")
-                  .parquet(sf_dir)
-                  .select("doc_id",
-                          F.explode(F.split("text", " ")).alias("term"))
-                  .filter(F.col("term").isin(list(_ALL_TERMS))))
+    store = IncrementalAggStore(
+        f"{tmp_dir}/store", ["term"],
+        {"df": ("count", None), "tf_total": ("sum", "tf")})
+    stream = (spark.readStream.schema(batch_schema)
+              .option("pathGlobFilter", "documents.parquet")
+              .parquet(sf_dir)
+              .select("doc_id",
+                      F.explode(F.split("text", " ")).alias("term"))
+              .filter(F.col("term").isin(list(_ALL_TERMS))))
 
-        # The stream itself stays STATELESS (no streaming aggregation
-        # state); the per-(doc, term) reduction happens inside each
-        # foreachBatch commit — correct because the file source never
-        # splits one document across micro-batches, so every (doc,
-        # term) posting finalizes within its batch.
-        def _fold(batch, epoch_id):
-            red = (batch.groupBy("doc_id", "term")
-                   .agg(F.count("*").alias("tf"))
-                   .select("term", "tf"))
-            store.write_batch(red, epoch_id)
+    # The stream itself stays STATELESS (no streaming aggregation
+    # state); the per-(doc, term) reduction happens inside each
+    # foreachBatch commit — correct because the file source never
+    # splits one document across micro-batches, so every (doc,
+    # term) posting finalizes within its batch.
+    def _fold(batch, epoch_id):
+        red = (batch.groupBy("doc_id", "term")
+               .agg(F.count("*").alias("tf"))
+               .select("term", "tf"))
+        store.write_batch(red, epoch_id)
 
-        q = (stream.writeStream.foreachBatch(_fold)
-             .option("checkpointLocation", f"{d}/ckpt")
-             .trigger(availableNow=True).start())
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("stream_index_stats_maintenance timed out")
-        import os
-        if not os.path.exists(f"{d}/store"):
-            # corpus contained NO query-vocabulary postings at all: the
-            # store was never materialized — the index is validly empty
-            return spark.createDataFrame(
-                [], "term string, df bigint, tf_total bigint")
-        out = (store.read(spark)
-               .select("term", F.col("df").cast("bigint").alias("df"),
-                       F.col("tf_total").cast("bigint").alias("tf_total")))
-        # gate-harness materialization (temp store removed in finally);
-        # production reads the persistent store — no driver collect
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    q = (stream.writeStream.foreachBatch(_fold)
+         .option("checkpointLocation", f"{tmp_dir}/ckpt")
+         .trigger(availableNow=True).start())
+    _await(q, "stream_index_stats_maintenance")
+    if not os.path.exists(f"{tmp_dir}/store"):
+        # corpus contained NO query-vocabulary postings at all: the
+        # store was never materialized — the index is validly empty
+        return spark.createDataFrame(
+            [], "term string, df bigint, tf_total bigint")
+    return (store.read(spark)
+            .select("term", F.col("df").cast("bigint").alias("df"),
+                    F.col("tf_total").cast("bigint").alias("tf_total")))
 
 
 def _index_stats_oracle() -> str:
@@ -1431,13 +1392,8 @@ def dwd_window_join_streaming(spark: SparkSession,
         .select("user_id",
                 (F.unix_timestamp(F.col("win.start")) / 3600)
                 .cast("bigint").alias("b3600")))
-    name = f"dwd_window_join_stream_{_uuid.uuid4().hex[:8]}"
-    q = (pairs.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("dwd_window_join_streaming timed out")
-    return (spark.table(name).groupBy("user_id")
+    return (_drain(spark, pairs, "append", "dwd_window_join_streaming")
+            .groupBy("user_id")
             .agg(F.count("*").cast("bigint").alias("pair_ct"),
                  F.countDistinct("b3600").cast("bigint")
                   .alias("window_ct"),
@@ -1484,13 +1440,7 @@ def dws_funnel_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
         T.StructField("level", T.LongType()),
     ])
     levels = funnel_levels(stream, FUNNEL_WINDOW_S, out_schema)
-    name = f"dws_funnel_stream_{_uuid.uuid4().hex[:8]}"
-    q = (levels.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("dws_funnel_streaming timed out")
-    return (spark.table(name)
+    return (_drain(spark, levels, "append", "dws_funnel_streaming")
             .groupBy("user_id").agg(F.max("level").alias("funnel_level"))
             .groupBy(F.col("funnel_level").cast("bigint")
                      .alias("funnel_level"))
@@ -1528,17 +1478,11 @@ def dwd_bounce_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     stream = stream_events(spark, sf_dir).select(
         "user_id", "event_id", F.unix_micros("ts").alias("us"))
-    name = f"dwd_bounce_stream_{_uuid.uuid4().hex[:8]}"
-    q = (bounce_verdicts(stream).writeStream.format("memory")
-         .queryName(name).outputMode("append")
-         .trigger(availableNow=True).start())
-    if not q.awaitTermination(600):
-        q.stop()
-        raise RuntimeError("dwd_bounce_streaming timed out")
     # per-event final verdict: the resolved row's gap beats the
     # provisional NULL (max ignores nulls); surviving NULL = stream
     # ended with no successor = the CEP timeout side-output (bounce)
-    events = (spark.table(name)
+    events = (_drain(spark, bounce_verdicts(stream), "append",
+                     "dwd_bounce_streaming")
               .groupBy("user_id", "event_id", "es_us", "prev_gap_us")
               .agg(F.max("next_gap_us").alias("next_gap_us")))
     entries = events.filter(
@@ -1579,57 +1523,44 @@ _OR["dwd_bounce_streaming"] = _bounce_stream_oracle()
     "stream_cusum_monitor",
     oracle=None,  # assigned below: identical to batch stats_cusum_changepoint
 )
-def stream_cusum_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_temp_store
+def stream_cusum_monitor(spark: SparkSession, sf_dir: str,
+                         tmp_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from gmall_211027_flink_spark.streaming.incremental import (
         IncrementalAggStore, run_incremental_agg)
 
     schema = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
-    d = tempfile.mkdtemp(prefix="cusum_gate_")
-    try:
-        store = IncrementalAggStore(
-            f"{d}/store", ["d"], {"g": ("sum", "g_part")})
-        stream = (spark.readStream.schema(schema)
-                  .option("pathGlobFilter", "orders.parquet")
-                  .parquet(sf_dir)
-                  .select(
-                      F.date_format("o_orderdate", "yyyy-MM-dd")
-                       .alias("d"),
-                      F.col("o_totalprice").cast("decimal(18,2)")
-                       .alias("g_part")))
-        q = run_incremental_agg(stream, store, f"{d}/ckpt")
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("stream_cusum_monitor timed out")
-        daily = store.read(spark).select("d", "g")
-        w_run = Window.orderBy("d").rowsBetween(
-            Window.unboundedPreceding, 0)
-        w_all = Window.partitionBy(F.lit(1))
-        pre = (daily
-               .withColumn("pre", F.sum("g").over(w_run))
-               .withColumn("i", F.row_number().over(Window.orderBy("d")))
-               .withColumn("total", F.sum("g").over(w_all))
-               .withColumn("n", F.count("*").over(w_all)))
-        cusum = (F.col("pre").cast("double")
-                 - F.col("i").cast("double")
-                 * (F.col("total").cast("double")
-                    / F.col("n").cast("double")))
-        out = (pre.select(F.col("d").alias("cp_day"),
-                          F.round(cusum, 6).alias("cusum_at_cp"),
-                          F.col("n").cast("bigint").alias("n_days"),
-                          cusum.alias("_c"))
-               .orderBy(F.abs(F.col("_c")).desc(), "cp_day").limit(1)
-               .drop("_c"))
-        # gate-harness materialization (temp store removed in finally);
-        # production reads the persistent store — no driver collect
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    store = IncrementalAggStore(
+        f"{tmp_dir}/store", ["d"], {"g": ("sum", "g_part")})
+    stream = (spark.readStream.schema(schema)
+              .option("pathGlobFilter", "orders.parquet")
+              .parquet(sf_dir)
+              .select(
+                  F.date_format("o_orderdate", "yyyy-MM-dd").alias("d"),
+                  F.col("o_totalprice").cast("decimal(18,2)")
+                   .alias("g_part")))
+    _await(run_incremental_agg(stream, store, f"{tmp_dir}/ckpt"),
+           "stream_cusum_monitor")
+    daily = store.read(spark).select("d", "g")
+    w_run = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, 0)
+    w_all = Window.partitionBy(F.lit(1))
+    pre = (daily
+           .withColumn("pre", F.sum("g").over(w_run))
+           .withColumn("i", F.row_number().over(Window.orderBy("d")))
+           .withColumn("total", F.sum("g").over(w_all))
+           .withColumn("n", F.count("*").over(w_all)))
+    cusum = (F.col("pre").cast("double")
+             - F.col("i").cast("double")
+             * (F.col("total").cast("double")
+                / F.col("n").cast("double")))
+    return (pre.select(F.col("d").alias("cp_day"),
+                       F.round(cusum, 6).alias("cusum_at_cp"),
+                       F.col("n").cast("bigint").alias("n_days"),
+                       cusum.alias("_c"))
+            .orderBy(F.abs(F.col("_c")).desc(), "cp_day").limit(1)
+            .drop("_c"))
 
 
 def _cusum_stream_oracle() -> str:
@@ -1656,68 +1587,57 @@ _OR["stream_cusum_monitor"] = _cusum_stream_oracle()
     "stream_ks_drift_monitor",
     oracle=None,  # assigned below: identical to batch stats_ks_drift
 )
-def stream_ks_drift_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
+@_temp_store
+def stream_ks_drift_monitor(spark: SparkSession, sf_dir: str,
+                            tmp_dir: str) -> DataFrame:
+    import os
 
     from pyspark.sql import Window
 
+    from gmall_211027_flink_spark.operators.aggregates import KS_ALPHA_C
     from gmall_211027_flink_spark.streaming.incremental import (
         IncrementalAggStore, run_incremental_agg)
 
     batch_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    d = tempfile.mkdtemp(prefix="ks_drift_gate_")
-    try:
-        store = IncrementalAggStore(
-            f"{d}/store", ["n_chars", "cohort"], {"ct": ("count", None)})
-        cohort = F.when(
-            F.substring("source", 4, 10).cast("int") % 2 == 0,
-            "a").otherwise("b")
-        stream = (spark.readStream.schema(batch_schema)
-                  .option("pathGlobFilter", "documents.parquet")
-                  .parquet(sf_dir)
-                  .select("n_chars", cohort.alias("cohort")))
-        q = run_incremental_agg(stream, store, f"{d}/ckpt")
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("stream_ks_drift_monitor timed out")
-        import os
-        if not os.path.exists(f"{d}/store"):
-            # no documents arrived: nothing to test drift on
-            return spark.createDataFrame(
-                [], "n_a bigint, n_b bigint, ks_stat double, "
-                    "critical_005 double, drifted boolean")
-        vals = (store.read(spark)
-                .groupBy("n_chars")
-                .agg(F.sum(F.when(F.col("cohort") == "a", F.col("ct"))
-                           .otherwise(0)).alias("ca"),
-                     F.sum(F.when(F.col("cohort") == "b", F.col("ct"))
-                           .otherwise(0)).alias("cb")))
-        tot = vals.agg(F.sum("ca").alias("na"), F.sum("cb").alias("nb"))
-        w = (Window.orderBy("n_chars")
-             .rowsBetween(Window.unboundedPreceding, 0))
-        ecdf = vals.select(
-            "n_chars",
-            F.sum("ca").over(w).alias("cum_a"),
-            F.sum("cb").over(w).alias("cum_b"))
-        dd = F.abs(F.col("cum_a").cast("double") / F.col("na")
-                   - F.col("cum_b").cast("double") / F.col("nb"))
-        from gmall_211027_flink_spark.operators.aggregates import (
-            KS_ALPHA_C)
-        crit = (F.expr(KS_ALPHA_C)
-                * F.sqrt((F.col("na") + F.col("nb"))
-                         / (F.col("na").cast("double") * F.col("nb"))))
-        out = (ecdf.crossJoin(F.broadcast(tot))
-               .groupBy(F.col("na").cast("bigint").alias("n_a"),
-                        F.col("nb").cast("bigint").alias("n_b"))
-               .agg(F.round(F.max(dd), 6).alias("ks_stat"),
-                    F.round(F.first(crit), 6).alias("critical_005"),
-                    (F.max(dd) > F.first(crit)).alias("drifted")))
-        # gate-harness materialization (temp store removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    store = IncrementalAggStore(
+        f"{tmp_dir}/store", ["n_chars", "cohort"], {"ct": ("count", None)})
+    cohort = F.when(
+        F.substring("source", 4, 10).cast("int") % 2 == 0,
+        "a").otherwise("b")
+    stream = (spark.readStream.schema(batch_schema)
+              .option("pathGlobFilter", "documents.parquet")
+              .parquet(sf_dir)
+              .select("n_chars", cohort.alias("cohort")))
+    _await(run_incremental_agg(stream, store, f"{tmp_dir}/ckpt"),
+           "stream_ks_drift_monitor")
+    if not os.path.exists(f"{tmp_dir}/store"):
+        # no documents arrived: nothing to test drift on
+        return spark.createDataFrame(
+            [], "n_a bigint, n_b bigint, ks_stat double, "
+                "critical_005 double, drifted boolean")
+    vals = (store.read(spark)
+            .groupBy("n_chars")
+            .agg(F.sum(F.when(F.col("cohort") == "a", F.col("ct"))
+                       .otherwise(0)).alias("ca"),
+                 F.sum(F.when(F.col("cohort") == "b", F.col("ct"))
+                       .otherwise(0)).alias("cb")))
+    tot = vals.agg(F.sum("ca").alias("na"), F.sum("cb").alias("nb"))
+    w = Window.orderBy("n_chars").rowsBetween(Window.unboundedPreceding, 0)
+    ecdf = vals.select(
+        "n_chars",
+        F.sum("ca").over(w).alias("cum_a"),
+        F.sum("cb").over(w).alias("cum_b"))
+    dd = F.abs(F.col("cum_a").cast("double") / F.col("na")
+               - F.col("cum_b").cast("double") / F.col("nb"))
+    crit = (F.expr(KS_ALPHA_C)
+            * F.sqrt((F.col("na") + F.col("nb"))
+                     / (F.col("na").cast("double") * F.col("nb"))))
+    return (ecdf.crossJoin(F.broadcast(tot))
+            .groupBy(F.col("na").cast("bigint").alias("n_a"),
+                     F.col("nb").cast("bigint").alias("n_b"))
+            .agg(F.round(F.max(dd), 6).alias("ks_stat"),
+                 F.round(F.first(crit), 6).alias("critical_005"),
+                 (F.max(dd) > F.first(crit)).alias("drifted")))
 
 
 def _ks_stream_oracle() -> str:
@@ -1750,11 +1670,9 @@ _OR["stream_ks_drift_monitor"] = _ks_stream_oracle()
     "stream_winnowing_index_store",
     oracle=None,  # assigned below: identical to the batch winnowing op
 )
-def stream_winnowing_index_store(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_temp_store
+def stream_winnowing_index_store(spark: SparkSession, sf_dir: str,
+                                 tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
     from gmall_211027_flink_spark.operators.dedup import (
         winnow_fingerprints, winnow_pairs)
@@ -1762,25 +1680,17 @@ def stream_winnowing_index_store(spark: SparkSession,
         IncrementalAggStore)
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    d = tempfile.mkdtemp(prefix="winnow_store_gate_")
-    try:
-        # (doc_id, h) is the store grain; n_batches is a trivially
-        # mergeable carrier (a fingerprint re-observed on replay would
-        # bump it, never duplicate the key — reads stay set-semantic).
-        store = IncrementalAggStore(
-            f"{d}/store", ["doc_id", "h"], {"n_batches": ("count", None)})
-        # three interleaved crawl slices = three commits (doc_id mod 3,
-        # NOT contiguous ranges, so slicing-invariance is exercised)
-        for i in range(3):
-            sl = winnow_fingerprints(docs.filter(F.col("doc_id") % 3 == i))
-            store.write_batch(sl, i)
-        fp = store.read(spark).select("doc_id", "h")
-        out = winnow_pairs(fp)
-        # gate-harness materialization (temp store removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    # (doc_id, h) is the store grain; n_batches is a trivially
+    # mergeable carrier (a fingerprint re-observed on replay would
+    # bump it, never duplicate the key — reads stay set-semantic).
+    store = IncrementalAggStore(
+        f"{tmp_dir}/store", ["doc_id", "h"], {"n_batches": ("count", None)})
+    # three interleaved crawl slices = three commits (doc_id mod 3,
+    # NOT contiguous ranges, so slicing-invariance is exercised)
+    for i in range(3):
+        sl = winnow_fingerprints(docs.filter(F.col("doc_id") % 3 == i))
+        store.write_batch(sl, i)
+    return winnow_pairs(store.read(spark).select("doc_id", "h"))
 
 
 def _winnow_stream_oracle() -> str:
@@ -1846,10 +1756,10 @@ _OR["stream_winnowing_index_store"] = _winnow_stream_oracle()
     GROUP BY 1
     """,
 )
-def dws_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_temp_store
+def dws_late_data_drop(spark: SparkSession, sf_dir: str,
+                       tmp_dir: str) -> DataFrame:
     import os
-    import shutil
-    import tempfile
 
     from gmall_211027_flink_spark.catalog import load_table
 
@@ -1859,51 +1769,40 @@ def dws_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     mid = (mn + mx) // 2
     hi = mx - 2 * 3600 * 1_000_000
     us = F.unix_micros(F.col("ts"))
-    d = tempfile.mkdtemp(prefix="late_drop_gate_")
-    try:
-        src = f"{d}/src"
-        os.makedirs(src)
-        slices = [
-            ("a", ev.filter(us <= F.lit(mid))),
-            ("b", ev.filter(us > F.lit(hi))),
-            ("c", ev.limit(0)),                               # buffer batch
-            ("d", ev.filter((us > F.lit(mid)) & (us <= F.lit(hi)))),  # LATE
-        ]
-        for i, (tag, sl) in enumerate(slices):
-            stage = f"{d}/stage_{tag}"
-            sl.coalesce(1).write.mode("overwrite").parquet(stage)
-            parts = [p for p in os.listdir(stage) if p.endswith(".parquet")]
-            assert parts, f"slice {tag} wrote no part file"
-            for p in parts:
-                dst = f"{src}/{tag}_{p}"
-                shutil.copy(f"{stage}/{p}", dst)
-                os.utime(dst, (1000 * (i + 1), 1000 * (i + 1)))
-        sch = spark.read.parquet(src).schema
-        stream = (spark.readStream.schema(sch)
-                  .option("maxFilesPerTrigger", "1").parquet(src))
-        agg = (stream.withWatermark("ts", "10 seconds")
-               .groupBy(F.window("ts", "1 hour"))
-               .agg(F.count("*").cast("bigint").alias("event_ct"),
-                    F.sum(F.col("value").cast("decimal(18,2)"))
-                     .cast("double").alias("value_sum"))
-               .select(F.date_format("window.start", "yyyy-MM-dd HH:mm:ss")
-                        .alias("stt"),
-                       F.unix_micros(F.col("window.end")).alias("end_us"),
-                       "event_ct", "value_sum"))
-        name = f"dws_late_drop_{_uuid.uuid4().hex[:8]}"
-        q = (agg.writeStream.format("memory").queryName(name)
-             .outputMode("append").trigger(availableNow=True).start())
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("dws_late_data_drop timed out")
-        out = (spark.table(name)
-               .filter(F.col("end_us") <= F.lit(mx - 3600 * 1_000_000))
-               .select("stt", "event_ct", "value_sum"))
-        # gate-harness materialization (temp stream dir removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    src = f"{tmp_dir}/src"
+    os.makedirs(src)
+    slices = [
+        ("a", ev.filter(us <= F.lit(mid))),
+        ("b", ev.filter(us > F.lit(hi))),
+        ("c", ev.limit(0)),                                   # buffer batch
+        ("d", ev.filter((us > F.lit(mid)) & (us <= F.lit(hi)))),  # LATE
+    ]
+    for i, (tag, sl) in enumerate(slices):
+        stage = f"{tmp_dir}/stage_{tag}"
+        sl.coalesce(1).write.mode("overwrite").parquet(stage)
+        parts = [p for p in os.listdir(stage) if p.endswith(".parquet")]
+        if not parts:    # named, -O-proof invariant (ADVICE r9)
+            raise RuntimeError(
+                f"dws_late_data_drop: slice {tag} wrote no part file")
+        for p in parts:
+            dst = f"{src}/{tag}_{p}"
+            shutil.copy(f"{stage}/{p}", dst)
+            os.utime(dst, (1000 * (i + 1), 1000 * (i + 1)))
+    sch = spark.read.parquet(src).schema
+    stream = (spark.readStream.schema(sch)
+              .option("maxFilesPerTrigger", "1").parquet(src))
+    agg = (stream.withWatermark("ts", "10 seconds")
+           .groupBy(F.window("ts", "1 hour"))
+           .agg(F.count("*").cast("bigint").alias("event_ct"),
+                F.sum(F.col("value").cast("decimal(18,2)"))
+                 .cast("double").alias("value_sum"))
+           .select(F.date_format("window.start", "yyyy-MM-dd HH:mm:ss")
+                    .alias("stt"),
+                   F.unix_micros(F.col("window.end")).alias("end_us"),
+                   "event_ct", "value_sum"))
+    return (_drain(spark, agg, "append", "dws_late_data_drop")
+            .filter(F.col("end_us") <= F.lit(mx - 3600 * 1_000_000))
+            .select("stt", "event_ct", "value_sum"))
 
 
 # ---------------------------------------------------------------------------
@@ -1921,11 +1820,9 @@ def dws_late_data_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     "stream_countmin_maintenance",
     oracle=None,   # assigned below: identical to batch CM audit
 )
-def stream_countmin_maintenance(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_temp_store
+def stream_countmin_maintenance(spark: SparkSession, sf_dir: str,
+                                tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
     from gmall_211027_flink_spark.operators.sketches import (
         CM_DEPTH, CM_TOPK, CM_WIDTH)
@@ -1937,41 +1834,32 @@ def stream_countmin_maintenance(spark: SparkSession,
     bucket = F.expr(
         f"cast(conv(substring(md5(concat(cast(seed as string), ':', token)),"
         f" 1, 15), 16, 10) as bigint) % {CM_WIDTH}")
-    d = tempfile.mkdtemp(prefix="cm_store_gate_")
-    try:
-        store = IncrementalAggStore(
-            f"{d}/store", ["seed", "bucket"], {"cell_cnt": ("sum", "part")})
-        # three interleaved crawl slices = three commits (mod-3 slicing,
-        # so per-batch partial grids overlap heavily — the merge is
-        # genuinely additive, not disjoint appends)
-        for i in range(3):
-            sl = (docs.filter(F.col("doc_id") % 3 == i)
-                  .select(F.explode(F.split("text", " ")).alias("token"))
-                  .groupBy("token")
-                  .agg(F.count("*").cast("bigint").alias("part"))
-                  .crossJoin(F.broadcast(seeds))
-                  .select("seed", bucket.alias("bucket"), "part"))
-            store.write_batch(sl, i)
-        grid = store.read(spark).select("seed", "bucket", "cell_cnt")
-        exact = (docs.select(F.explode(F.split("text", " ")).alias("token"))
-                 .groupBy("token")
-                 .agg(F.count("*").cast("bigint").alias("exact_cnt")))
-        top = (exact.orderBy(F.desc("exact_cnt"), F.asc("token"))
-               .limit(CM_TOPK))
-        probes = (top.crossJoin(F.broadcast(seeds))
-                  .select("token", "exact_cnt", "seed",
-                          bucket.alias("bucket")))
-        out = (probes.join(F.broadcast(grid), ["seed", "bucket"])
-               .groupBy("token", "exact_cnt")
-               .agg(F.min("cell_cnt").cast("bigint").alias("cm_estimate"))
-               .withColumn("overestimate",
-                           (F.col("cm_estimate") - F.col("exact_cnt"))
-                           .cast("bigint")))
-        # gate-harness materialization (temp store removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    store = IncrementalAggStore(
+        f"{tmp_dir}/store", ["seed", "bucket"], {"cell_cnt": ("sum", "part")})
+    # three interleaved crawl slices = three commits (mod-3 slicing,
+    # so per-batch partial grids overlap heavily — the merge is
+    # genuinely additive, not disjoint appends)
+    for i in range(3):
+        sl = (docs.filter(F.col("doc_id") % 3 == i)
+              .select(F.explode(F.split("text", " ")).alias("token"))
+              .groupBy("token")
+              .agg(F.count("*").cast("bigint").alias("part"))
+              .crossJoin(F.broadcast(seeds))
+              .select("seed", bucket.alias("bucket"), "part"))
+        store.write_batch(sl, i)
+    grid = store.read(spark).select("seed", "bucket", "cell_cnt")
+    exact = (docs.select(F.explode(F.split("text", " ")).alias("token"))
+             .groupBy("token")
+             .agg(F.count("*").cast("bigint").alias("exact_cnt")))
+    top = exact.orderBy(F.desc("exact_cnt"), F.asc("token")).limit(CM_TOPK)
+    probes = (top.crossJoin(F.broadcast(seeds))
+              .select("token", "exact_cnt", "seed", bucket.alias("bucket")))
+    return (probes.join(F.broadcast(grid), ["seed", "bucket"])
+            .groupBy("token", "exact_cnt")
+            .agg(F.min("cell_cnt").cast("bigint").alias("cm_estimate"))
+            .withColumn("overestimate",
+                        (F.col("cm_estimate") - F.col("exact_cnt"))
+                        .cast("bigint")))
 
 
 def _cm_stream_oracle() -> str:
@@ -1999,11 +1887,9 @@ _OR["stream_countmin_maintenance"] = _cm_stream_oracle()
     "stream_kmv_maintenance",
     oracle=None,   # assigned below: identical to batch KMV audit
 )
-def stream_kmv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os
-    import shutil
-    import tempfile
-
+@_temp_store
+def stream_kmv_maintenance(spark: SparkSession, sf_dir: str,
+                           tmp_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from gmall_211027_flink_spark.catalog import load_table
@@ -2021,45 +1907,36 @@ def stream_kmv_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.expr(f"cast(conv(substring(md5(cast(k as string)), 1, {KMV_HEX}),"
                " 16, 10) as bigint)").alias("h"), "k")
-    d = tempfile.mkdtemp(prefix="kmv_store_gate_")
     wk = Window.partitionBy("source").orderBy("h")
-    try:
-        state = None    # the k-sized per-source bottom-k set
-        for i in range(3):
-            batch = (hashed.filter(F.col("k") % 3 == i)
-                     .select("source", "h").distinct())
-            merged = batch if state is None else state.unionByName(batch)
-            state = (merged.distinct()
-                     .withColumn("rn", F.row_number().over(wk))
-                     .filter(F.col("rn") <= KMV_K)
-                     .select("source", "h"))
-            # commit the k-sized state (the store IS the sketch)
-            state.write.mode("overwrite").parquet(f"{d}/state_{i}")
-            state = spark.read.parquet(f"{d}/state_{i}")
-            n = state.groupBy("source").count().agg(
-                F.max("count")).first()[0]
-            if n > KMV_K:    # named, -O-proof invariant (ADVICE r9)
-                raise RuntimeError(
-                    f"stream_kmv_maintenance: per-source state grew to "
-                    f"{n} rows > k={KMV_K}; the bounded-state fold must "
-                    f"re-trim to the k smallest hashes every batch")
-        kth = (state.groupBy("source")
-               .agg(F.max("h").alias("h_k"),
-                    F.count("*").cast("bigint").alias("n_kept")))
-        exact = keyed.groupBy("source").agg(
-            F.count_distinct("k").cast("bigint").alias("exact_distinct"))
-        est = F.when(F.col("n_kept") < KMV_K, F.col("n_kept")).otherwise(
-            F.expr(f"div(({KMV_K} - 1) * cast({KMV_SPACE} as bigint), h_k)"))
-        out = (exact.join(kth, "source")
-               .select("source", "exact_distinct",
-                       est.cast("bigint").alias("kmv_estimate"),
-                       F.abs(est.cast("bigint") - F.col("exact_distinct"))
-                        .cast("bigint").alias("abs_err")))
-        # gate-harness materialization (temp state removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+
+    def bottom_k(merged):
+        # the k-sized per-source bottom-k set (the store IS the sketch)
+        return (merged.distinct()
+                .withColumn("rn", F.row_number().over(wk))
+                .filter(F.col("rn") <= KMV_K)
+                .select("source", "h"))
+
+    batches = (hashed.filter(F.col("k") % 3 == i)
+               .select("source", "h").distinct() for i in range(3))
+    for state in _persisted_fold(spark, tmp_dir, batches, bottom_k):
+        n = state.groupBy("source").count().agg(F.max("count")).first()[0]
+        if n > KMV_K:    # named, -O-proof invariant (ADVICE r9)
+            raise RuntimeError(
+                f"stream_kmv_maintenance: per-source state grew to "
+                f"{n} rows > k={KMV_K}; the bounded-state fold must "
+                f"re-trim to the k smallest hashes every batch")
+    kth = (state.groupBy("source")
+           .agg(F.max("h").alias("h_k"),
+                F.count("*").cast("bigint").alias("n_kept")))
+    exact = keyed.groupBy("source").agg(
+        F.count_distinct("k").cast("bigint").alias("exact_distinct"))
+    est = F.when(F.col("n_kept") < KMV_K, F.col("n_kept")).otherwise(
+        F.expr(f"div(({KMV_K} - 1) * cast({KMV_SPACE} as bigint), h_k)"))
+    return (exact.join(kth, "source")
+            .select("source", "exact_distinct",
+                    est.cast("bigint").alias("kmv_estimate"),
+                    F.abs(est.cast("bigint") - F.col("exact_distinct"))
+                     .cast("bigint").alias("abs_err")))
 
 
 def _kmv_stream_oracle() -> str:
@@ -2089,55 +1966,48 @@ _OR["stream_kmv_maintenance"] = _kmv_stream_oracle()
     "stream_pca_scatter_maintenance",
     oracle=None,   # assigned below: identical to the batch PCA oracle
 )
-def stream_pca_scatter_maintenance(spark: SparkSession,
-                                   sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_temp_store
+def stream_pca_scatter_maintenance(spark: SparkSession, sf_dir: str,
+                                   tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.operators.pca import (
         principal_component, quantized_vecs, scatter_moments)
 
     vecs = quantized_vecs(spark, sf_dir)
-    d = tempfile.mkdtemp(prefix="pca_store_gate_")
-    try:
-        state = None   # (kind, a, b, m) long-form moment store
-        for i in range(3):
-            batch = vecs.filter(F.col("vec_id") % 3 == i)
-            pp, dimsum, tot = scatter_moments(batch)
-            partial = (
-                pp.select(F.lit("pp").alias("kind"), "a", "b",
-                          F.col("spp").cast("decimal(38,0)").alias("m"))
-                .unionByName(dimsum.select(
-                    F.lit("dim").alias("kind"),
-                    F.col("dim").alias("a"), F.lit(-1).alias("b"),
-                    F.col("s").cast("decimal(38,0)").alias("m")))
-                .unionByName(tot.select(
-                    F.lit("n").alias("kind"), F.lit(-1).alias("a"),
-                    F.lit(-1).alias("b"),
-                    F.col("n").cast("decimal(38,0)").alias("m"))))
-            merged = partial if state is None else \
-                state.unionByName(partial)
-            state = (merged.groupBy("kind", "a", "b")
-                     .agg(F.sum("m").cast("decimal(38,0)").alias("m")))
-            # commit the O(d^2) moment store; reread = the next batch
-            # folds into the PERSISTED state, not a lineage chain
-            state.write.mode("overwrite").parquet(f"{d}/state_{i}")
-            state = spark.read.parquet(f"{d}/state_{i}")
-            n_rows = state.count()
-            assert n_rows <= 64 * 64 + 64 + 1, f"store grew: {n_rows}"
-        pp = (state.filter(F.col("kind") == "pp")
-              .select("a", "b", F.col("m").alias("spp")))
-        dimsum = (state.filter(F.col("kind") == "dim")
-                  .select(F.col("a").alias("dim"),
-                          F.col("m").cast("decimal(28,0)").alias("s")))
-        tot = (state.filter(F.col("kind") == "n")
-               .select(F.col("m").cast("bigint").alias("n")))
-        out = principal_component(pp, dimsum, tot)
-        # gate-harness materialization (temp store removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+
+    def partial_moments(batch):
+        # one slice's (kind, a, b, m) long-form moment rows
+        pp, dimsum, tot = scatter_moments(batch)
+        return (
+            pp.select(F.lit("pp").alias("kind"), "a", "b",
+                      F.col("spp").cast("decimal(38,0)").alias("m"))
+            .unionByName(dimsum.select(
+                F.lit("dim").alias("kind"),
+                F.col("dim").alias("a"), F.lit(-1).alias("b"),
+                F.col("s").cast("decimal(38,0)").alias("m")))
+            .unionByName(tot.select(
+                F.lit("n").alias("kind"), F.lit(-1).alias("a"),
+                F.lit(-1).alias("b"),
+                F.col("n").cast("decimal(38,0)").alias("m"))))
+
+    # commit the O(d^2) moment store per slice
+    batches = (partial_moments(vecs.filter(F.col("vec_id") % 3 == i))
+               for i in range(3))
+    for state in _persisted_fold(
+            spark, tmp_dir, batches,
+            lambda m: m.groupBy("kind", "a", "b")
+            .agg(F.sum("m").cast("decimal(38,0)").alias("m"))):
+        n_rows = state.count()
+        if n_rows > 64 * 64 + 64 + 1:    # named, -O-proof invariant
+            raise RuntimeError(
+                f"stream_pca_scatter_maintenance: store grew: {n_rows}")
+    pp = (state.filter(F.col("kind") == "pp")
+          .select("a", "b", F.col("m").alias("spp")))
+    dimsum = (state.filter(F.col("kind") == "dim")
+              .select(F.col("a").alias("dim"),
+                      F.col("m").cast("decimal(28,0)").alias("s")))
+    tot = (state.filter(F.col("kind") == "n")
+           .select(F.col("m").cast("bigint").alias("n")))
+    return principal_component(pp, dimsum, tot)
 
 
 def _pca_stream_oracle() -> str:
@@ -2164,38 +2034,27 @@ _OR["stream_pca_scatter_maintenance"] = _pca_stream_oracle()
     "stream_ols_maintenance",
     oracle=None,   # assigned below: identical to the batch OLS oracle
 )
-def stream_ols_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_temp_store
+def stream_ols_maintenance(spark: SparkSession, sf_dir: str,
+                           tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
     from gmall_211027_flink_spark.operators.aggregates import (
         OLS_MOMENTS, ols_moments, ols_solve)
 
     li = load_table(spark, sf_dir, "lineitem")
-    d = tempfile.mkdtemp(prefix="ols_store_gate_")
-    try:
-        state = None   # single-row decimal moment store
-        for i in range(3):
-            part = ols_moments(li.filter(F.col("l_orderkey") % 3 == i))
-            merged = part if state is None else \
-                state.unionByName(part)
-            state = merged.agg(*[
-                F.sum(c).cast("decimal(38,4)").alias(c)
-                for c in OLS_MOMENTS])
-            state.write.mode("overwrite").parquet(f"{d}/state_{i}")
-            state = spark.read.parquet(f"{d}/state_{i}")
-            n_rows = state.count()
-            if n_rows != 1:    # named, -O-proof invariant (ADVICE r9)
-                raise RuntimeError(
-                    f"stream_ols_maintenance: moment store has "
-                    f"{n_rows} rows, must stay exactly one")
-        out = ols_solve(state)
-        # gate-harness materialization (temp store removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    # single-row decimal moment store
+    batches = (ols_moments(li.filter(F.col("l_orderkey") % 3 == i))
+               for i in range(3))
+    for state in _persisted_fold(
+            spark, tmp_dir, batches,
+            lambda m: m.agg(*[F.sum(c).cast("decimal(38,4)").alias(c)
+                              for c in OLS_MOMENTS])):
+        n_rows = state.count()
+        if n_rows != 1:    # named, -O-proof invariant (ADVICE r9)
+            raise RuntimeError(
+                f"stream_ols_maintenance: moment store has "
+                f"{n_rows} rows, must stay exactly one")
+    return ols_solve(state)
 
 
 def _ols_stream_oracle() -> str:
@@ -2224,10 +2083,9 @@ _OR["stream_ols_maintenance"] = _ols_stream_oracle()
     "stream_hll_maintenance",
     oracle=None,   # assigned below: identical to the batch HLL audit
 )
-def stream_hll_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_temp_store
+def stream_hll_maintenance(spark: SparkSession, sf_dir: str,
+                           tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
     from gmall_211027_flink_spark.operators.sketches import (
         HLL_M, HLL_RHO_CAP, KMV_HEX)
@@ -2244,56 +2102,47 @@ def stream_hll_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id", "bucket",
         F.when(F.col("w") == 0, F.lit(HLL_RHO_CAP))
         .otherwise(F.expr("bit_count((w & -w) - 1) + 1")).alias("r"))
-    d = tempfile.mkdtemp(prefix="hll_store_gate_")
-    try:
-        state = None    # the m-row register table
-        for i in range(3):
-            batch = (rho.filter(F.col("user_id") % 3 == i)
-                     .groupBy("bucket")
-                     .agg(F.max("r").cast("bigint").alias("reg")))
-            merged = batch if state is None else state.unionByName(batch)
-            state = (merged.groupBy("bucket")
-                     .agg(F.max("reg").cast("bigint").alias("reg")))
-            # commit the m-sized state (the store IS the sketch)
-            state.write.mode("overwrite").parquet(f"{d}/state_{i}")
-            state = spark.read.parquet(f"{d}/state_{i}")
-            n = state.count()
-            # constant-state invariant on the production query path —
-            # a named error, NOT assert, so `python -O` can't strip it
-            # (ADVICE r9)
-            if n > HLL_M:
-                raise RuntimeError(
-                    f"stream_hll_maintenance: register state grew to "
-                    f"{n} rows > m={HLL_M}; the max-merge fold must "
-                    f"keep the state at one row per bucket")
-        grid = spark.range(HLL_M).select(F.col("id").alias("bucket"))
-        regs = (grid.join(state, "bucket", "left")
-                .select("bucket", F.coalesce("reg", F.lit(0))
-                        .cast("bigint").alias("reg")))
-        zsum = regs.agg(
-            F.sum(F.expr(f"shiftleft(cast(1 as bigint),"
-                         f" {HLL_RHO_CAP} - cast(reg as int))"))
-            .cast("bigint").alias("z_int"),
-            F.sum(F.when(F.col("reg") == 0, 1).otherwise(0))
-            .cast("bigint").alias("zero_regs"))
-        exact = events.agg(F.count_distinct("user_id").cast("bigint")
-                           .alias("exact_distinct"))
-        alpha = 0.7213 / (1 + 1.079 / HLL_M)
-        z = F.col("z_int").cast("double") / float(1 << HLL_RHO_CAP)
-        out = (zsum.crossJoin(F.broadcast(exact))
-               .select(F.lit(HLL_M).cast("bigint").alias("m"),
-                       "exact_distinct", "zero_regs",
-                       F.round(F.lit(alpha) * HLL_M * HLL_M / z, 6)
-                       .alias("est_raw"),
-                       F.round(F.when(F.col("zero_regs") > 0,
-                                      HLL_M * F.log(F.lit(float(HLL_M))
-                                                    / F.col("zero_regs"))),
-                               6).alias("est_linear")))
-        # gate-harness materialization (temp state removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    # the m-row register table (the store IS the sketch)
+    batches = (rho.filter(F.col("user_id") % 3 == i)
+               .groupBy("bucket")
+               .agg(F.max("r").cast("bigint").alias("reg"))
+               for i in range(3))
+    for state in _persisted_fold(
+            spark, tmp_dir, batches,
+            lambda m: m.groupBy("bucket")
+            .agg(F.max("reg").cast("bigint").alias("reg"))):
+        n = state.count()
+        # constant-state invariant on the production query path —
+        # a named error, NOT assert, so `python -O` can't strip it
+        # (ADVICE r9)
+        if n > HLL_M:
+            raise RuntimeError(
+                f"stream_hll_maintenance: register state grew to "
+                f"{n} rows > m={HLL_M}; the max-merge fold must "
+                f"keep the state at one row per bucket")
+    grid = spark.range(HLL_M).select(F.col("id").alias("bucket"))
+    regs = (grid.join(state, "bucket", "left")
+            .select("bucket", F.coalesce("reg", F.lit(0))
+                    .cast("bigint").alias("reg")))
+    zsum = regs.agg(
+        F.sum(F.expr(f"shiftleft(cast(1 as bigint),"
+                     f" {HLL_RHO_CAP} - cast(reg as int))"))
+        .cast("bigint").alias("z_int"),
+        F.sum(F.when(F.col("reg") == 0, 1).otherwise(0))
+        .cast("bigint").alias("zero_regs"))
+    exact = events.agg(F.count_distinct("user_id").cast("bigint")
+                       .alias("exact_distinct"))
+    alpha = 0.7213 / (1 + 1.079 / HLL_M)
+    z = F.col("z_int").cast("double") / float(1 << HLL_RHO_CAP)
+    return (zsum.crossJoin(F.broadcast(exact))
+            .select(F.lit(HLL_M).cast("bigint").alias("m"),
+                    "exact_distinct", "zero_regs",
+                    F.round(F.lit(alpha) * HLL_M * HLL_M / z, 6)
+                    .alias("est_raw"),
+                    F.round(F.when(F.col("zero_regs") > 0,
+                                   HLL_M * F.log(F.lit(float(HLL_M))
+                                                 / F.col("zero_regs"))),
+                            6).alias("est_linear")))
 
 
 def _hll_stream_oracle() -> str:
@@ -2322,10 +2171,9 @@ _OR["stream_hll_maintenance"] = _hll_stream_oracle()
     "stream_holt_maintenance",
     oracle=None,   # assigned below: identical to the batch Holt oracle
 )
-def stream_holt_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_temp_store
+def stream_holt_maintenance(spark: SparkSession, sf_dir: str,
+                            tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
     from gmall_211027_flink_spark.operators.aggregates import _HOLT_STEP
 
@@ -2342,54 +2190,50 @@ def stream_holt_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut1 = lo + (hi - lo) // 3
     cut2 = lo + 2 * (hi - lo) // 3
     step = _HOLT_STEP.format(D="div")
-    d = tempfile.mkdtemp(prefix="holt_store_gate_")
-    try:
-        state = None   # one (n_weeks, acc) row
-        for i, (a, b) in enumerate(((lo, cut1), (cut1 + 1, cut2),
-                                    (cut2 + 1, hi))):
-            sl = wkly.filter((F.col("wk") >= a) & (F.col("wk") <= b))
-            batch = (sl.agg(
-                F.count("*").cast("bigint").alias("n_batch"),
-                F.expr("sort_array(collect_list(struct(wk, y)))")
-                .alias("series")))
-            if state is None:
-                folded = batch.select(
-                    F.col("n_batch").alias("n_weeks"),
-                    F.expr("aggregate(transform(series, s -> s.y),"
-                           f" CAST(-1 AS BIGINT), (acc, y) -> {step})")
-                    .alias("acc"))
-            else:
-                folded = (batch.crossJoin(F.broadcast(state))
-                          .select(
-                              (F.col("n_weeks") + F.col("n_batch"))
-                              .alias("n_weeks"),
-                              F.expr("aggregate(transform(series,"
-                                     " s -> s.y), acc,"
-                                     f" (acc, y) -> {step})").alias("acc")))
-            # commit the single-row state (the store IS the model)
-            folded.write.mode("overwrite").parquet(f"{d}/state_{i}")
-            state = spark.read.parquet(f"{d}/state_{i}")
-            n_rows = state.count()
-            if n_rows != 1:    # named, -O-proof invariant (ADVICE r9)
-                raise RuntimeError(
-                    f"stream_holt_maintenance: level/trend store has "
-                    f"{n_rows} rows, must stay exactly one packed "
-                    f"BIGINT row")
-        out_state = state.select(
-            "n_weeks",
-            F.expr("acc div 2147483648").alias("l6"),
-            F.expr("acc % 2147483648 - 1073741824").alias("b6"))
-        cols = [F.round(F.col("l6") / 1e6, 6).alias("level"),
-                F.round(F.col("b6") / 1e6, 6).alias("trend")]
-        for h in range(1, 5):
-            cols.append(F.round((F.col("l6") + h * F.col("b6")) / 1e6, 6)
-                        .alias(f"forecast_h{h}"))
-        out = out_state.select("n_weeks", *cols)
-        # gate-harness materialization (temp state removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    # one (n_weeks, acc) row. The fold carries the accumulator across
+    # commits through a cross join, not a union, so it cannot use
+    # _persisted_fold.
+    state = None
+    for i, (a, b) in enumerate(((lo, cut1), (cut1 + 1, cut2),
+                                (cut2 + 1, hi))):
+        sl = wkly.filter((F.col("wk") >= a) & (F.col("wk") <= b))
+        batch = (sl.agg(
+            F.count("*").cast("bigint").alias("n_batch"),
+            F.expr("sort_array(collect_list(struct(wk, y)))")
+            .alias("series")))
+        if state is None:
+            folded = batch.select(
+                F.col("n_batch").alias("n_weeks"),
+                F.expr("aggregate(transform(series, s -> s.y),"
+                       f" CAST(-1 AS BIGINT), (acc, y) -> {step})")
+                .alias("acc"))
+        else:
+            folded = (batch.crossJoin(F.broadcast(state))
+                      .select(
+                          (F.col("n_weeks") + F.col("n_batch"))
+                          .alias("n_weeks"),
+                          F.expr("aggregate(transform(series,"
+                                 " s -> s.y), acc,"
+                                 f" (acc, y) -> {step})").alias("acc")))
+        # commit the single-row state (the store IS the model)
+        folded.write.mode("overwrite").parquet(f"{tmp_dir}/state_{i}")
+        state = spark.read.parquet(f"{tmp_dir}/state_{i}")
+        n_rows = state.count()
+        if n_rows != 1:    # named, -O-proof invariant (ADVICE r9)
+            raise RuntimeError(
+                f"stream_holt_maintenance: level/trend store has "
+                f"{n_rows} rows, must stay exactly one packed "
+                f"BIGINT row")
+    out_state = state.select(
+        "n_weeks",
+        F.expr("acc div 2147483648").alias("l6"),
+        F.expr("acc % 2147483648 - 1073741824").alias("b6"))
+    cols = [F.round(F.col("l6") / 1e6, 6).alias("level"),
+            F.round(F.col("b6") / 1e6, 6).alias("trend")]
+    for h in range(1, 5):
+        cols.append(F.round((F.col("l6") + h * F.col("b6")) / 1e6, 6)
+                    .alias(f"forecast_h{h}"))
+    return out_state.select("n_weeks", *cols)
 
 
 def _holt_stream_oracle() -> str:
@@ -2417,10 +2261,9 @@ _OR["stream_holt_maintenance"] = _holt_stream_oracle()
     "stream_cusum_maintenance",
     oracle=None,   # assigned below: identical to the batch CUSUM oracle
 )
-def stream_cusum_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_temp_store
+def stream_cusum_maintenance(spark: SparkSession, sf_dir: str,
+                             tmp_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from gmall_211027_flink_spark.catalog import load_table
@@ -2435,55 +2278,46 @@ def stream_cusum_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut1 = lo + (hi - lo) // 3
     cut2 = lo + 2 * (hi - lo) // 3
     n_weeks_bound = hi - lo + 1
-    d = tempfile.mkdtemp(prefix="cusum_store_gate_")
-    try:
-        state = None    # the bounded (wk, y) weekly-count table
-        for i, (a, b) in enumerate(((lo, cut1), (cut1 + 1, cut2),
-                                    (cut2 + 1, hi))):
-            batch = (orders.select(wk_col.alias("wk"))
-                     .filter((F.col("wk") >= a) & (F.col("wk") <= b))
-                     .groupBy("wk")
-                     .agg(F.count("*").cast("bigint").alias("y")))
-            merged = batch if state is None else state.unionByName(batch)
-            state = (merged.groupBy("wk")
-                     .agg(F.sum("y").cast("bigint").alias("y")))
-            state.write.mode("overwrite").parquet(f"{d}/state_{i}")
-            state = spark.read.parquet(f"{d}/state_{i}")
-            n = state.count()
-            # bounded-grain invariant, named + -O-proof (ADVICE r9 rule)
-            if n > n_weeks_bound:
-                raise RuntimeError(
-                    f"stream_cusum_maintenance: weekly store grew to "
-                    f"{n} rows > calendar bound {n_weeks_bound}")
-        # final readout from the drained store — the batch CUSUM math
-        w = Window.orderBy("wk")
-        idx = state.select(
-            "wk", "y",
-            F.row_number().over(w).cast("bigint").alias("t"),
-            F.sum("y").over(w.rowsBetween(Window.unboundedPreceding, 0))
-            .cast("bigint").alias("pre"))
-        tot = state.agg(F.count("*").cast("bigint").alias("n"),
-                        F.sum("y").cast("bigint").alias("sy"))
-        cus = (idx.crossJoin(F.broadcast(tot))
-               .withColumn("cus_n", F.col("n") * F.col("pre")
-                           - F.col("t") * F.col("sy")))
-        best = cus.withColumn(
-            "rk", F.row_number().over(
-                Window.orderBy(F.abs("cus_n").desc(), "wk")))
-        out = (best.filter(F.col("rk") == 1)
-               .select(F.col("n").alias("n_weeks"),
-                       F.col("wk").alias("change_wk"),
-                       F.col("t").alias("change_t"),
-                       F.col("cus_n").alias("cusum_scaled"),
-                       (F.floor(F.abs("cus_n").cast("double") / F.col("n")
-                                * F.lit(1000000.0) + F.lit(0.5))
-                        .cast("bigint").cast("double")
-                        / F.lit(1000000.0)).alias("cusum_abs")))
-        # gate-harness materialization (temp store removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    # the bounded (wk, y) weekly-count table
+    batches = (orders.select(wk_col.alias("wk"))
+               .filter((F.col("wk") >= a) & (F.col("wk") <= b))
+               .groupBy("wk")
+               .agg(F.count("*").cast("bigint").alias("y"))
+               for a, b in ((lo, cut1), (cut1 + 1, cut2), (cut2 + 1, hi)))
+    for state in _persisted_fold(
+            spark, tmp_dir, batches,
+            lambda m: m.groupBy("wk")
+            .agg(F.sum("y").cast("bigint").alias("y"))):
+        n = state.count()
+        # bounded-grain invariant, named + -O-proof (ADVICE r9 rule)
+        if n > n_weeks_bound:
+            raise RuntimeError(
+                f"stream_cusum_maintenance: weekly store grew to "
+                f"{n} rows > calendar bound {n_weeks_bound}")
+    # final readout from the drained store — the batch CUSUM math
+    w = Window.orderBy("wk")
+    idx = state.select(
+        "wk", "y",
+        F.row_number().over(w).cast("bigint").alias("t"),
+        F.sum("y").over(w.rowsBetween(Window.unboundedPreceding, 0))
+        .cast("bigint").alias("pre"))
+    tot = state.agg(F.count("*").cast("bigint").alias("n"),
+                    F.sum("y").cast("bigint").alias("sy"))
+    cus = (idx.crossJoin(F.broadcast(tot))
+           .withColumn("cus_n", F.col("n") * F.col("pre")
+                       - F.col("t") * F.col("sy")))
+    best = cus.withColumn(
+        "rk", F.row_number().over(
+            Window.orderBy(F.abs("cus_n").desc(), "wk")))
+    return (best.filter(F.col("rk") == 1)
+            .select(F.col("n").alias("n_weeks"),
+                    F.col("wk").alias("change_wk"),
+                    F.col("t").alias("change_t"),
+                    F.col("cus_n").alias("cusum_scaled"),
+                    (F.floor(F.abs("cus_n").cast("double") / F.col("n")
+                             * F.lit(1000000.0) + F.lit(0.5))
+                     .cast("bigint").cast("double")
+                     / F.lit(1000000.0)).alias("cusum_abs")))
 
 
 def _cusum_weekly_stream_oracle() -> str:
@@ -2508,10 +2342,9 @@ _OR["stream_cusum_maintenance"] = _cusum_weekly_stream_oracle()
     "stream_psi_maintenance",
     oracle=None,   # assigned below: identical to the batch PSI oracle
 )
-def stream_psi_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_temp_store
+def stream_psi_maintenance(spark: SparkSession, sf_dir: str,
+                           tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
     from gmall_211027_flink_spark.plans.behavior import PSI_DECILES
 
@@ -2525,81 +2358,73 @@ def stream_psi_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise ValueError("stream_psi_maintenance: events table is empty")
     mid = (lo + hi) // 2
     late_cut = mid + (hi - mid) // 2     # split the LATE half in two
-    d = tempfile.mkdtemp(prefix="psi_store_gate_")
-    try:
-        # batch 1: the reference window — train + commit the cuts
-        early = ev.filter(F.col("eus") <= mid)
-        cuts = (early.groupBy("event_type")
-                .agg(F.expr(
-                    "percentile(cents, array("
-                    + ", ".join(str(p) for p in PSI_DECILES)
-                    + "))").alias("c")))
-        cuts.write.mode("overwrite").parquet(f"{d}/cuts")
-        cuts = spark.read.parquet(f"{d}/cuts")
-        b_expr = F.lit(1)
-        for i in range(1, 10):
-            b_expr = b_expr + F.expr(f"cast(cents > c[{i - 1}] as int)")
+    # batch 1: the reference window — train + commit the cuts
+    early = ev.filter(F.col("eus") <= mid)
+    cuts = (early.groupBy("event_type")
+            .agg(F.expr(
+                "percentile(cents, array("
+                + ", ".join(str(p) for p in PSI_DECILES)
+                + "))").alias("c")))
+    cuts.write.mode("overwrite").parquet(f"{tmp_dir}/cuts")
+    cuts = spark.read.parquet(f"{tmp_dir}/cuts")
+    b_expr = F.lit(1)
+    for i in range(1, 10):
+        b_expr = b_expr + F.expr(f"cast(cents > c[{i - 1}] as int)")
 
-        def bucket_counts(df, half):
-            return (df.join(F.broadcast(cuts), "event_type")
-                    .select("event_type", b_expr.alias("b"))
-                    .groupBy("event_type", "b")
-                    .agg(F.count("*").cast("bigint").alias("n"))
-                    .withColumn("half", F.lit(half)))
+    def bucket_counts(df, half):
+        return (df.join(F.broadcast(cuts), "event_type")
+                .select("event_type", b_expr.alias("b"))
+                .groupBy("event_type", "b")
+                .agg(F.count("*").cast("bigint").alias("n"))
+                .withColumn("half", F.lit(half)))
 
-        state = bucket_counts(early, 0)
-        state.write.mode("overwrite").parquet(f"{d}/state_0")
-        state = spark.read.parquet(f"{d}/state_0")
-        n_types = cuts.count()
-        for i, (a, b) in enumerate(((mid + 1, late_cut),
-                                    (late_cut + 1, hi)), start=1):
-            batch = ev.filter((F.col("eus") >= a) & (F.col("eus") <= b))
-            merged = state.unionByName(bucket_counts(batch, 1))
-            state = (merged.groupBy("event_type", "b", "half")
-                     .agg(F.sum("n").cast("bigint").alias("n")))
-            state.write.mode("overwrite").parquet(f"{d}/state_{i}")
-            state = spark.read.parquet(f"{d}/state_{i}")
-            rows = state.count()
-            if rows > n_types * 20:   # named, -O-proof invariant
-                raise RuntimeError(
-                    f"stream_psi_maintenance: store grew to {rows} rows"
-                    f" > {n_types * 20} (types x buckets x halves)")
-        # drained readout: the batch PSI math over the store
-        spine = (cuts.select("event_type")
-                 .crossJoin(spark.range(1, 11).select(
-                     F.col("id").cast("int").alias("b"))))
-        counts = (spine.join(state, ["event_type", "b"], "left")
-                  .groupBy("event_type", "b")
-                  .agg((F.coalesce(F.sum(F.when(F.col("half") == 0,
-                                                F.col("n"))),
-                                   F.lit(0)) + 1).cast("bigint")
-                       .alias("c1"),
-                       (F.coalesce(F.sum(F.when(F.col("half") == 1,
-                                                F.col("n"))),
-                                   F.lit(0)) + 1).cast("bigint")
-                       .alias("c2")))
-        tot = counts.groupBy(F.col("event_type").alias("et")).agg(
-            F.sum("c1").cast("bigint").alias("n1"),
-            F.sum("c2").cast("bigint").alias("n2"))
-        p1 = F.col("c1").cast("double") / F.col("n1")
-        p2 = F.col("c2").cast("double") / F.col("n2")
-        terms = (counts.join(F.broadcast(tot),
-                             F.col("event_type") == F.col("et"))
-                 .select("event_type",
-                         F.floor((p2 - p1) * F.log(p2 / p1)
-                                 * F.lit(1000000000.0) + F.lit(0.5))
-                         .cast("bigint").alias("tq")))
-        out = (terms.groupBy("event_type")
-               .agg(F.sum("tq").cast("bigint").alias("psi_q_1e9"))
-               .select("event_type", "psi_q_1e9",
-                       (F.col("psi_q_1e9").cast("double")
-                        / F.lit(1000000000.0)).alias("psi"))
-               .orderBy("event_type"))
-        # gate-harness materialization (temp store removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    n_types = cuts.count()
+    # the reference window's counts (half 0), then the late half's two
+    # slices (half 1) folded into the additive store
+    batches = [bucket_counts(early, 0)] + [
+        bucket_counts(ev.filter((F.col("eus") >= a) & (F.col("eus") <= b)),
+                      1)
+        for a, b in ((mid + 1, late_cut), (late_cut + 1, hi))]
+    for state in _persisted_fold(
+            spark, tmp_dir, batches,
+            lambda m: m.groupBy("event_type", "b", "half")
+            .agg(F.sum("n").cast("bigint").alias("n"))):
+        rows = state.count()
+        if rows > n_types * 20:   # named, -O-proof invariant
+            raise RuntimeError(
+                f"stream_psi_maintenance: store grew to {rows} rows"
+                f" > {n_types * 20} (types x buckets x halves)")
+    # drained readout: the batch PSI math over the store
+    spine = (cuts.select("event_type")
+             .crossJoin(spark.range(1, 11).select(
+                 F.col("id").cast("int").alias("b"))))
+    counts = (spine.join(state, ["event_type", "b"], "left")
+              .groupBy("event_type", "b")
+              .agg((F.coalesce(F.sum(F.when(F.col("half") == 0,
+                                            F.col("n"))),
+                               F.lit(0)) + 1).cast("bigint")
+                   .alias("c1"),
+                   (F.coalesce(F.sum(F.when(F.col("half") == 1,
+                                            F.col("n"))),
+                               F.lit(0)) + 1).cast("bigint")
+                   .alias("c2")))
+    tot = counts.groupBy(F.col("event_type").alias("et")).agg(
+        F.sum("c1").cast("bigint").alias("n1"),
+        F.sum("c2").cast("bigint").alias("n2"))
+    p1 = F.col("c1").cast("double") / F.col("n1")
+    p2 = F.col("c2").cast("double") / F.col("n2")
+    terms = (counts.join(F.broadcast(tot),
+                         F.col("event_type") == F.col("et"))
+             .select("event_type",
+                     F.floor((p2 - p1) * F.log(p2 / p1)
+                             * F.lit(1000000000.0) + F.lit(0.5))
+                     .cast("bigint").alias("tq")))
+    return (terms.groupBy("event_type")
+            .agg(F.sum("tq").cast("bigint").alias("psi_q_1e9"))
+            .select("event_type", "psi_q_1e9",
+                    (F.col("psi_q_1e9").cast("double")
+                     / F.lit(1000000000.0)).alias("psi"))
+            .orderBy("event_type"))
 
 
 def _psi_stream_oracle() -> str:
@@ -2695,12 +2520,11 @@ def _mg_stream_oracle() -> str:
 
 
 @query("stream_mg_heavy_hitters", oracle=_mg_stream_oracle())
-def stream_mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
+@_temp_store
+def stream_mg_heavy_hitters(spark: SparkSession, sf_dir: str,
+                            tmp_dir: str) -> DataFrame:
     """MG_K-counter Misra-Gries heavy-hitter store over 3 calendar
     batch slices, with the one-sided-error audit (see block comment)."""
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window
 
     from gmall_211027_flink_spark.catalog import load_table
@@ -2714,10 +2538,12 @@ def stream_mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut1 = lo + (hi - lo) // 3
     cut2 = lo + 2 * ((hi - lo) // 3)
     slices = ((lo, cut1), (cut1 + 1, cut2), (cut2 + 1, hi))
-    d = tempfile.mkdtemp(prefix="mg_store_gate_")
 
-    def compact(df):
-        r = df.select(
+    def add_and_compact(df):
+        # add the batch counts into the counter set, then compact
+        summed = (df.groupBy("user_id")
+                  .agg(F.sum("c").cast("bigint").alias("c")))
+        r = summed.select(
             "user_id", "c",
             F.row_number().over(
                 Window.orderBy(F.desc("c"), F.asc("user_id"))).alias("rk"))
@@ -2727,34 +2553,22 @@ def stream_mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .filter(F.col("c") > F.col("t"))
                 .select("user_id", (F.col("c") - F.col("t")).alias("c")))
 
-    try:
-        state = None
-        for i, (a, b) in enumerate(slices):
-            batch = (ev.filter((F.col("day") >= a) & (F.col("day") <= b))
-                     .groupBy("user_id")
-                     .agg(F.count("*").cast("bigint").alias("c")))
-            merged = batch if state is None else \
-                (state.unionByName(batch).groupBy("user_id")
-                 .agg(F.sum("c").cast("bigint").alias("c")))
-            state = compact(merged)
-            state.write.mode("overwrite").parquet(f"{d}/state_{i}")
-            state = spark.read.parquet(f"{d}/state_{i}")
-            n = state.count()
-            if n > MG_K:      # bounded-state invariant, -O-proof
-                raise RuntimeError(
-                    f"stream_mg_heavy_hitters: {n} counters > MG_K "
-                    f"{MG_K} — compaction failed")
-        truth = ev.groupBy("user_id").agg(
-            F.count("*").cast("bigint").alias("true_cnt"))
-        out = (state.join(truth, "user_id")
-               .select("user_id", F.col("c").alias("est_cnt"), "true_cnt",
-                       (F.col("true_cnt") - F.col("c"))
-                       .alias("underestimate"))
-               .orderBy(F.desc("est_cnt"), F.asc("user_id")))
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    batches = (ev.filter((F.col("day") >= a) & (F.col("day") <= b))
+               .groupBy("user_id")
+               .agg(F.count("*").cast("bigint").alias("c"))
+               for a, b in slices)
+    for state in _persisted_fold(spark, tmp_dir, batches, add_and_compact):
+        n = state.count()
+        if n > MG_K:      # bounded-state invariant, -O-proof
+            raise RuntimeError(
+                f"stream_mg_heavy_hitters: {n} counters > MG_K "
+                f"{MG_K} — compaction failed")
+    truth = ev.groupBy("user_id").agg(
+        F.count("*").cast("bigint").alias("true_cnt"))
+    return (state.join(truth, "user_id")
+            .select("user_id", F.col("c").alias("est_cnt"), "true_cnt",
+                    (F.col("true_cnt") - F.col("c")).alias("underestimate"))
+            .orderBy(F.desc("est_cnt"), F.asc("user_id")))
 
 
 # ---------------------------------------------------------------------------
@@ -2774,10 +2588,9 @@ def _ams_sign_expr():
 
 
 @query("stream_ams_maintenance", oracle=None)  # assigned below
-def stream_ams_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_temp_store
+def stream_ams_maintenance(spark: SparkSession, sf_dir: str,
+                           tmp_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from gmall_211027_flink_spark.catalog import load_table
@@ -2792,53 +2605,47 @@ def stream_ams_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut1 = lo + (hi - lo) // 3
     cut2 = lo + 2 * ((hi - lo) // 3)
     slices = ((lo, cut1), (cut1 + 1, cut2), (cut2 + 1, hi))
-    d = tempfile.mkdtemp(prefix="ams_store_gate_")
-    try:
-        state = None                  # (j, zj) — K rows, additive
-        for i, (a, b) in enumerate(slices):
-            f = (ev.filter((F.col("day") >= a) & (F.col("day") <= b))
-                 .groupBy("user_id")
-                 .agg(F.count("*").cast("bigint").alias("c")))
-            batch = (f.select("user_id", "c",
-                              F.explode(F.sequence(F.lit(0),
-                                                   F.lit(AMS_K - 1)))
-                              .alias("j"))
-                     .groupBy("j")
-                     .agg(F.sum(F.expr(_ams_sign_expr()) * F.col("c"))
-                          .cast("bigint").alias("zj")))
-            merged = batch if state is None else \
-                (state.unionByName(batch).groupBy("j")
-                 .agg(F.sum("zj").cast("bigint").alias("zj")))
-            merged.write.mode("overwrite").parquet(f"{d}/state_{i}")
-            state = spark.read.parquet(f"{d}/state_{i}")
-            n = state.count()
-            if n > AMS_K:             # bounded-state invariant, -O-proof
-                raise RuntimeError(
-                    f"stream_ams_maintenance: {n} Z rows > K {AMS_K}")
-        grp = (state.groupBy(F.expr("j div 4").alias("g"))
-               .agg(F.sum(F.col("zj") * F.col("zj")).cast("bigint")
-                    .alias("s4")))
-        med = grp.select(
-            "s4",
-            F.row_number().over(Window.orderBy("s4", "g")).alias("rk"))
-        est = med.agg(
-            F.sum(F.when(F.col("rk").isin(2, 3), F.col("s4"))
-                  .otherwise(0)).cast("bigint").alias("mom_x8"))
-        truth = (ev.groupBy("user_id")
-                 .agg(F.count("*").cast("bigint").alias("c"))
-                 .agg(F.sum(F.col("c") * F.col("c")).cast("bigint")
-                      .alias("f2")))
-        out = (est.crossJoin(F.broadcast(truth))
-               .select(F.col("f2").alias("f2_exact"), "mom_x8",
-                       (F.floor(F.col("mom_x8").cast("double") / 8
-                                / F.col("f2") * F.lit(1000000.0)
-                                + F.lit(0.5))
-                        .cast("bigint").cast("double")
-                        / F.lit(1000000.0)).alias("est_over_exact")))
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+
+    def z_partials(a, b):
+        f = (ev.filter((F.col("day") >= a) & (F.col("day") <= b))
+             .groupBy("user_id")
+             .agg(F.count("*").cast("bigint").alias("c")))
+        return (f.select("user_id", "c",
+                         F.explode(F.sequence(F.lit(0), F.lit(AMS_K - 1)))
+                         .alias("j"))
+                .groupBy("j")
+                .agg(F.sum(F.expr(_ams_sign_expr()) * F.col("c"))
+                     .cast("bigint").alias("zj")))
+
+    # (j, zj) — K rows, additive
+    for state in _persisted_fold(
+            spark, tmp_dir, (z_partials(a, b) for a, b in slices),
+            lambda m: m.groupBy("j")
+            .agg(F.sum("zj").cast("bigint").alias("zj"))):
+        n = state.count()
+        if n > AMS_K:             # bounded-state invariant, -O-proof
+            raise RuntimeError(
+                f"stream_ams_maintenance: {n} Z rows > K {AMS_K}")
+    grp = (state.groupBy(F.expr("j div 4").alias("g"))
+           .agg(F.sum(F.col("zj") * F.col("zj")).cast("bigint")
+                .alias("s4")))
+    med = grp.select(
+        "s4",
+        F.row_number().over(Window.orderBy("s4", "g")).alias("rk"))
+    est = med.agg(
+        F.sum(F.when(F.col("rk").isin(2, 3), F.col("s4"))
+              .otherwise(0)).cast("bigint").alias("mom_x8"))
+    truth = (ev.groupBy("user_id")
+             .agg(F.count("*").cast("bigint").alias("c"))
+             .agg(F.sum(F.col("c") * F.col("c")).cast("bigint")
+                  .alias("f2")))
+    return (est.crossJoin(F.broadcast(truth))
+            .select(F.col("f2").alias("f2_exact"), "mom_x8",
+                    (F.floor(F.col("mom_x8").cast("double") / 8
+                             / F.col("f2") * F.lit(1000000.0)
+                             + F.lit(0.5))
+                     .cast("bigint").cast("double")
+                     / F.lit(1000000.0)).alias("est_over_exact")))
 
 
 def _ams_stream_oracle() -> str:
@@ -2867,11 +2674,9 @@ _OR["stream_ams_maintenance"] = _ams_stream_oracle()
     "stream_cs_maintenance",
     oracle=None,   # assigned below: identical to batch Count-Sketch audit
 )
-def stream_cs_maintenance(spark: SparkSession,
-                          sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_temp_store
+def stream_cs_maintenance(spark: SparkSession, sf_dir: str,
+                          tmp_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     from gmall_211027_flink_spark.catalog import load_table
@@ -2888,57 +2693,48 @@ def stream_cs_maintenance(spark: SparkSession,
     sign = F.expr(
         f"1 - 2 * (cast(conv(substring(md5(concat(cast(seed as string),"
         f" ':', token)), 16, 1), 16, 10) as bigint) % 2)")
-    d = tempfile.mkdtemp(prefix="cs_store_gate_")
-    try:
-        store = IncrementalAggStore(
-            f"{d}/store", ["seed", "bucket"], {"cell_val": ("sum", "part")})
-        # mod-3 crawl slices: per-batch partial grids overlap heavily,
-        # so the merge is genuinely additive (not disjoint appends) and
-        # sign cancellation happens ACROSS commits
-        for i in range(3):
-            sl = (docs.filter(F.col("doc_id") % 3 == i)
-                  .select(F.explode(F.split("text", " ")).alias("token"))
-                  .groupBy("token")
-                  .agg(F.count("*").cast("bigint").alias("cnt"))
-                  .crossJoin(F.broadcast(seeds))
-                  .select("seed", bucket.alias("bucket"),
-                          (sign * F.col("cnt")).cast("bigint")
-                          .alias("part")))
-            store.write_batch(sl, i)
-        grid = store.read(spark).select("seed", "bucket", "cell_val")
-        n_cells = grid.count()
-        # constant-state invariant on the production query path — a
-        # named error, NOT assert, so `python -O` can't strip it
-        if n_cells > CS_DEPTH * CS_WIDTH:
-            raise RuntimeError(
-                f"stream_cs_maintenance: grid grew to {n_cells} cells "
-                f"> d*w = {CS_DEPTH * CS_WIDTH}; the (seed, bucket) "
-                f"additive fold must keep the state grid-sized")
-        exact = (docs.select(F.explode(F.split("text", " ")).alias("token"))
-                 .groupBy("token")
-                 .agg(F.count("*").cast("bigint").alias("exact_cnt")))
-        top = (exact.orderBy(F.desc("exact_cnt"), F.asc("token"))
-               .limit(CM_TOPK))
-        probes = (top.crossJoin(F.broadcast(seeds))
-                  .select("token", "exact_cnt", "seed",
-                          bucket.alias("bucket"), sign.alias("s")))
-        est = (probes.join(F.broadcast(grid), ["seed", "bucket"])
-               .select("token", "exact_cnt", "seed",
-                       (F.col("s") * F.col("cell_val")).alias("est")))
-        med = est.select(
-            "token", "exact_cnt", "est",
-            F.row_number().over(Window.partitionBy("token")
-                                .orderBy("est", "seed")).alias("rk"))
-        out = (med.filter(F.col("rk") == (CS_DEPTH + 1) // 2)
-               .select("token", "exact_cnt",
-                       F.col("est").cast("bigint").alias("cs_estimate"),
-                       (F.col("est") - F.col("exact_cnt")).cast("bigint")
-                       .alias("signed_err")))
-        # gate-harness materialization (temp store removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    store = IncrementalAggStore(
+        f"{tmp_dir}/store", ["seed", "bucket"], {"cell_val": ("sum", "part")})
+    # mod-3 crawl slices: per-batch partial grids overlap heavily,
+    # so the merge is genuinely additive (not disjoint appends) and
+    # sign cancellation happens ACROSS commits
+    for i in range(3):
+        sl = (docs.filter(F.col("doc_id") % 3 == i)
+              .select(F.explode(F.split("text", " ")).alias("token"))
+              .groupBy("token")
+              .agg(F.count("*").cast("bigint").alias("cnt"))
+              .crossJoin(F.broadcast(seeds))
+              .select("seed", bucket.alias("bucket"),
+                      (sign * F.col("cnt")).cast("bigint").alias("part")))
+        store.write_batch(sl, i)
+    grid = store.read(spark).select("seed", "bucket", "cell_val")
+    n_cells = grid.count()
+    # constant-state invariant on the production query path — a
+    # named error, NOT assert, so `python -O` can't strip it
+    if n_cells > CS_DEPTH * CS_WIDTH:
+        raise RuntimeError(
+            f"stream_cs_maintenance: grid grew to {n_cells} cells "
+            f"> d*w = {CS_DEPTH * CS_WIDTH}; the (seed, bucket) "
+            f"additive fold must keep the state grid-sized")
+    exact = (docs.select(F.explode(F.split("text", " ")).alias("token"))
+             .groupBy("token")
+             .agg(F.count("*").cast("bigint").alias("exact_cnt")))
+    top = exact.orderBy(F.desc("exact_cnt"), F.asc("token")).limit(CM_TOPK)
+    probes = (top.crossJoin(F.broadcast(seeds))
+              .select("token", "exact_cnt", "seed",
+                      bucket.alias("bucket"), sign.alias("s")))
+    est = (probes.join(F.broadcast(grid), ["seed", "bucket"])
+           .select("token", "exact_cnt", "seed",
+                   (F.col("s") * F.col("cell_val")).alias("est")))
+    med = est.select(
+        "token", "exact_cnt", "est",
+        F.row_number().over(Window.partitionBy("token")
+                            .orderBy("est", "seed")).alias("rk"))
+    return (med.filter(F.col("rk") == (CS_DEPTH + 1) // 2)
+            .select("token", "exact_cnt",
+                    F.col("est").cast("bigint").alias("cs_estimate"),
+                    (F.col("est") - F.col("exact_cnt")).cast("bigint")
+                    .alias("signed_err")))
 
 
 def _cs_stream_oracle() -> str:
@@ -2968,11 +2764,9 @@ _OR["stream_cs_maintenance"] = _cs_stream_oracle()
     "stream_holtwinters_maintenance",
     oracle=None,   # assigned below: identical to the batch HW oracle
 )
-def stream_holtwinters_maintenance(spark: SparkSession,
-                                   sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_temp_store
+def stream_holtwinters_maintenance(spark: SparkSession, sf_dir: str,
+                                   tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.operators.aggregates import (
         _hw_day_spine, _hw_readout, _hw_spark_exprs)
 
@@ -2985,42 +2779,37 @@ def stream_holtwinters_maintenance(spark: SparkSession,
     cut1 = lo + (hi - lo) // 3
     cut2 = lo + 2 * (hi - lo) // 3
     init, merge = _hw_spark_exprs()
-    d = tempfile.mkdtemp(prefix="hw_store_gate_")
-    try:
-        state = None   # one (n_days, acc-struct) row
-        for i, (a, b) in enumerate(((lo, cut1), (cut1 + 1, cut2),
-                                    (cut2 + 1, hi))):
-            sl = spine.filter((F.col("d") >= a) & (F.col("d") <= b))
-            batch = (sl.agg(
-                F.count("*").cast("bigint").alias("n_batch"),
-                F.expr("sort_array(collect_list(struct(d, y)))")
-                .alias("series")))
-            if state is None:
-                folded = batch.select(
-                    F.col("n_batch").alias("n_days"),
-                    F.expr(f"aggregate(series, {init}, {merge})")
-                    .alias("acc"))
-            else:
-                folded = (batch.crossJoin(F.broadcast(state))
-                          .select(
-                              (F.col("n_days") + F.col("n_batch"))
-                              .alias("n_days"),
-                              F.expr(f"aggregate(series, acc, {merge})")
-                              .alias("acc")))
-            # commit the single-row state (the store IS the model)
-            folded.write.mode("overwrite").parquet(f"{d}/state_{i}")
-            state = spark.read.parquet(f"{d}/state_{i}")
-            n_rows = state.count()
-            if n_rows != 1:    # named, -O-proof invariant
-                raise RuntimeError(
-                    f"stream_holtwinters_maintenance: state store has "
-                    f"{n_rows} rows, must stay exactly one struct row")
-        out = _hw_readout(state)
-        # gate-harness materialization (temp state removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    # one (n_days, acc-struct) row. Like the Holt store, the fold
+    # carries the accumulator through a cross join, not a union, so it
+    # cannot use _persisted_fold.
+    state = None
+    for i, (a, b) in enumerate(((lo, cut1), (cut1 + 1, cut2),
+                                (cut2 + 1, hi))):
+        sl = spine.filter((F.col("d") >= a) & (F.col("d") <= b))
+        batch = (sl.agg(
+            F.count("*").cast("bigint").alias("n_batch"),
+            F.expr("sort_array(collect_list(struct(d, y)))")
+            .alias("series")))
+        if state is None:
+            folded = batch.select(
+                F.col("n_batch").alias("n_days"),
+                F.expr(f"aggregate(series, {init}, {merge})").alias("acc"))
+        else:
+            folded = (batch.crossJoin(F.broadcast(state))
+                      .select(
+                          (F.col("n_days") + F.col("n_batch"))
+                          .alias("n_days"),
+                          F.expr(f"aggregate(series, acc, {merge})")
+                          .alias("acc")))
+        # commit the single-row state (the store IS the model)
+        folded.write.mode("overwrite").parquet(f"{tmp_dir}/state_{i}")
+        state = spark.read.parquet(f"{tmp_dir}/state_{i}")
+        n_rows = state.count()
+        if n_rows != 1:    # named, -O-proof invariant
+            raise RuntimeError(
+                f"stream_holtwinters_maintenance: state store has "
+                f"{n_rows} rows, must stay exactly one struct row")
+    return _hw_readout(state)
 
 
 def _hw_stream_oracle() -> str:
@@ -3047,10 +2836,9 @@ _OR["stream_holtwinters_maintenance"] = _hw_stream_oracle()
     "stream_ph_maintenance",
     oracle=None,   # assigned below: identical to the batch PH oracle
 )
-def stream_ph_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_temp_store
+def stream_ph_maintenance(spark: SparkSession, sf_dir: str,
+                          tmp_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from gmall_211027_flink_spark.catalog import load_table
@@ -3067,66 +2855,57 @@ def stream_ph_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut1 = lo + (hi - lo) // 3
     cut2 = lo + 2 * (hi - lo) // 3
     n_weeks_bound = hi - lo + 1
-    d = tempfile.mkdtemp(prefix="ph_store_gate_")
-    try:
-        state = None    # the bounded (wk, y) weekly-count table
-        for i, (a, b) in enumerate(((lo, cut1), (cut1 + 1, cut2),
-                                    (cut2 + 1, hi))):
-            batch = (orders.select(wk_col.alias("wk"))
-                     .filter((F.col("wk") >= a) & (F.col("wk") <= b))
-                     .groupBy("wk")
-                     .agg(F.count("*").cast("bigint").alias("y")))
-            merged = batch if state is None else state.unionByName(batch)
-            state = (merged.groupBy("wk")
-                     .agg(F.sum("y").cast("bigint").alias("y")))
-            state.write.mode("overwrite").parquet(f"{d}/state_{i}")
-            state = spark.read.parquet(f"{d}/state_{i}")
-            n = state.count()
-            # bounded-grain invariant, named + -O-proof
-            if n > n_weeks_bound:
-                raise RuntimeError(
-                    f"stream_ph_maintenance: weekly store grew to "
-                    f"{n} rows > calendar bound {n_weeks_bound}")
-        # final readout from the drained store — the batch PH math
-        w = Window.orderBy("wk")
-        wrun = w.rowsBetween(Window.unboundedPreceding, 0)
-        idx = state.select(
-            "wk", "y",
-            F.row_number().over(w).cast("bigint").alias("t"),
-            F.sum("y").over(wrun).cast("bigint").alias("s"))
-        terms = idx.select(
-            "wk", "t",
-            (F.col("y") * 1000000 - F.expr("(s * 1000000) div t")
-             - PH_DELTA6).alias("term"))
-        wt = Window.orderBy("t")
-        wtrun = wt.rowsBetween(Window.unboundedPreceding, 0)
-        m = terms.select(
-            "wk", "t",
-            F.sum("term").over(wtrun).cast("bigint").alias("mt"))
-        ph = m.select(
-            "wk", "t", "mt",
-            (F.col("mt") - F.min("mt").over(wtrun)).alias("ph_t"))
-        best = ph.select(
-            "wk", "t", "ph_t",
-            F.row_number().over(
-                Window.orderBy(F.desc("ph_t"), F.asc("t"))).alias("rnk"))
-        n_df = state.agg(F.count("*").cast("bigint").alias("n_weeks"))
-        out = (best.filter(F.col("rnk") == 1)
-               .crossJoin(F.broadcast(n_df))
-               .select("n_weeks",
-                       F.col("t").alias("fired_t"),
-                       F.col("wk").alias("fired_wk"),
-                       F.col("ph_t").alias("ph_x1e6"),
-                       (F.floor(F.col("ph_t").cast("double") / 1000000
-                                * F.lit(1000000.0) + F.lit(0.5))
-                        .cast("bigint").cast("double")
-                        / F.lit(1000000.0)).alias("ph_stat"),
-                       (F.col("ph_t") > PH_LAMBDA6).alias("drift_fired")))
-        # gate-harness materialization (temp store removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    # the bounded (wk, y) weekly-count table
+    batches = (orders.select(wk_col.alias("wk"))
+               .filter((F.col("wk") >= a) & (F.col("wk") <= b))
+               .groupBy("wk")
+               .agg(F.count("*").cast("bigint").alias("y"))
+               for a, b in ((lo, cut1), (cut1 + 1, cut2), (cut2 + 1, hi)))
+    for state in _persisted_fold(
+            spark, tmp_dir, batches,
+            lambda m: m.groupBy("wk")
+            .agg(F.sum("y").cast("bigint").alias("y"))):
+        n = state.count()
+        # bounded-grain invariant, named + -O-proof
+        if n > n_weeks_bound:
+            raise RuntimeError(
+                f"stream_ph_maintenance: weekly store grew to "
+                f"{n} rows > calendar bound {n_weeks_bound}")
+    # final readout from the drained store — the batch PH math
+    w = Window.orderBy("wk")
+    wrun = w.rowsBetween(Window.unboundedPreceding, 0)
+    idx = state.select(
+        "wk", "y",
+        F.row_number().over(w).cast("bigint").alias("t"),
+        F.sum("y").over(wrun).cast("bigint").alias("s"))
+    terms = idx.select(
+        "wk", "t",
+        (F.col("y") * 1000000 - F.expr("(s * 1000000) div t")
+         - PH_DELTA6).alias("term"))
+    wt = Window.orderBy("t")
+    wtrun = wt.rowsBetween(Window.unboundedPreceding, 0)
+    m = terms.select(
+        "wk", "t",
+        F.sum("term").over(wtrun).cast("bigint").alias("mt"))
+    ph = m.select(
+        "wk", "t", "mt",
+        (F.col("mt") - F.min("mt").over(wtrun)).alias("ph_t"))
+    best = ph.select(
+        "wk", "t", "ph_t",
+        F.row_number().over(
+            Window.orderBy(F.desc("ph_t"), F.asc("t"))).alias("rnk"))
+    n_df = state.agg(F.count("*").cast("bigint").alias("n_weeks"))
+    return (best.filter(F.col("rnk") == 1)
+            .crossJoin(F.broadcast(n_df))
+            .select("n_weeks",
+                    F.col("t").alias("fired_t"),
+                    F.col("wk").alias("fired_wk"),
+                    F.col("ph_t").alias("ph_x1e6"),
+                    (F.floor(F.col("ph_t").cast("double") / 1000000
+                             * F.lit(1000000.0) + F.lit(0.5))
+                     .cast("bigint").cast("double")
+                     / F.lit(1000000.0)).alias("ph_stat"),
+                    (F.col("ph_t") > PH_LAMBDA6).alias("drift_fired")))
 
 
 def _ph_stream_oracle() -> str:
@@ -3152,50 +2931,41 @@ _OR["stream_ph_maintenance"] = _ph_stream_oracle()
     "stream_theil_maintenance",
     oracle=None,   # assigned below: identical to the batch Theil oracle
 )
-def stream_theil_maintenance(spark: SparkSession,
-                             sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_temp_store
+def stream_theil_maintenance(spark: SparkSession, sf_dir: str,
+                             tmp_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    d = tempfile.mkdtemp(prefix="theil_store_gate_")
-    try:
-        # the additive (d, y) daily-count store — since r14 built by
-        # the ONE shared builder the Cox-Stuart / Mood twins also use
-        state = _drained_daily_count_store(
-            spark, sf_dir, "stream_theil_maintenance", d)
-        # readout from the drained store — the batch Theil's-U math
-        # over the dense spine rebuilt from the store's own bounds
-        days = (state.agg(F.min("d").alias("lo"), F.max("d").alias("hi"))
-                .select(F.explode(F.sequence("lo", "hi")).alias("d")))
-        spine = (days.join(state, "d", "left")
-                 .select("d", F.coalesce("y", F.lit(0)).cast("bigint")
-                         .alias("y")))
-        w = Window.orderBy("d")
-        lagged = spine.select(
-            "d", "y",
-            F.lag("y", 1).over(w).alias("y1"),
-            F.lag("y", 7).over(w).alias("y7"))
-        scored = lagged.filter(F.col("y7").isNotNull())
-        e1 = (F.col("y1") - F.col("y")) * (F.col("y1") - F.col("y"))
-        e7 = (F.col("y7") - F.col("y")) * (F.col("y7") - F.col("y"))
-        agg = scored.agg(
-            F.count("*").cast("bigint").alias("n_scored"),
-            F.sum(e1).cast("bigint").alias("sse_naive"),
-            F.sum(e7).cast("bigint").alias("sse_seasonal"))
-        out = agg.select(
-            "n_scored", "sse_naive", "sse_seasonal",
-            (F.floor(F.sqrt(F.col("sse_seasonal").cast("double")
-                            / F.col("sse_naive").cast("double"))
-                     * F.lit(1000000.0) + F.lit(0.5))
-             .cast("bigint").cast("double") / F.lit(1000000.0))
-            .alias("u2_seasonal_vs_naive"))
-        # gate-harness materialization (temp store removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    # the additive (d, y) daily-count store — since r14 built by
+    # the ONE shared builder the Cox-Stuart / Mood twins also use
+    state = _drained_daily_count_store(
+        spark, sf_dir, "stream_theil_maintenance", tmp_dir)
+    # readout from the drained store — the batch Theil's-U math
+    # over the dense spine rebuilt from the store's own bounds
+    days = (state.agg(F.min("d").alias("lo"), F.max("d").alias("hi"))
+            .select(F.explode(F.sequence("lo", "hi")).alias("d")))
+    spine = (days.join(state, "d", "left")
+             .select("d", F.coalesce("y", F.lit(0)).cast("bigint")
+                     .alias("y")))
+    w = Window.orderBy("d")
+    lagged = spine.select(
+        "d", "y",
+        F.lag("y", 1).over(w).alias("y1"),
+        F.lag("y", 7).over(w).alias("y7"))
+    scored = lagged.filter(F.col("y7").isNotNull())
+    e1 = (F.col("y1") - F.col("y")) * (F.col("y1") - F.col("y"))
+    e7 = (F.col("y7") - F.col("y")) * (F.col("y7") - F.col("y"))
+    agg = scored.agg(
+        F.count("*").cast("bigint").alias("n_scored"),
+        F.sum(e1).cast("bigint").alias("sse_naive"),
+        F.sum(e7).cast("bigint").alias("sse_seasonal"))
+    return agg.select(
+        "n_scored", "sse_naive", "sse_seasonal",
+        (F.floor(F.sqrt(F.col("sse_seasonal").cast("double")
+                        / F.col("sse_naive").cast("double"))
+                 * F.lit(1000000.0) + F.lit(0.5))
+         .cast("bigint").cast("double") / F.lit(1000000.0))
+        .alias("u2_seasonal_vs_naive"))
 
 
 def _theil_stream_oracle() -> str:
@@ -3225,11 +2995,12 @@ _OR["stream_theil_maintenance"] = _theil_stream_oracle()
     "stream_mk_maintenance",
     oracle=None,   # assigned below: identical to the batch seasonal-MK
 )
-def stream_mk_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_temp_store
+def stream_mk_maintenance(spark: SparkSession, sf_dir: str,
+                          tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
+    from gmall_211027_flink_spark.operators.inference import (
+        seasonal_mk_readout)
 
     orders = load_table(spark, sf_dir, "orders")
     d_col = F.datediff("o_orderdate", F.lit("1970-01-01")).cast("bigint")
@@ -3240,40 +3011,28 @@ def stream_mk_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut1 = lo + (hi - lo) // 3
     cut2 = lo + 2 * (hi - lo) // 3
     n_cells_bound = hi - lo + 1       # one (wk, dow) cell per day
-    d = tempfile.mkdtemp(prefix="mk_store_gate_")
-    try:
-        state = None    # the bounded (wk, dw, y) weekly-grain grid
-        for i, (a, b) in enumerate(((lo, cut1), (cut1 + 1, cut2),
-                                    (cut2 + 1, hi))):
-            batch = (orders.select(d_col.alias("dd"))
-                     .filter((F.col("dd") >= a) & (F.col("dd") <= b))
-                     .groupBy(F.floor(F.col("dd") / 7).cast("bigint")
-                              .alias("wk"),
-                              ((F.col("dd") + 4) % 7).alias("dw"))
-                     .agg(F.count("*").cast("bigint").alias("y")))
-            merged = batch if state is None else state.unionByName(batch)
-            state = (merged.groupBy("wk", "dw")
-                     .agg(F.sum("y").cast("bigint").alias("y")))
-            state.write.mode("overwrite").parquet(f"{d}/state_{i}")
-            state = spark.read.parquet(f"{d}/state_{i}")
-            n = state.count()
-            # bounded-grain invariant, named + -O-proof
-            if n > n_cells_bound:
-                raise RuntimeError(
-                    f"stream_mk_maintenance: (wk, dow) store grew to "
-                    f"{n} rows > calendar bound {n_cells_bound}")
-        # readout from the drained store: the SAME readout callable the
-        # batch query uses (operators/inference.py seasonal_mk_readout)
-        # over the store's own grid — the hash-equality against the
-        # shared oracle is structural, not maintained by hand
-        from gmall_211027_flink_spark.operators.inference import (
-            seasonal_mk_readout)
-        out = seasonal_mk_readout(state)
-        # gate-harness materialization (temp store removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    # the bounded (wk, dw, y) weekly-grain grid
+    batches = (orders.select(d_col.alias("dd"))
+               .filter((F.col("dd") >= a) & (F.col("dd") <= b))
+               .groupBy(F.floor(F.col("dd") / 7).cast("bigint").alias("wk"),
+                        ((F.col("dd") + 4) % 7).alias("dw"))
+               .agg(F.count("*").cast("bigint").alias("y"))
+               for a, b in ((lo, cut1), (cut1 + 1, cut2), (cut2 + 1, hi)))
+    for state in _persisted_fold(
+            spark, tmp_dir, batches,
+            lambda m: m.groupBy("wk", "dw")
+            .agg(F.sum("y").cast("bigint").alias("y"))):
+        n = state.count()
+        # bounded-grain invariant, named + -O-proof
+        if n > n_cells_bound:
+            raise RuntimeError(
+                f"stream_mk_maintenance: (wk, dow) store grew to "
+                f"{n} rows > calendar bound {n_cells_bound}")
+    # readout from the drained store: the SAME readout callable the
+    # batch query uses (operators/inference.py seasonal_mk_readout)
+    # over the store's own grid — the hash-equality against the
+    # shared oracle is structural, not maintained by hand
+    return seasonal_mk_readout(state)
 
 
 def _mk_stream_oracle() -> str:
@@ -3319,24 +3078,19 @@ def _drained_weekly_cents_store(spark: SparkSession, sf_dir: str,
     cut1 = lo + (hi - lo) // 3
     cut2 = lo + 2 * (hi - lo) // 3
     n_cells_bound = hi - lo + 1       # one (wk, dow) cell per day
-    state = None
-    for i, (a, b) in enumerate(((lo, cut1), (cut1 + 1, cut2),
-                                (cut2 + 1, hi))):
-        batch = (orders
-                 .select(d_col.alias("dd"), "o_totalprice")
-                 .filter((F.col("dd") >= a) & (F.col("dd") <= b))
-                 .groupBy(F.floor(F.col("dd") / 7).cast("bigint")
-                          .alias("wk"),
-                          ((F.col("dd") + 4) % 7).alias("dw"))
-                 .agg((F.sum(F.col("o_totalprice")
-                             .cast("decimal(18,2)")) * 100)
-                      .cast("decimal(38,0)").cast("bigint")
-                      .alias("cents")))
-        merged = batch if state is None else state.unionByName(batch)
-        state = (merged.groupBy("wk", "dw")
-                 .agg(F.sum("cents").cast("bigint").alias("cents")))
-        state.write.mode("overwrite").parquet(f"{tmp_dir}/state_{i}")
-        state = spark.read.parquet(f"{tmp_dir}/state_{i}")
+    batches = (orders
+               .select(d_col.alias("dd"), "o_totalprice")
+               .filter((F.col("dd") >= a) & (F.col("dd") <= b))
+               .groupBy(F.floor(F.col("dd") / 7).cast("bigint").alias("wk"),
+                        ((F.col("dd") + 4) % 7).alias("dw"))
+               .agg((F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+                     * 100)
+                    .cast("decimal(38,0)").cast("bigint").alias("cents"))
+               for a, b in ((lo, cut1), (cut1 + 1, cut2), (cut2 + 1, hi)))
+    for state in _persisted_fold(
+            spark, tmp_dir, batches,
+            lambda m: m.groupBy("wk", "dw")
+            .agg(F.sum("cents").cast("bigint").alias("cents"))):
         n = state.count()
         # bounded-grain invariant, named + -O-proof
         if n > n_cells_bound:
@@ -3350,25 +3104,15 @@ def _drained_weekly_cents_store(spark: SparkSession, sf_dir: str,
     "stream_durbin_maintenance",
     oracle=None,   # assigned below: identical to the batch Durbin
 )
-def stream_durbin_maintenance(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
+@_temp_store
+def stream_durbin_maintenance(spark: SparkSession, sf_dir: str,
+                              tmp_dir: str) -> DataFrame:
+    # readout from the drained store: the SAME readout callable the
+    # batch query uses (operators/inference.py durbin_readout)
+    from gmall_211027_flink_spark.operators.inference import durbin_readout
 
-    d = tempfile.mkdtemp(prefix="durbin_store_gate_")
-    try:
-        state = _drained_weekly_cents_store(
-            spark, sf_dir, "stream_durbin_maintenance", d)
-        # readout from the drained store: the SAME readout callable the
-        # batch query uses (operators/inference.py durbin_readout)
-        from gmall_211027_flink_spark.operators.inference import (
-            durbin_readout)
-        out = durbin_readout(state)
-        # gate-harness materialization (temp store removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    return durbin_readout(_drained_weekly_cents_store(
+        spark, sf_dir, "stream_durbin_maintenance", tmp_dir))
 
 
 def _durbin_stream_oracle() -> str:
@@ -3400,12 +3144,12 @@ _OR["stream_durbin_maintenance"] = _durbin_stream_oracle()
     "stream_cochran_maintenance",
     oracle=None,   # assigned below: identical to the batch Cochran Q
 )
-def stream_cochran_maintenance(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_temp_store
+def stream_cochran_maintenance(spark: SparkSession, sf_dir: str,
+                               tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
+    from gmall_211027_flink_spark.operators.inference import (
+        COCHRAN_Q_K, cochran_readout)
 
     orders = load_table(spark, sf_dir, "orders")
     d_col = F.datediff("o_orderdate", F.lit("1970-01-01")).cast("bigint")
@@ -3415,41 +3159,26 @@ def stream_cochran_maintenance(spark: SparkSession,
             "stream_cochran_maintenance: orders table has no rows")
     cut1 = lo + (hi - lo) // 3
     cut2 = lo + 2 * (hi - lo) // 3
-    d = tempfile.mkdtemp(prefix="cochran_store_gate_")
-    try:
-        state = None    # the distinct (o_custkey, qoy) incidence set
-        for i, (a, b) in enumerate(((lo, cut1), (cut1 + 1, cut2),
-                                    (cut2 + 1, hi))):
-            batch = (orders
-                     .filter((d_col >= a) & (d_col <= b))
-                     .select(
-                         "o_custkey",
-                         (F.floor((F.month("o_orderdate") - 1) / 3)
-                          .cast("bigint") + 1).alias("qoy"))
-                     .distinct())
-            merged = batch if state is None else state.unionByName(batch)
-            state = merged.distinct()
-            state.write.mode("overwrite").parquet(f"{d}/state_{i}")
-            state = spark.read.parquet(f"{d}/state_{i}")
-            n = state.count()
-            n_cust = state.select("o_custkey").distinct().count()
-            # per-customer incidence bound, named + -O-proof
-            from gmall_211027_flink_spark.operators.inference import (
-                COCHRAN_Q_K)
-            if n > COCHRAN_Q_K * n_cust:
-                raise RuntimeError(
-                    f"stream_cochran_maintenance: incidence store grew "
-                    f"to {n} rows > {COCHRAN_Q_K} x {n_cust} customers")
-        # readout from the drained store: the SAME readout callable the
-        # batch query uses (operators/inference.py cochran_readout)
-        from gmall_211027_flink_spark.operators.inference import (
-            cochran_readout)
-        out = cochran_readout(state)
-        # gate-harness materialization (temp store removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    # the distinct (o_custkey, qoy) incidence set
+    batches = (orders
+               .filter((d_col >= a) & (d_col <= b))
+               .select("o_custkey",
+                       (F.floor((F.month("o_orderdate") - 1) / 3)
+                        .cast("bigint") + 1).alias("qoy"))
+               .distinct()
+               for a, b in ((lo, cut1), (cut1 + 1, cut2), (cut2 + 1, hi)))
+    for state in _persisted_fold(spark, tmp_dir, batches,
+                                 lambda m: m.distinct()):
+        n = state.count()
+        n_cust = state.select("o_custkey").distinct().count()
+        # per-customer incidence bound, named + -O-proof
+        if n > COCHRAN_Q_K * n_cust:
+            raise RuntimeError(
+                f"stream_cochran_maintenance: incidence store grew "
+                f"to {n} rows > {COCHRAN_Q_K} x {n_cust} customers")
+    # readout from the drained store: the SAME readout callable the
+    # batch query uses (operators/inference.py cochran_readout)
+    return cochran_readout(state)
 
 
 def _cochran_stream_oracle() -> str:
@@ -3489,18 +3218,15 @@ def _drained_daily_count_store(spark: SparkSession, sf_dir: str,
     cut1 = lo + (hi - lo) // 3
     cut2 = lo + 2 * (hi - lo) // 3
     n_days_bound = hi - lo + 1
-    state = None
-    for i, (a, b) in enumerate(((lo, cut1), (cut1 + 1, cut2),
-                                (cut2 + 1, hi))):
-        batch = (orders.select(d_col.alias("d"))
-                 .filter((F.col("d") >= a) & (F.col("d") <= b))
-                 .groupBy("d")
-                 .agg(F.count("*").cast("bigint").alias("y")))
-        merged = batch if state is None else state.unionByName(batch)
-        state = (merged.groupBy("d")
-                 .agg(F.sum("y").cast("bigint").alias("y")))
-        state.write.mode("overwrite").parquet(f"{tmp_dir}/state_{i}")
-        state = spark.read.parquet(f"{tmp_dir}/state_{i}")
+    batches = (orders.select(d_col.alias("d"))
+               .filter((F.col("d") >= a) & (F.col("d") <= b))
+               .groupBy("d")
+               .agg(F.count("*").cast("bigint").alias("y"))
+               for a, b in ((lo, cut1), (cut1 + 1, cut2), (cut2 + 1, hi)))
+    for state in _persisted_fold(
+            spark, tmp_dir, batches,
+            lambda m: m.groupBy("d")
+            .agg(F.sum("y").cast("bigint").alias("y"))):
         n = state.count()
         # bounded-grain invariant, named + -O-proof
         if n > n_days_bound:
@@ -3514,23 +3240,14 @@ def _drained_daily_count_store(spark: SparkSession, sf_dir: str,
     "stream_cox_stuart_maintenance",
     oracle=None,   # assigned below: identical to the batch Cox-Stuart
 )
-def stream_cox_stuart_maintenance(spark: SparkSession,
-                                  sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
+@_temp_store
+def stream_cox_stuart_maintenance(spark: SparkSession, sf_dir: str,
+                                  tmp_dir: str) -> DataFrame:
+    from gmall_211027_flink_spark.operators.inference import (
+        cox_stuart_readout)
 
-    d = tempfile.mkdtemp(prefix="coxstuart_store_gate_")
-    try:
-        state = _drained_daily_count_store(
-            spark, sf_dir, "stream_cox_stuart_maintenance", d)
-        from gmall_211027_flink_spark.operators.inference import (
-            cox_stuart_readout)
-        out = cox_stuart_readout(state)
-        # gate-harness materialization (temp store removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    return cox_stuart_readout(_drained_daily_count_store(
+        spark, sf_dir, "stream_cox_stuart_maintenance", tmp_dir))
 
 
 def _cox_stuart_stream_oracle() -> str:
@@ -3547,23 +3264,14 @@ _OR["stream_cox_stuart_maintenance"] = _cox_stuart_stream_oracle()
     "stream_mood_maintenance",
     oracle=None,   # assigned below: identical to the batch Mood median
 )
-def stream_mood_maintenance(spark: SparkSession,
-                            sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
+@_temp_store
+def stream_mood_maintenance(spark: SparkSession, sf_dir: str,
+                            tmp_dir: str) -> DataFrame:
+    from gmall_211027_flink_spark.operators.inference import (
+        mood_median_readout)
 
-    d = tempfile.mkdtemp(prefix="mood_store_gate_")
-    try:
-        state = _drained_daily_count_store(
-            spark, sf_dir, "stream_mood_maintenance", d)
-        from gmall_211027_flink_spark.operators.inference import (
-            mood_median_readout)
-        out = mood_median_readout(state)
-        # gate-harness materialization (temp store removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    return mood_median_readout(_drained_daily_count_store(
+        spark, sf_dir, "stream_mood_maintenance", tmp_dir))
 
 
 def _mood_stream_oracle() -> str:
@@ -3608,23 +3316,14 @@ _OR["stream_mood_maintenance"] = _mood_stream_oracle()
     "stream_ansari_maintenance",
     oracle=None,   # assigned below: identical to the batch Ansari
 )
-def stream_ansari_maintenance(spark: SparkSession,
-                              sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
+@_temp_store
+def stream_ansari_maintenance(spark: SparkSession, sf_dir: str,
+                              tmp_dir: str) -> DataFrame:
+    from gmall_211027_flink_spark.operators.inference import (
+        ansari_bradley_readout)
 
-    d = tempfile.mkdtemp(prefix="ansari_store_gate_")
-    try:
-        state = _drained_daily_count_store(
-            spark, sf_dir, "stream_ansari_maintenance", d)
-        from gmall_211027_flink_spark.operators.inference import (
-            ansari_bradley_readout)
-        out = ansari_bradley_readout(state)
-        # gate-harness materialization (temp store removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    return ansari_bradley_readout(_drained_daily_count_store(
+        spark, sf_dir, "stream_ansari_maintenance", tmp_dir))
 
 
 def _ansari_stream_oracle() -> str:
@@ -3641,23 +3340,14 @@ _OR["stream_ansari_maintenance"] = _ansari_stream_oracle()
     "stream_kendalls_w_maintenance",
     oracle=None,   # assigned below: identical to the batch Kendall W
 )
-def stream_kendalls_w_maintenance(spark: SparkSession,
-                                  sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
+@_temp_store
+def stream_kendalls_w_maintenance(spark: SparkSession, sf_dir: str,
+                                  tmp_dir: str) -> DataFrame:
+    from gmall_211027_flink_spark.operators.inference import (
+        kendalls_w_readout)
 
-    d = tempfile.mkdtemp(prefix="kendallsw_store_gate_")
-    try:
-        state = _drained_weekly_cents_store(
-            spark, sf_dir, "stream_kendalls_w_maintenance", d)
-        from gmall_211027_flink_spark.operators.inference import (
-            kendalls_w_readout)
-        out = kendalls_w_readout(state)
-        # gate-harness materialization (temp store removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    return kendalls_w_readout(_drained_weekly_cents_store(
+        spark, sf_dir, "stream_kendalls_w_maintenance", tmp_dir))
 
 
 def _kendalls_w_stream_oracle() -> str:
@@ -3674,12 +3364,12 @@ _OR["stream_kendalls_w_maintenance"] = _kendalls_w_stream_oracle()
     "stream_hoeffding_maintenance",
     oracle=None,   # assigned below: identical to the batch Hoeffding
 )
-def stream_hoeffding_maintenance(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_temp_store
+def stream_hoeffding_maintenance(spark: SparkSession, sf_dir: str,
+                                 tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
+    from gmall_211027_flink_spark.operators.inference import (
+        hoeffding_readout)
 
     orders = load_table(spark, sf_dir, "orders")
     d_col = F.datediff("o_orderdate", F.lit("1970-01-01")).cast("bigint")
@@ -3690,43 +3380,30 @@ def stream_hoeffding_maintenance(spark: SparkSession,
     cut1 = lo + (hi - lo) // 3
     cut2 = lo + 2 * (hi - lo) // 3
     n_weeks_bound = (hi - lo) // 7 + 2   # calendar weeks spanned
-    d = tempfile.mkdtemp(prefix="hoeffding_store_gate_")
-    try:
-        state = None    # the bounded (wk, x, y) two-measure week grid
-        for i, (a, b) in enumerate(((lo, cut1), (cut1 + 1, cut2),
-                                    (cut2 + 1, hi))):
-            batch = (orders
-                     .select(d_col.alias("dd"), "o_totalprice")
-                     .filter((F.col("dd") >= a) & (F.col("dd") <= b))
-                     .groupBy(F.floor(F.col("dd") / 7).cast("bigint")
-                              .alias("wk"))
-                     .agg(F.count("*").cast("bigint").alias("x"),
-                          (F.sum(F.col("o_totalprice")
-                                 .cast("decimal(18,2)")) * 100)
-                          .cast("decimal(38,0)").cast("bigint")
-                          .alias("y")))
-            merged = batch if state is None else state.unionByName(batch)
-            state = (merged.groupBy("wk")
-                     .agg(F.sum("x").cast("bigint").alias("x"),
-                          F.sum("y").cast("bigint").alias("y")))
-            state.write.mode("overwrite").parquet(f"{d}/state_{i}")
-            state = spark.read.parquet(f"{d}/state_{i}")
-            n = state.count()
-            # bounded-grain invariant, named + -O-proof
-            if n > n_weeks_bound:
-                raise RuntimeError(
-                    f"stream_hoeffding_maintenance: week store grew "
-                    f"to {n} rows > calendar bound {n_weeks_bound}")
-        # readout from the drained store: the SAME readout callable the
-        # batch query uses (operators/inference.py hoeffding_readout)
-        from gmall_211027_flink_spark.operators.inference import (
-            hoeffding_readout)
-        out = hoeffding_readout(state)
-        # gate-harness materialization (temp store removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    # the bounded (wk, x, y) two-measure week grid
+    batches = (orders
+               .select(d_col.alias("dd"), "o_totalprice")
+               .filter((F.col("dd") >= a) & (F.col("dd") <= b))
+               .groupBy(F.floor(F.col("dd") / 7).cast("bigint").alias("wk"))
+               .agg(F.count("*").cast("bigint").alias("x"),
+                    (F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+                     * 100)
+                    .cast("decimal(38,0)").cast("bigint").alias("y"))
+               for a, b in ((lo, cut1), (cut1 + 1, cut2), (cut2 + 1, hi)))
+    for state in _persisted_fold(
+            spark, tmp_dir, batches,
+            lambda m: m.groupBy("wk")
+            .agg(F.sum("x").cast("bigint").alias("x"),
+                 F.sum("y").cast("bigint").alias("y"))):
+        n = state.count()
+        # bounded-grain invariant, named + -O-proof
+        if n > n_weeks_bound:
+            raise RuntimeError(
+                f"stream_hoeffding_maintenance: week store grew "
+                f"to {n} rows > calendar bound {n_weeks_bound}")
+    # readout from the drained store: the SAME readout callable the
+    # batch query uses (operators/inference.py hoeffding_readout)
+    return hoeffding_readout(state)
 
 
 def _hoeffding_stream_oracle() -> str:
@@ -3763,12 +3440,11 @@ _OR["stream_hoeffding_maintenance"] = _hoeffding_stream_oracle()
     "stream_rfm_maintenance",
     oracle=None,   # assigned below: identical to the batch RFM
 )
-def stream_rfm_maintenance(spark: SparkSession,
-                           sf_dir: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+@_temp_store
+def stream_rfm_maintenance(spark: SparkSession, sf_dir: str,
+                           tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
+    from gmall_211027_flink_spark.plans.behavior import rfm_readout
 
     orders = load_table(spark, sf_dir, "orders")
     d_col = F.datediff("o_orderdate", F.lit("1970-01-01")).cast("bigint")
@@ -3779,43 +3455,30 @@ def stream_rfm_maintenance(spark: SparkSession,
     cut1 = lo + (hi - lo) // 3
     cut2 = lo + 2 * (hi - lo) // 3
     n_cust_bound = load_table(spark, sf_dir, "customer").count()
-    d = tempfile.mkdtemp(prefix="rfm_store_gate_")
-    try:
-        state = None    # one (last_order, frequency, monetary)/customer
-        for i, (a, b) in enumerate(((lo, cut1), (cut1 + 1, cut2),
-                                    (cut2 + 1, hi))):
-            batch = (orders
-                     .filter((d_col >= a) & (d_col <= b))
-                     .groupBy("o_custkey")
-                     .agg(F.max("o_orderdate").alias("last_order"),
-                          F.count("*").cast("bigint").alias("frequency"),
-                          F.sum(F.col("o_totalprice")
-                                .cast("decimal(18,2)"))
-                          .cast("decimal(38,2)").alias("monetary")))
-            merged = batch if state is None else state.unionByName(batch)
-            state = (merged.groupBy("o_custkey")
-                     .agg(F.max("last_order").alias("last_order"),
-                          F.sum("frequency").cast("bigint")
-                          .alias("frequency"),
-                          F.sum("monetary").cast("decimal(38,2)")
-                          .alias("monetary")))
-            state.write.mode("overwrite").parquet(f"{d}/state_{i}")
-            state = spark.read.parquet(f"{d}/state_{i}")
-            n = state.count()
-            # customer-grain invariant, named + -O-proof
-            if n > n_cust_bound:
-                raise RuntimeError(
-                    f"stream_rfm_maintenance: customer store grew to "
-                    f"{n} rows > customer-dim bound {n_cust_bound}")
-        # readout from the drained store: the SAME readout callable the
-        # batch query uses (plans/behavior.py rfm_readout)
-        from gmall_211027_flink_spark.plans.behavior import rfm_readout
-        out = rfm_readout(state)
-        # gate-harness materialization (temp store removed in finally)
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    # one (last_order, frequency, monetary) row per customer
+    batches = (orders
+               .filter((d_col >= a) & (d_col <= b))
+               .groupBy("o_custkey")
+               .agg(F.max("o_orderdate").alias("last_order"),
+                    F.count("*").cast("bigint").alias("frequency"),
+                    F.sum(F.col("o_totalprice").cast("decimal(18,2)"))
+                    .cast("decimal(38,2)").alias("monetary"))
+               for a, b in ((lo, cut1), (cut1 + 1, cut2), (cut2 + 1, hi)))
+    for state in _persisted_fold(
+            spark, tmp_dir, batches,
+            lambda m: m.groupBy("o_custkey")
+            .agg(F.max("last_order").alias("last_order"),
+                 F.sum("frequency").cast("bigint").alias("frequency"),
+                 F.sum("monetary").cast("decimal(38,2)").alias("monetary"))):
+        n = state.count()
+        # customer-grain invariant, named + -O-proof
+        if n > n_cust_bound:
+            raise RuntimeError(
+                f"stream_rfm_maintenance: customer store grew to "
+                f"{n} rows > customer-dim bound {n_cust_bound}")
+    # readout from the drained store: the SAME readout callable the
+    # batch query uses (plans/behavior.py rfm_readout)
+    return rfm_readout(state)
 
 
 def _rfm_stream_oracle() -> str:

@@ -70,3 +70,21 @@ def test_no_duplicate_top_level_bindings(path):
         f"{path.relative_to(PKG.parent)}: top-level names bound twice — "
         f"later binding silently shadows the one earlier queries read at "
         f"call time: {dups}")
+
+
+STREAMING = sorted((PKG / "streaming").rglob("*.py"))
+
+
+@pytest.mark.parametrize("path", STREAMING, ids=lambda p: p.stem)
+def test_no_assert_in_streaming_functions(path):
+    """A runtime invariant on a streaming path must raise a named error:
+    ``python -O`` strips ``assert`` statements, so an asserted bound
+    (store size, staged part files) silently stops being checked."""
+    tree = ast.parse(path.read_text())
+    found = [f"{fn.name} line {node.lineno}"
+             for fn in ast.walk(tree)
+             if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+             for node in ast.walk(fn) if isinstance(node, ast.Assert)]
+    assert not found, (
+        f"{path.relative_to(PKG.parent)}: assert in function bodies "
+        f"(stripped by python -O; raise a named RuntimeError): {found}")
