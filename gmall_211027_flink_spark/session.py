@@ -18,6 +18,11 @@ check-then-rename too, and HDFS rename refuses to overwrite). A write
 with ``overwriteIfPossible=true`` onto an existing file keeps that file
 and leaves its temp file beside it, where FileContext would replace it;
 Spark's CheckpointFileManager contract allows this best effort.
+
+Python workers are forked by ``worker_daemon`` (``spark.python.daemon.module``),
+always: on Python < 3.12 it keeps each zip archive's directory across tasks,
+where ``pyspark.daemon``'s workers re-read all of ``pyspark.zip``'s at the
+start of every task (SCALE.md §25).
 """
 
 from __future__ import annotations
@@ -25,6 +30,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+WORKER_DAEMON_MODULE = "gmall_211027_flink_spark.worker_daemon"
 
 
 def get_spark(app_name: str = "gmall_211027_flink_spark",
@@ -70,6 +77,8 @@ def get_spark(app_name: str = "gmall_211027_flink_spark",
         .config("spark.sql.streaming.checkpointFileManagerClass",
                 "org.apache.spark.sql.execution.streaming.checkpointing."
                 "FileSystemBasedCheckpointFileManager")
+        # workers that keep pyspark.zip's directory (module docstring)
+        .config("spark.python.daemon.module", WORKER_DAEMON_MODULE)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

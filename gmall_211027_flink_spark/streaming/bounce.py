@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from gmall_211027_flink_spark.streaming.state import _with_state
+
 _STATE = T.StructType([
     T.StructField("pending_ts", T.DoubleType()),   # epoch seconds of entry
     T.StructField("pending_id", T.LongType()),
@@ -141,18 +143,10 @@ def bounce_verdicts(events: DataFrame, key_col: str = "user_id",
     ``max_us`` and raises on regression rather than mis-sequence.
     """
 
-    def fn(key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
+    def body(key, pdf, state):
         uid = key[0]
-        if state.hasTimedOut:   # no timeouts registered; defensive
-            state.remove()
-            return
         l_us, l_id, l_pg, max_us = (state.get if state.exists
                                     else (None, None, None, None))
-        frames = [p[[us_col, id_col]] for p in pdfs if len(p)]
-        if not frames:
-            return
-        pdf = (frames[0] if len(frames) == 1 else pd.concat(frames))
         pdf = pdf.astype({us_col: "int64", id_col: "int64"}) \
                  .sort_values([us_col, id_col])
         us = pdf[us_col].to_numpy()
@@ -184,7 +178,7 @@ def bounce_verdicts(events: DataFrame, key_col: str = "user_id",
         state.update((int(us[-1]), int(ids[-1]),
                       None if prev_gaps[-1] is None else int(prev_gaps[-1]),
                       int(us[-1])))
-        yield pd.DataFrame({
+        return pd.DataFrame({
             "user_id": np.full(len(us), uid, dtype="int64"),
             "event_id": ids,
             "es_us": us,
@@ -193,9 +187,5 @@ def bounce_verdicts(events: DataFrame, key_col: str = "user_id",
             "resolved": resolved,
         })
 
-    return (
-        events.groupBy(key_col)
-        .applyInPandasWithState(
-            fn, VERDICT_SCHEMA, _VERDICT_STATE, "append",
-            GroupStateTimeout.NoTimeout)
-    )
+    return _with_state(events, key_col, [us_col, id_col], body,
+                       VERDICT_SCHEMA, _VERDICT_STATE, None)

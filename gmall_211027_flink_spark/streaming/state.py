@@ -45,13 +45,14 @@ a 1 ms timer that fires between micro-batches).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from typing import Any
 
 import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
@@ -71,16 +72,77 @@ RECOMMENDED_TTL_MS = {
 }
 
 
-def _timeout_mode(ttl_ms: int | None) -> str:
-    return (GroupStateTimeout.ProcessingTimeTimeout if ttl_ms
-            else GroupStateTimeout.NoTimeout)
-
-
 def _concat(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame | None:
     frames = [p for p in pdfs if len(p)]
     if not frames:
         return None
     return frames[0] if len(frames) == 1 else pd.concat(frames)
+
+
+# body(key, pdf, state) -> rows to emit (or None): the part of a
+# processor that differs; it reads and updates ``state`` itself
+_Body = Callable[[tuple[Any, ...], pd.DataFrame, GroupState],
+                "pd.DataFrame | None"]
+
+
+def _group_fn(body: _Body, ttl_ms: int | None):
+    """The ``applyInPandasWithState`` function around ``body``: a timed-out
+    key has its state removed and emits nothing; any other key's chunks
+    are concatenated into one frame for ``body``, after which the
+    timeout is re-armed (every write re-arms it, like the reference's
+    OnCreateAndWrite TTL)."""
+    def fn(key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame],
+           state: GroupState) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()          # idle key: evict its state
+            return
+        pdf = _concat(pdfs)
+        if pdf is None:
+            return
+        out = body(key, pdf, state)
+        if ttl_ms:
+            state.setTimeoutDuration(ttl_ms)
+        if out is not None and len(out):
+            yield out
+    return fn
+
+
+def _with_state(events: DataFrame, key_col: str, cols: list,
+                body: _Body, output_schema: T.StructType,
+                state_schema: T.StructType,
+                ttl_ms: int | None) -> DataFrame:
+    """``events`` projected to ``key_col`` plus ``cols`` (names or
+    Columns; only these go to Python), grouped by ``key_col`` and run
+    through ``body`` with ``state_schema`` state, armed with a
+    processing-time timeout iff ``ttl_ms``."""
+    named = {c: None for c in (key_col, *cols) if isinstance(c, str)}
+    shipped = [*named, *(c for c in cols if not isinstance(c, str))]
+    timeout = (GroupStateTimeout.ProcessingTimeTimeout if ttl_ms
+               else GroupStateTimeout.NoTimeout)
+    return (events.select(*shipped).groupBy(key_col)
+            .applyInPandasWithState(_group_fn(body, ttl_ms), output_schema,
+                                    state_schema, "append", timeout))
+
+
+def _first_per_day(order_cols: list[str], out_cols: list[str]) -> _Body:
+    """``daily_unique``'s group body: in ``order_cols`` order, emit each
+    row whose ``dt`` day is later than every day before it, carried
+    ``last_seen`` state included."""
+    def body(key, pdf, state):
+        last_seen = state.get[0] if state.exists else None
+        order = np.lexsort([pdf[c].to_numpy() for c in reversed(order_cols)])
+        dt = pdf["dt"].to_numpy()[order]
+        day = dt.astype("datetime64[D]").view(np.int64)
+        # first row of each strictly-increasing day prefix: emit when the
+        # day exceeds everything seen before it (incl. carried state)
+        seen = (np.datetime64(last_seen, "D").view(np.int64)
+                if last_seen is not None else np.iinfo(np.int64).min)
+        prev_max = np.maximum.accumulate(np.concatenate(([seen], day[:-1])))
+        mask = day > prev_max
+        top = day.argmax()
+        state.update((dt[top] if day[top] > seen else last_seen,))
+        return pdf[out_cols].take(order[mask]) if mask.any() else None
+    return body
 
 
 def daily_unique(events: DataFrame, key_col: str, ts_col: str,
@@ -102,38 +164,24 @@ def daily_unique(events: DataFrame, key_col: str, ts_col: str,
     must keep ``None`` (see module docstring).
     """
     out_cols = [f.name for f in output_schema.fields]
-    order_cols = order_cols or [ts_col]
-
-    def fn(key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()          # idle key: evict last-seen date
-            return
-        last_seen = state.get[0] if state.exists else None
-        pdf = _concat(pdfs)
-        if pdf is None:
-            return
-        order = np.lexsort([pdf[c].to_numpy() for c in reversed(order_cols)])
-        dt = pdf["dt"].to_numpy()[order]
-        day = dt.astype("datetime64[D]").view(np.int64)
-        # first row of each strictly-increasing day prefix: emit when the
-        # day exceeds everything seen before it (incl. carried state)
-        seen = (np.datetime64(last_seen, "D").view(np.int64)
-                if last_seen is not None else np.iinfo(np.int64).min)
-        prev_max = np.maximum.accumulate(np.concatenate(([seen], day[:-1])))
-        mask = day > prev_max
-        top = day.argmax()
-        state.update((dt[top] if day[top] > seen else last_seen,))
-        if ttl_ms:
-            state.setTimeoutDuration(ttl_ms)
-        if mask.any():
-            yield pdf[out_cols].take(order[mask])
-
-    return (
-        events.groupBy(key_col)
-        .applyInPandasWithState(
-            fn, output_schema, STATE_SCHEMA, "append", _timeout_mode(ttl_ms))
-    )
+    # only the key, dt, the output and the order columns go to Python; a
+    # timestamp order column goes as int64 unix_micros (same order, and
+    # far cheaper to turn into pandas than datetime64), under a private
+    # name when it is also an output column, which keeps its type
+    types = {f.name: f.dataType for f in events.schema.fields}
+    cols: list = ["dt", *out_cols]
+    order_names = []
+    for i, c in enumerate(order_cols or [ts_col]):
+        if isinstance(types[c], T.TimestampType):
+            name = f"_order{i}" if c in (key_col, "dt", *out_cols) else c
+            cols.append(F.unix_micros(c).alias(name))
+        else:
+            name = c
+            cols.append(c)
+        order_names.append(name)
+    return _with_state(events, key_col, cols,
+                       _first_per_day(order_names, out_cols),
+                       output_schema, STATE_SCHEMA, ttl_ms)
 
 
 def first_wins(events: DataFrame, key_col: str, ts_col: str,
@@ -150,29 +198,14 @@ def first_wins(events: DataFrame, key_col: str, ts_col: str,
     """
     out_cols = [f.name for f in output_schema.fields]
 
-    def fn(key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
+    def body(key, pdf, state):
         if state.exists:
-            if ttl_ms:
-                state.setTimeoutDuration(ttl_ms)
-            return
-        pdf = _concat(pdfs)
-        if pdf is None:
-            return
-        first_row = pdf.sort_values([ts_col]).head(1)
+            return None
         state.update(("seen",))
-        if ttl_ms:
-            state.setTimeoutDuration(ttl_ms)
-        yield first_row[out_cols]
+        return pdf.sort_values([ts_col]).head(1)[out_cols]
 
-    return (
-        events.groupBy(key_col)
-        .applyInPandasWithState(
-            fn, output_schema, STATE_SCHEMA, "append", _timeout_mode(ttl_ms))
-    )
+    return _with_state(events, key_col, [ts_col, *out_cols], body,
+                       output_schema, STATE_SCHEMA, ttl_ms)
 
 
 def new_visitor_fix(events: DataFrame, key_col: str,
@@ -189,15 +222,8 @@ def new_visitor_fix(events: DataFrame, key_col: str,
     """
     out_cols = [f.name for f in output_schema.fields]
 
-    def fn(key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
+    def body(key, pdf, state):
         first_dt = state.get[0] if state.exists else None
-        pdf = _concat(pdfs)
-        if pdf is None:
-            return
         pdf = pdf.sort_values(["dt"]).copy()
         if first_dt is None:
             # backfill: an old user arriving with is_new=0 gets a
@@ -207,15 +233,10 @@ def new_visitor_fix(events: DataFrame, key_col: str,
         mask = (pdf["is_new"] == "1") & (pdf["dt"] > first_dt)
         pdf.loc[mask, "is_new"] = "0"
         state.update((first_dt,))
-        if ttl_ms:
-            state.setTimeoutDuration(ttl_ms)
-        yield pdf[out_cols]
+        return pdf[out_cols]
 
-    return (
-        events.groupBy(key_col)
-        .applyInPandasWithState(
-            fn, output_schema, STATE_SCHEMA, "append", _timeout_mode(ttl_ms))
-    )
+    return _with_state(events, key_col, ["dt", "is_new", *out_cols], body,
+                       output_schema, STATE_SCHEMA, ttl_ms)
 
 
 def backflow(events: DataFrame, key_col: str,
@@ -240,44 +261,29 @@ def backflow(events: DataFrame, key_col: str,
     """
     out_cols = [f.name for f in output_schema.fields]
 
-    def fn(key: tuple[Any, ...], pdfs: Iterator[pd.DataFrame],
-           state: GroupState) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
+    def body(key, pdf, state):
         last_seen = state.get[0] if state.exists else None
-        pdf = _concat(pdfs)
-        if pdf is None:
-            return
         dts = sorted(pdf["dt"].unique())
         if last_seen is not None:
             dts = [d for d in dts if d > last_seen]
         if not dts:
-            if ttl_ms:
-                state.setTimeoutDuration(ttl_ms)
-            return
+            return None
         # consecutive-day gaps over [last_seen?] + new ascending days;
         # position 0 has no predecessor (no emission for it)
         seq = ([last_seen] if last_seen is not None else []) + dts
         gaps = pd.to_datetime(pd.Series(seq)).diff().dt.days
         state.update((dts[-1],))
-        if ttl_ms:
-            state.setTimeoutDuration(ttl_ms)
-        if len(seq) > 1:
-            emit = pd.DataFrame({
-                key_col: key[0],
-                "dt": seq[1:],
-                "gap_days": gaps.iloc[1:].astype("int64").to_numpy(),
-            })
-            out = emit[emit["gap_days"] >= min_gap_days]
-            if len(out):
-                yield out[out_cols]
+        if len(seq) == 1:
+            return None
+        emit = pd.DataFrame({
+            key_col: key[0],
+            "dt": seq[1:],
+            "gap_days": gaps.iloc[1:].astype("int64").to_numpy(),
+        })
+        return emit[emit["gap_days"] >= min_gap_days][out_cols]
 
-    return (
-        events.groupBy(key_col)
-        .applyInPandasWithState(
-            fn, output_schema, STATE_SCHEMA, "append", _timeout_mode(ttl_ms))
-    )
+    return _with_state(events, key_col, ["dt"], body,
+                       output_schema, STATE_SCHEMA, ttl_ms)
 
 
 FUNNEL_STATE_SCHEMA = T.StructType([
@@ -315,15 +321,9 @@ def funnel_levels(events: DataFrame, window_s: int,
     Input must carry (user_id, es, event_id, event_type). Vectorized
     pandas (cummax/shift) — no per-row loops.
     """
-    def fn(key, pdfs, state: GroupState):
-        if state.hasTimedOut:
-            state.remove()
-            return
+    def body(key, pdf, state):
         lv, am, l1, l2, l3, me = (state.get if state.exists
                                   else (None, None, 0, 0, 0, None))
-        pdf = _concat(pdfs)
-        if pdf is None:
-            return
         pdf = pdf.sort_values(["es", "event_id"])
         es = pdf["es"].to_numpy()
         if me is not None and len(es) and int(es[0]) < me:
@@ -362,12 +362,8 @@ def funnel_levels(events: DataFrame, window_s: int,
         if me is not None and new_me is not None:
             new_me = max(new_me, me)
         state.update((new_lv, new_am, l1, l2, l3, new_me))
-        if ttl_ms:
-            state.setTimeoutDuration(ttl_ms)
         level = 3 if l3 else (2 if l2 else (1 if l1 else 0))
-        yield pd.DataFrame({"user_id": [key[0]], "level": [level]})
+        return pd.DataFrame({"user_id": [key[0]], "level": [level]})
 
-    return (events.groupBy("user_id")
-            .applyInPandasWithState(
-                fn, output_schema, FUNNEL_STATE_SCHEMA, "append",
-                _timeout_mode(ttl_ms)))
+    return _with_state(events, "user_id", ["es", "event_id", "event_type"],
+                       body, output_schema, FUNNEL_STATE_SCHEMA, ttl_ms)

@@ -23,3 +23,14 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+def await_stream(q, timeout_s: float = 300) -> None:
+    """Wait for a test stream to finish. A stream still running after
+    ``timeout_s`` is stopped and fails the test, so no test compares a
+    partial sink or leaves its query running for the rest of the session.
+    A stream that failed raises its ``StreamingQueryException`` here."""
+    if not q.awaitTermination(timeout_s):
+        q.stop()
+        pytest.fail(f"stream {q.name or q.id} still running after "
+                    f"{timeout_s} s")

@@ -14,7 +14,7 @@ from gmall_211027_flink_spark.plans.behavior import (
     ads_sequence_match_negation,
     ads_window_funnel,
 )
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, await_stream
 
 
 def _user_events():
@@ -122,7 +122,7 @@ def test_streaming_funnel_state_carries_across_micro_batches(
     name = "funnel_slice_test"
     q = (levels.writeStream.format("memory").queryName(name)
          .outputMode("append").trigger(availableNow=True).start())
-    assert q.awaitTermination(600)
+    await_stream(q, 600)
     assert q.lastProgress["batchId"] >= 2, "expected >= 3 micro-batches"
     got = {r.funnel_level: r.n_users for r in
            (spark.table(name)

@@ -16,6 +16,7 @@ from py4j.protocol import Py4JJavaError
 
 from gmall_211027_flink_spark.streaming.incremental import (
     IncrementalAggStore, run_incremental_agg)
+from tests.conftest import await_stream
 
 MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
 PKG = "org.apache.spark.sql.execution.streaming.checkpointing."
@@ -56,7 +57,7 @@ def _stream(spark, src):
 
 
 def _batch_ids(q) -> list[int]:
-    q.awaitTermination(300)
+    await_stream(q)
     assert q.exception() is None
     return [p["batchId"] for p in q.recentProgress]
 

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gmall_211027_flink_spark.streaming.state import daily_unique
+from tests.conftest import await_stream
 
 OUT_SCHEMA = T.StructType([
     T.StructField("user_id", T.LongType()),
@@ -38,7 +39,7 @@ def _run_once(spark, src, ckpt, out_dir):
     q = (uv.writeStream.format("parquet").option("path", str(out_dir))
          .option("checkpointLocation", str(ckpt))
          .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(300)
+    await_stream(q)
 
 
 def test_state_survives_restart(spark, tmp_path):
@@ -107,7 +108,7 @@ def test_foreachbatch_upsert_restart_processes_each_row_once(spark, tmp_path):
              .writeStream.foreachBatch(sink.foreach_batch())
              .option("checkpointLocation", ckpt)
              .trigger(availableNow=True).start())
-        q.awaitTermination(300)
+        await_stream(q)
 
     write_file("f1.json", [(1, 10, "a1"), (2, 10, "b1")])
     write_file("f2.json", [(1, 20, "a2"), (3, 10, "c1")])

@@ -6,6 +6,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tests.conftest import await_stream
+
 
 def _envelopes(spark, sf_dir):
     """3 envelope rows per order: insert 'N' at t, update to the real
@@ -47,7 +49,7 @@ def test_dim_scd2_job_end_to_end(spark, sf_dir, tmp_path):
     store_path = str(tmp_path / "dim_store")
     q = run_dim_scd2(raw, "order_info", "id", "order_status",
                      store_path, str(tmp_path / "ckpt"))
-    q.awaitTermination(300)
+    await_stream(q)
 
     store = spark.read.parquet(store_path)
     batch_log = dim_changelog(

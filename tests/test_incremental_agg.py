@@ -5,6 +5,8 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from tests.conftest import await_stream
+
 
 def _specs():
     return {"pv_ct": ("count", None),
@@ -53,7 +55,7 @@ def test_incremental_stream_end_to_end(spark, sf_dir, tmp_path):
                       F.col("value").cast("decimal(18,2)").alias("v")))
     store = IncrementalAggStore(str(tmp_path / "dws"), ["k"], _specs())
     q = run_incremental_agg(stream, store, str(tmp_path / "ckpt"))
-    q.awaitTermination(300)
+    await_stream(q)
 
     truth = _batch_truth(
         spark.read.parquet(f"{sf_dir}/events.parquet")

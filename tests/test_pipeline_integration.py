@@ -15,6 +15,7 @@ from gmall_211027_flink_spark.jobs.trade_cart_pipeline import (
     ads_cart_uu, dwd_cart_add, dws_cart_add_uu,
 )
 from gmall_211027_flink_spark.streaming.sinks import ParquetUpsertSink
+from tests.conftest import await_stream
 
 
 def _cdc(i, user, num, day, ts):
@@ -51,7 +52,7 @@ def test_streaming_layers_end_to_end(spark, tmp_path):
     q = (raw.writeStream.foreachBatch(to_dwd)
          .option("checkpointLocation", str(tmp_path / "ckpt"))
          .trigger(availableNow=True).start())
-    q.awaitTermination(300)
+    await_stream(q)
 
     # DWD layer: keyed upsert store, replay compacted by last-wins
     dwd = dwd_store.read(spark)

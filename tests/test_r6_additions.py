@@ -11,6 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from tests.conftest import await_stream
+
 
 def _slice_events(spark, sf_dir, tmp_path, cols):
     """Write events as three event-time slices so maxFilesPerTrigger=1
@@ -49,7 +51,7 @@ def test_bounce_verdicts_multi_batch_equals_batch_plan(
     q = (bounce_verdicts(stream).writeStream.format("memory")
          .queryName(name).outputMode("append")
          .trigger(availableNow=True).start())
-    assert q.awaitTermination(600)
+    await_stream(q, 600)
     assert q.lastProgress["batchId"] >= 2, "expected >= 3 micro-batches"
     events = (spark.table(name)
               .groupBy("user_id", "event_id", "es_us", "prev_gap_us")
@@ -87,7 +89,7 @@ def test_bounce_verdicts_each_event_emitted_and_resolved_once(
     q = (bounce_verdicts(stream).writeStream.format("memory")
          .queryName(name).outputMode("append")
          .trigger(availableNow=True).start())
-    assert q.awaitTermination(600)
+    await_stream(q, 600)
     out = spark.table(name)
     n_events = spark.read.parquet(f"{d}/*.parquet").count()
     assert out.select("event_id").distinct().count() == n_events
@@ -107,7 +109,7 @@ def _stream_should_raise(df, match: str):
          .queryName(f"raise_test_{int(time.time() * 1000)}")
          .outputMode("append").trigger(availableNow=True).start())
     with pytest.raises(StreamingQueryException) as ei:
-        q.awaitTermination(600)
+        await_stream(q, 600)
         raise AssertionError("stream finished; expected failure")
     assert match in str(ei.value)
 

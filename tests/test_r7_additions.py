@@ -11,6 +11,8 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from tests.conftest import await_stream
+
 
 # --------------------------------------------------------------- PNG ------
 
@@ -155,7 +157,7 @@ def test_bounce_tie_with_smaller_id_across_batches_raises(spark):
              .queryName("bounce_tie_t").outputMode("append")
              .trigger(availableNow=True).start())
         with pytest.raises(Exception, match="timestamp tie"):
-            q.awaitTermination(120)
+            await_stream(q, 120)
             if q.exception():
                 raise q.exception()
     finally:

@@ -10,6 +10,8 @@ from datetime import datetime
 
 from pyspark.sql import functions as F
 
+from tests.conftest import await_stream
+
 
 def _log_df(spark, rows):
     return spark.createDataFrame(
@@ -86,7 +88,7 @@ def test_scd2_stream_store_matches_batch_operator(spark, sf_dir, tmp_path):
               .parquet(log_dir))
     store_path = str(tmp_path / "store")
     q = run_scd2_stream(stream, store_path, str(tmp_path / "ckpt"))
-    q.awaitTermination(300)
+    await_stream(q)
 
     store = spark.read.parquet(store_path)
     got = {tuple(r) for r in store.select(
@@ -112,7 +114,7 @@ def test_scd2_stream_replayed_epoch_is_noop(spark, tmp_path):
               .parquet(log_dir))
     store_path = str(tmp_path / "store")
     q = run_scd2_stream(stream, store_path, str(tmp_path / "ckpt"))
-    q.awaitTermination(300)
+    await_stream(q)
     before = _fmt(spark.read.parquet(store_path))
 
     # simulate a crash-replay: a FRESH checkpoint restarts epoch ids at
@@ -121,6 +123,6 @@ def test_scd2_stream_replayed_epoch_is_noop(spark, tmp_path):
                .schema("pk bigint, ts timestamp, seq int, status string")
                .parquet(log_dir))
     q2 = run_scd2_stream(stream2, store_path, str(tmp_path / "ckpt2"))
-    q2.awaitTermination(300)
+    await_stream(q2)
     after = _fmt(spark.read.parquet(store_path))
     assert after == before

@@ -7,6 +7,7 @@ from gmall_211027_flink_spark.streaming.dim_router import (
     TableProcess, route_batch,
 )
 from gmall_211027_flink_spark.streaming.sinks import ParquetUpsertSink
+from tests.conftest import await_stream
 
 
 def test_upsert_sink_last_wins(spark, tmp_path):
@@ -174,7 +175,7 @@ def test_observe_metrics_surface_in_progress(spark, tmp_path):
     q = (stream.writeStream.format("memory")
          .queryName("obs_sink").outputMode("append")
          .trigger(availableNow=True).start())
-    q.awaitTermination(300)
+    await_stream(q)
     observed = [_json.loads(p.json).get("observedMetrics", {}).get("ingest")
                 for p in q.recentProgress]
     observed = [m for m in observed if m]

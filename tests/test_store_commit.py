@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from gmall_211027_flink_spark.streaming.incremental import (
     IncrementalAggStore, run_incremental_agg)
 from gmall_211027_flink_spark.streaming.sinks import ParquetUpsertSink
+from tests.conftest import await_stream
 
 SPECS = {"ct": ("count", None), "vs": ("sum", "v"),
          "lo": ("min", "v"), "hi": ("max", "v")}
@@ -120,7 +121,7 @@ def test_scd2_crash_recording_epoch_replays_once(spark, tmp_path,
     def run():
         stream = (spark.readStream.schema(SCD2_LOG)
                   .parquet(str(tmp_path / "log")))
-        run_scd2_stream(stream, store, ckpt).awaitTermination(300)
+        await_stream(run_scd2_stream(stream, store, ckpt))
 
     with monkeypatch.context() as m:
         _fail_epoch_writes(m)
@@ -211,7 +212,7 @@ def test_incremental_batch_reports_its_rows_once(spark, tmp_path):
               .option("maxFilesPerTrigger", 1).json(str(src)))
     store = IncrementalAggStore(str(tmp_path / "s"), ["k"], SPECS)
     q = run_incremental_agg(stream, store, str(tmp_path / "ckpt"))
-    q.awaitTermination(300)
+    await_stream(q)
     assert [p["numInputRows"] for p in q.recentProgress] == [3, 5]
 
 

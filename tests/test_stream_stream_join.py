@@ -12,11 +12,13 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
+from tests.conftest import await_stream
+
 
 def _run(spark, df, name, mode="append"):
     q = (df.writeStream.format("memory").queryName(name)
          .outputMode(mode).trigger(availableNow=True).start())
-    q.awaitTermination(300)
+    await_stream(q)
     return spark.sql(f"SELECT * FROM {name}")
 
 

@@ -10,8 +10,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from gmall_211027_flink_spark.catalog import load_table
+from tests.conftest import await_stream
 from gmall_211027_flink_spark.streaming.state import (
-    daily_unique, first_wins, new_visitor_fix,
+    _first_per_day, _group_fn, daily_unique, first_wins, new_visitor_fix,
 )
 
 
@@ -24,10 +25,13 @@ def events_stream_path(spark, sf_dir, tmp_path_factory):
     return path
 
 
+def _start(df, name):
+    return (df.writeStream.format("memory").queryName(name)
+            .outputMode("append").trigger(availableNow=True).start())
+
+
 def _run_stream(spark, df, name):
-    q = (df.writeStream.format("memory").queryName(name)
-         .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(300)
+    await_stream(_start(df, name))
     return spark.sql(f"SELECT * FROM {name}")
 
 
@@ -72,16 +76,59 @@ def test_daily_unique_matches_batch(spark, sf_dir, events_stream_path):
     assert got.select("user_id", "dt").distinct().count() == expected.count()
 
 
-class _Capture:
-    """Stands in for a streaming DataFrame: keeps the group function
-    ``daily_unique`` hands to ``applyInPandasWithState``."""
+def _shipped_to_python(q) -> dict[str, str]:
+    """Name -> type of the columns the query's last micro-batch sent to
+    its ``applyInPandasWithState`` processor (the input of the executed
+    FlatMapGroupsInPandasWithState node)."""
+    nodes = [q._jsq.streamingQuery().lastExecution().executedPlan()]
+    while nodes:
+        node = nodes.pop()
+        children = node.children()
+        if node.nodeName() == "FlatMapGroupsInPandasWithState":
+            out = children.apply(0).output()
+            return {out.apply(i).name(): out.apply(i).dataType().typeName()
+                    for i in range(out.size())}
+        nodes += [children.apply(i) for i in range(children.size())]
+    raise LookupError("no FlatMapGroupsInPandasWithState in the plan")
 
-    def groupBy(self, *cols):
-        return self
 
-    def applyInPandasWithState(self, fn, *args):
-        self.fn = fn
-        return self
+def test_daily_unique_ships_only_read_columns(spark, events_stream_path):
+    """Only the key, dt, the output and the order columns go to Python,
+    and a timestamp order column goes as int64 (under a private name
+    when it is also an output column, which keeps its timestamp type).
+    The rows are still each (user, day)'s first in (ts, event_id) order."""
+    from pyspark.sql import Window
+
+    schema = spark.read.parquet(events_stream_path).schema
+    stream = (spark.readStream.schema(schema).parquet(events_stream_path)
+              .withColumn("dt", F.date_format("ts", "yyyy-MM-dd")))
+    out_schema = T.StructType([
+        T.StructField("user_id", T.LongType()),
+        T.StructField("dt", T.StringType()),
+        T.StructField("event_id", T.LongType()),
+    ])
+    q = _start(daily_unique(stream, "user_id", "ts", out_schema,
+                            order_cols=["ts", "event_id"]), "uv_ship")
+    await_stream(q)
+    assert _shipped_to_python(q) == {
+        "user_id": "long", "dt": "string", "event_id": "long", "ts": "long"}
+
+    with_ts = T.StructType([*out_schema.fields,
+                            T.StructField("ts", T.TimestampType())])
+    q = _start(daily_unique(stream, "user_id", "ts", with_ts,
+                            order_cols=["ts", "event_id"]), "uv_ship_ts")
+    await_stream(q)
+    assert _shipped_to_python(q) == {
+        "user_id": "long", "dt": "string", "event_id": "long",
+        "ts": "timestamp", "_order0": "long"}
+    first = Window.partitionBy("user_id", "dt").orderBy("ts", "event_id")
+    want = (spark.read.parquet(events_stream_path)
+            .withColumn("dt", F.date_format("ts", "yyyy-MM-dd"))
+            .withColumn("rn", F.row_number().over(first))
+            .where("rn = 1").select(*with_ts.fieldNames()))
+    got = spark.table("uv_ship_ts")
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0
 
 
 class _State:
@@ -110,14 +157,8 @@ def test_daily_unique_group_body_matches_row_loop():
 
     import pandas as pd
 
-    out_schema = T.StructType([
-        T.StructField("user_id", T.LongType()),
-        T.StructField("dt", T.StringType()),
-        T.StructField("event_id", T.LongType()),
-    ])
-    cap = _Capture()
-    daily_unique(cap, "user_id", "ts", out_schema,
-                 order_cols=["ts", "event_id"])
+    fn = _group_fn(_first_per_day(["ts", "event_id"],
+                                  ["user_id", "dt", "event_id"]), None)
     rng = random.Random(7)
     base = pd.Timestamp("2024-01-01")
     for _ in range(300):
@@ -139,8 +180,10 @@ def test_daily_unique_group_body_matches_row_loop():
                 hi = r.dt
 
         state = _State(last_seen)
-        chunks = [pdf.iloc[i:i + 6] for i in range(0, n, 6)]
-        got = [tuple(r) for out in cap.fn((1,), iter(chunks), state)
+        # the timestamp order column reaches Python as int64 unix_micros
+        shipped = pdf.assign(ts=pdf["ts"].astype("int64") // 1000)
+        chunks = [shipped.iloc[i:i + 6] for i in range(0, n, 6)]
+        got = [tuple(r) for out in fn((1,), iter(chunks), state)
                for r in out.itertuples(index=False)]
         assert (got, state.value) == (want, hi)
 

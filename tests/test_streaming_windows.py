@@ -12,6 +12,7 @@ from gmall_211027_flink_spark.catalog import load_table
 from gmall_211027_flink_spark.sources.files import stream_parquet
 from gmall_211027_flink_spark.streaming.bounce import detect_bounces
 from gmall_211027_flink_spark.streaming.windows import session_agg, tumbling_agg
+from tests.conftest import await_stream
 
 
 @pytest.fixture(scope="module")
@@ -24,7 +25,7 @@ def events_path(spark, sf_dir, tmp_path_factory):
 def _run(spark, df, name, mode="complete"):
     q = (df.writeStream.format("memory").queryName(name)
          .outputMode(mode).trigger(availableNow=True).start())
-    q.awaitTermination(300)
+    await_stream(q)
     return spark.sql(f"SELECT * FROM {name}")
 
 
@@ -164,7 +165,7 @@ def test_late_data_dropped_after_watermark(spark, tmp_path):
     name = "late_drop_sink"
     q = (stream.writeStream.format("memory").queryName(name)
          .outputMode("append").trigger(availableNow=True).start())
-    q.awaitTermination(300)
+    await_stream(q)
     rows = {(r["stt"], r["k"]): r["count"]
             for r in spark.sql(f"SELECT * FROM {name}").collect()}
     # the 10:00 window finalized with 2 rows; the late third row was dropped

@@ -22,6 +22,7 @@ from pyspark.sql import types as T
 
 from gmall_211027_flink_spark.catalog import load_table, normalize_event_ts
 from gmall_211027_flink_spark.sources.files import stream_events
+from tests.conftest import await_stream
 
 _TS = [
     dt.datetime(2024, 1, 1, 0, 0, 0, 250000),
@@ -78,7 +79,7 @@ def test_stream_events_normalizes_all_encodings(spark, encoded_dir):
     q = (wm.groupBy("event_type").count()
          .writeStream.format("memory").queryName("ts_norm_smoke")
          .outputMode("complete").trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    await_stream(q, 120)
     rows = spark.sql(
         "select sum(count) c from ts_norm_smoke").collect()[0][0]
     assert rows == 3
