@@ -15,7 +15,9 @@ import json
 import os
 import sys
 import time
+from collections.abc import Callable
 from pathlib import Path
+from typing import Any, NamedTuple
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
@@ -74,24 +76,12 @@ def main() -> None:
     hl_c0, hl_s0 = _jvm_cpu_seconds(), _host_steal_seconds()
     for name in names:
         spark.sparkContext.setJobDescription(f"bench headline: {name}")
-        best = float("inf")
-        best_cpu = best_steal = best_gc = 0.0
-        for _ in range(3):
-            c0, s0 = _jvm_cpu_seconds(), _host_steal_seconds()
-            g0 = _jvm_gc_seconds(spark)
-            t0 = time.perf_counter()
-            df = QUERIES[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            wall = time.perf_counter() - t0
-            if wall < best:
-                best = wall
-                best_cpu = _jvm_cpu_seconds() - c0
-                best_steal = _host_steal_seconds() - s0
-                best_gc = _jvm_gc_seconds(spark) - g0
-        timings[name] = round(best, 3)
-        q_cpu[name] = round(best_cpu, 3)
-        q_steal[name] = round(best_steal, 3)
-        q_gc[name] = round(best_gc, 3)
+        best = _best_of(spark, 3, lambda: QUERIES[name](spark, sf_dir)
+                        .write.format("noop").mode("overwrite").save())
+        timings[name] = round(best.wall, 3)
+        q_cpu[name] = round(best.cpu, 3)
+        q_steal[name] = round(best.steal, 3)
+        q_gc[name] = round(best.gc, 3)
         # untimed sanity check: a headline query over empty output
         # would time nothing
         if QUERIES[name](spark, sf_dir).count() == 0:
@@ -109,9 +99,9 @@ def main() -> None:
     spark.catalog.clearCache()
     scale = _dedup_scale_probe(spark, sf_dir)
     spark.catalog.clearCache()
-    tpch_scale = _tpch_scale_probe(spark, sf_dir)
+    tpch_scale = _fact_scale_probe(spark, sf_dir, TPCH_PROBE_QUERIES)
     spark.catalog.clearCache()
-    daygrain_scale = _daygrain_scale_probe(spark, sf_dir)
+    daygrain_scale = _fact_scale_probe(spark, sf_dir, DAYGRAIN_PROBE_QUERIES)
     spark.catalog.clearCache()
     grid_rank_ab = _grid_rank_probe(spark, sf_dir)
 
@@ -324,23 +314,12 @@ def _dedup_scale_probe(spark, sf_dir: str) -> dict:
     steal_s: dict[str, float] = {}
     gc_s: dict[str, float] = {}
     for name in SCALE_QUERIES + ANN_SCALE_QUERIES + BEHAVIOR_SCALE_QUERIES:
-        best = float("inf")
-        best_cpu = best_steal = best_gc = 0.0
-        for _ in range(3):
-            c0, s0 = _jvm_cpu_seconds(), _host_steal_seconds()
-            g0 = _jvm_gc_seconds(spark)
-            t0 = time.perf_counter()
-            QUERIES[name](spark, probe_dir).count()
-            wall = time.perf_counter() - t0
-            if wall < best:
-                best = wall
-                best_cpu = _jvm_cpu_seconds() - c0
-                best_steal = _host_steal_seconds() - s0
-                best_gc = _jvm_gc_seconds(spark) - g0
-        out[name] = round(best, 3)
-        cpu_s[name] = round(best_cpu, 3)
-        steal_s[name] = round(best_steal, 3)
-        gc_s[name] = round(best_gc, 3)
+        best = _best_of(spark, 3,
+                        lambda: QUERIES[name](spark, probe_dir).count())
+        out[name] = round(best.wall, 3)
+        cpu_s[name] = round(best.cpu, 3)
+        steal_s[name] = round(best.steal, 3)
+        gc_s[name] = round(best.gc, 3)
     out["cpu_s"] = cpu_s
     out["steal_s"] = steal_s
     out["gc_s"] = gc_s
@@ -348,18 +327,10 @@ def _dedup_scale_probe(spark, sf_dir: str) -> dict:
     # set), so the artifact carries both ends of the scaling line
     for name in BEHAVIOR_SCALE_QUERIES + ["embedding_pca_power_iteration",
                                           "dedup_cdc_chunking"]:
-        best = float("inf")
-        best_cpu = 0.0
-        for _ in range(3):
-            c0 = _jvm_cpu_seconds()
-            t0 = time.perf_counter()
-            QUERIES[name](spark, sf_dir).count()
-            wall = time.perf_counter() - t0
-            if wall < best:
-                best = wall
-                best_cpu = _jvm_cpu_seconds() - c0
-        out[f"{name}_1x"] = round(best, 3)
-        cpu_s[f"{name}_1x"] = round(best_cpu, 3)
+        best = _best_of(spark, 3,
+                        lambda: QUERIES[name](spark, sf_dir).count())
+        out[f"{name}_1x"] = round(best.wall, 3)
+        cpu_s[f"{name}_1x"] = round(best.cpu, 3)
     out["runs"] = 3
     out["rows"] = spark.read.parquet(docs_path).count()
     out["emb_rows"] = spark.read.parquet(emb_path).count()
@@ -374,20 +345,11 @@ def _dedup_scale_probe(spark, sf_dir: str) -> dict:
     # 1.6 s / 3.8 s / ~12 s at 1x/10x/100x — per-char scan stays linear,
     # fixed overheads amortize)
     for name in ("dedup_exact", "ann_lsh_bucketed", "dedup_cdc_chunking"):
-        best = float("inf")
-        best_cpu = best_steal = 0.0
-        for _ in range(2):
-            c0, s0 = _jvm_cpu_seconds(), _host_steal_seconds()
-            t0 = time.perf_counter()
-            QUERIES[name](spark, probe100).count()
-            wall = time.perf_counter() - t0
-            if wall < best:
-                best = wall
-                best_cpu = _jvm_cpu_seconds() - c0
-                best_steal = _host_steal_seconds() - s0
-        out[f"{name}_100x"] = round(best, 3)
-        cpu_s[f"{name}_100x"] = round(best_cpu, 3)
-        steal_s[f"{name}_100x"] = round(best_steal, 3)
+        best = _best_of(spark, 2,
+                        lambda: QUERIES[name](spark, probe100).count())
+        out[f"{name}_100x"] = round(best.wall, 3)
+        cpu_s[f"{name}_100x"] = round(best.cpu, 3)
+        steal_s[f"{name}_100x"] = round(best.steal, 3)
     # AQE-vs-manual-salt on the same hot-key corpus (VERDICT r7 #5):
     # times the UNSALTED shuffle join under (a) AQE defaults and (b)
     # AQE skew-join with thresholds scaled to probe size, next to the
@@ -478,88 +440,72 @@ def ensure_tpch_scale_corpus(spark, sf_dir: str,
     return probe_dir
 
 
-def _tpch_scale_probe(spark, sf_dir: str) -> dict:
-    """Decade line for the core SQL family: the dedup/ANN/event probes
-    measure the beyond-reference operators; this measures whether the
-    reference-parity JOIN/AGG plans themselves scale linearly when the
-    FACTS grow 10x against fixed dims (scan-agg q1, topk join q3, 6-way
-    join q5, heaviest join-agg q9, fact-fact semi q18, two-nation flow
-    q7, triple-lineitem semi/anti q21 — every multi-join class).
-    Sub-linear wall growth is expected at this size (fixed costs
-    amortize); anything super-linear flags a plan that broke its
-    broadcast/pushdown bet."""
-    probe_dir = ensure_tpch_scale_corpus(spark, sf_dir)
-    out: dict[str, object] = {}
-    for name in TPCH_PROBE_QUERIES:
-        row: dict[str, float] = {}
-        for label, d in (("1x", sf_dir), ("10x", probe_dir)):
-            best, best_cpu = float("inf"), 0.0
-            for _ in range(2):
-                c0 = _jvm_cpu_seconds()
-                t0 = time.perf_counter()
-                QUERIES[name](spark, d).count()
-                wall = time.perf_counter() - t0
-                if wall < best:
-                    best, best_cpu = wall, _jvm_cpu_seconds() - c0
-            row[f"wall_{label}"] = round(best, 3)
-            row[f"cpu_{label}"] = round(best_cpu, 2)
-        row["wall_ratio"] = round(row["wall_10x"]
-                                  / max(row["wall_1x"], 1e-9), 2)
-        out[name] = row
-    return out
-
-
 DAYGRAIN_PROBE_QUERIES = ["stats_durbin", "stats_cochran_q",
                           "stats_seasonal_mann_kendall"]
 
 
-def _daygrain_scale_probe(spark, sf_dir: str) -> dict:
-    """Decade line for the DAY-GRAIN CONTRACT itself (r13): the
-    within-block / trend / incidence stats aggregate to calendar- or
-    customer-bounded grids before any window or self-join, so when the
-    FACTS grow 10x (same replica as _tpch_scale_probe: orders
-    replicated on shifted keys, dates/custkeys unchanged) the post-scan
-    math is CONSTANT — wall should grow far sub-linearly (scan-bound),
-    unlike a per-row window which would grow 10x+.  Anything
-    super-linear here means a stat leaked row-grain work past its
-    grid aggregate."""
+def _fact_scale_probe(spark, sf_dir: str, names: list[str]) -> dict:
+    """Decade line over the 10x fact replica (orders and lineitem grow,
+    dims don't): min-of-2 wall and cpu of each query at 1x and 10x, plus
+    their wall ratio. Sub-linear wall growth is expected at this size
+    (fixed costs amortize); anything super-linear flags a plan that broke
+    its bet.
+
+    - ``TPCH_PROBE_QUERIES``: the reference-parity JOIN/AGG plans (scan-agg
+      q1, topk join q3, 6-way join q5, heaviest join-agg q9, fact-fact
+      semi q18, two-nation flow q7, triple-lineitem semi/anti q21 — every
+      multi-join class) must keep their broadcast/pushdown bet.
+    - ``DAYGRAIN_PROBE_QUERIES`` (r13): the within-block / trend /
+      incidence stats aggregate to calendar- or customer-bounded grids
+      before any window or self-join, so the post-scan math is constant
+      and wall should grow far sub-linearly (scan-bound); super-linear
+      means a stat leaked row-grain work past its grid aggregate."""
     probe_dir = ensure_tpch_scale_corpus(spark, sf_dir)
     out: dict[str, object] = {}
-    for name in DAYGRAIN_PROBE_QUERIES:
+    for name in names:
         row: dict[str, float] = {}
         for label, d in (("1x", sf_dir), ("10x", probe_dir)):
-            best, best_cpu = float("inf"), 0.0
-            for _ in range(2):
-                c0 = _jvm_cpu_seconds()
-                t0 = time.perf_counter()
-                QUERIES[name](spark, d).count()
-                wall = time.perf_counter() - t0
-                if wall < best:
-                    best, best_cpu = wall, _jvm_cpu_seconds() - c0
-            row[f"wall_{label}"] = round(best, 3)
-            row[f"cpu_{label}"] = round(best_cpu, 2)
+            best = _best_of(spark, 2, lambda: QUERIES[name](spark, d).count())
+            row[f"wall_{label}"] = round(best.wall, 3)
+            row[f"cpu_{label}"] = round(best.cpu, 2)
         row["wall_ratio"] = round(row["wall_10x"]
                                   / max(row["wall_1x"], 1e-9), 2)
         out[name] = row
     return out
+
+
+class _Best(NamedTuple):
+    wall: float
+    cpu: float
+    steal: float
+    gc: float
+    result: Any
+
+
+def _best_of(spark, n: int, fn: Callable[[], Any]) -> _Best:
+    """Run ``fn`` ``n`` times and return the min-wall run: its wall, and
+    the JVM cpu, host steal and JVM gc seconds spent around it, with what
+    ``fn`` returned. Only ``fn`` is inside the wall timer."""
+    best = None
+    for _ in range(n):
+        g0 = _jvm_gc_seconds(spark)
+        c0, s0 = _jvm_cpu_seconds(), _host_steal_seconds()
+        t0 = time.perf_counter()
+        result = fn()
+        wall = time.perf_counter() - t0
+        if best is None or wall < best.wall:
+            best = _Best(wall, _jvm_cpu_seconds() - c0,
+                         _host_steal_seconds() - s0,
+                         _jvm_gc_seconds(spark) - g0, result)
+    return best
 
 
 def _min3(spark, fn) -> dict:
     """min-of-3 wall + cpu/gc for the min-wall run (same methodology as
     the headline loop)."""
-    best = float("inf")
-    best_cpu = best_gc = 0.0
-    for _ in range(3):
-        c0, g0 = _jvm_cpu_seconds(), _jvm_gc_seconds(spark)
-        t0 = time.perf_counter()
-        fn()
-        wall = time.perf_counter() - t0
-        if wall < best:
-            best = wall
-            best_cpu = _jvm_cpu_seconds() - c0
-            best_gc = _jvm_gc_seconds(spark) - g0
-    return {"wall_s": round(best, 3), "cpu_s": round(best_cpu, 3),
-            "gc_s": round(best_gc, 3)}
+    best = _best_of(spark, 3, fn)
+    return {"wall_s": round(best.wall, 3), "cpu_s": round(best.cpu, 3),
+            "gc_s": round(best.gc, 3)}
 
 
 def _aqe_vs_salt_probe(spark, probe_dir: str) -> dict:
@@ -738,18 +684,11 @@ def _grid_rank_probe(spark, sf_dir: str) -> dict:
                     Window.orderBy("o_totalprice", "o_orderkey"))
                 .cast("bigint").alias("rk"))),
         ):
-            best, best_cpu = float("inf"), 0.0
-            for _ in range(2):
-                c0 = _jvm_cpu_seconds()
-                t0 = time.perf_counter()
-                row = (ranked.filter(F.col("rk") == k_med)
-                       .select("o_totalprice").first())
-                wall = time.perf_counter() - t0
-                if wall < best:
-                    best, best_cpu = wall, _jvm_cpu_seconds() - c0
-            answers[name] = row["o_totalprice"]
-            out[f"{name}_wall_{label}"] = round(best, 3)
-            out[f"{name}_cpu_{label}"] = round(best_cpu, 2)
+            best = _best_of(spark, 2, lambda: ranked.filter(
+                F.col("rk") == k_med).select("o_totalprice").first())
+            answers[name] = best.result["o_totalprice"]
+            out[f"{name}_wall_{label}"] = round(best.wall, 3)
+            out[f"{name}_cpu_{label}"] = round(best.cpu, 2)
         if answers["two_level"] != answers["single_task"]:
             raise RuntimeError(
                 f"grid_rank probe: median mismatch at {label}: "

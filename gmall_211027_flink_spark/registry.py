@@ -7,12 +7,17 @@ This is the single source for ``__spark_entry__.queries()`` /
 
 from __future__ import annotations
 
+import json
+import re
 from collections.abc import Callable
+from pathlib import Path
 from typing import Any
 
 QUERIES: dict[str, Callable[..., Any]] = {}
 ORACLES: dict[str, str] = {}
 BENCH_QUERIES: list[str] = []   # headline queries timed by bench.py
+# The correctness gate's per-round results, committed beside the package.
+_EVIDENCE_DIR = Path(__file__).resolve().parent.parent
 
 
 def query(name: str, oracle: str | None = None, bench: bool = False):
@@ -42,460 +47,36 @@ def query(name: str, oracle: str | None = None, bench: bool = False):
     return deco
 
 
-# Queries with green driver CORRECTNESS rows (rows+schema+hash).
-# The driver's gate samples the first 50 registration-order entries, so
-# queries WITHOUT driver evidence must register first each round; these
-# already-proven ones go last.  Keep this list append-only across rounds
-# (r1 block, then r2 block), EXCEPT names moved to _REVERIFY below.
-_DRIVER_PROVEN: tuple[str, ...] = (
-    # round 1 (CORRECTNESS_r01.json).  The five r1-vintage names rotated
-    # to _REVERIFY in round 8 (q1_pricing_summary, dim_snowflake_enrich,
-    # dws_province_order_window, rank_topk_events_per_user,
-    # dedup_minhash_lsh) re-passed in CORRECTNESS_r08 and are folded back
-    # in.  Round 9 rotates the NEXT-oldest five (ads_gmv_by_day,
-    # dws_tumble_by_type, dwd_order_graph_join, dwd_left_join_returns,
-    # q3_shipping_priority) plus two STREAMING names (the streaming proofs
-    # were 5-6 rounds old and exercise a different engine path).
-    "q1_pricing_summary", "dim_snowflake_enrich",
-    "dws_province_order_window", "rank_topk_events_per_user",
-    # (dedup_minhash_lsh moved to _REVERIFY round 16: verify-side arrs
-    #  materialization changed this round — real code change -> re-gate)
-    # (the ENTIRE remaining r1 block — ads_conditional_agg through
-    #  dedup_cluster_canonical, 25 names — rotated to _REVERIFY round 12;
-    #  the five r11 canaries range_join_price_band / q18_large_orders /
-    #  dedup_first_per_user_day / dedup_last_per_user / dws_daily_uv
-    #  re-passed in CORRECTNESS_r11 and fold into the r11 block below)
-    # round 2 (CORRECTNESS_r02.json, 44 green rows; the 3 oldest names
-    # dedup_ngram_jaccard_capped / ann_cosine_topk /
-    # ann_cosine_topk_pandas rotated to _REVERIFY round 12 — the five
-    # text_* names and the ANN bucketed/IVF/near-dup trio were in the
-    # r12 rotation too, but the round's 20 new queries reclaimed their
-    # window slots, so they stay proven on their r2 evidence)
-    # (the r2 block's 33 remaining r2-evidence names — ann_lsh_bucketed
-    #  through cdc_envelope_roundtrip — rotated to _REVERIFY round 13:
-    #  the oldest driver evidence left on the books after the r12
-    #  rotation retired the r1 block)
-    # multimodal_decode_meta REWORKED in r9 (fake decode -> real
-    # sniff-dispatch over the real PNG/GIF/BMP/WAV decoders) -> re-gate
-    # multimodal_frame_sample / multimodal_resize reworked in r8 to REAL
-    # decode (animated-GIF LZW frames; PNG box downsample) -> re-gate
-    # (dws_cumulate_streaming rotated to _REVERIFY round 12 — the oldest
-    #  streaming-path proof in the registry)
-    # round 3 (CORRECTNESS_r03.json, 47 green rows; the 5 r2-era
-    # TIMESTAMP_NTZ reverifies were re-proven and fold in here).
-    # (stats_time_weighted_avg, interval_join_click_error,
-    #  dwd_bounce_detection, dws_sessionization rotated to _REVERIFY
-    #  round 13 — the r3 head, next-oldest after the r2 block.  The
-    #  names below stay on their r3 evidence: r13's add-waves and the
-    #  edited-query re-gates reclaimed their window slots —
-    #  pii_redact_ids / asof_join_window to the second add-wave,
-    #  dws_union_traffic_window / dedup_minhash_recall /
-    #  quality_filter_rules to the three edited-query re-gates; they
-    #  are FIRST in line for the round-14 rotation)
-    # (the ENTIRE remaining r3 block — pii_redact_ids through
-    #  graph_components_copurchase, 30 names — rotated to _REVERIFY
-    #  round 14: the oldest driver evidence left after the r13
-    #  rotation retired the r2 block and the r3 head)
-    # (dwd_interval_join_streaming, dws_session_window_streaming rotated
-    #  to _REVERIFY round 11 — r3-vintage streaming proofs)
-    # (dwd_stream_dedup_within_watermark rotated to _REVERIFY round 12)
-    # (dws_union_streams_window, stream_dedup_exact_documents rotated to
-    #  _REVERIFY round 13 — the two oldest streaming proofs remaining)
-    # round 4 (CORRECTNESS_r04.json, 50/50 green — includes the three
-    # HUGEINT-typing reverifies, now re-proven)
-    # (the ENTIRE remaining r4 block — stats_hll_accuracy_audit
-    #  through embedding_random_projection, 36 names incl. the five
-    #  r4-era streaming proofs dwd_stream_static_dim_join /
-    #  dws_tumble_append_streaming / dws_incremental_agg_maintenance /
-    #  stream_dedup_minhash_incremental / dim_scd2_stream_maintenance
-    #  — rotated to _REVERIFY round 15: the oldest driver evidence
-    #  left after the r14 rotation retired the r3 block and r4 head)
-    # round 5 (CORRECTNESS_r05.json, 50/50 green — includes the two
-    # r4-era _REVERIFY rows ann_projected_recall / ann_mmr_diversified,
-    # now driver-proven)
-    # (the r5 head — ann_projected_recall, ann_mmr_diversified,
-    #  stats_regression_trend, stats_ks_drift — rotated to _REVERIFY
-    #  round 15, topping the canary batch up to 40 after the r4 block)
-    # (stats_histogram_equi_depth moved to _REVERIFY round 13:
-    #  its exact-ntile expression gained the ANSI divisor guard)
-    # (the r5 block — stats_gini_revenue through source_json_roundtrip,
-    #  35 names — rotated to _REVERIFY round 16: the oldest driver
-    #  evidence left after the r15 rotation retired the r4 block and
-    #  r5 head; dedup_minhash_band_sweep also moved there as an r15/r16
-    #  touched-code re-gate.  pipeline_training_manifest stays on its
-    #  r5 evidence — the 50-name window is full.)
-    # (ads_rfm_segmentation moved to _REVERIFY round 15: its
-    #  per-customer base aggregate extracted into the shared
-    #  rfm_readout the new stream_rfm_maintenance twin drains
-    #  through — code motion -> re-gate)
-    "pipeline_training_manifest",
-    # round 6 (CORRECTNESS_r06.json, 50/50 green — the 31 round-6
-    # additions below plus 19 re-sampled already-proven names)
-    "stats_mannwhitney_drift", "stats_chi2_independence",
-    "stats_cusum_changepoint", "stats_theilsen_trend",
-    "stats_table_profile", "stats_spearman_corr",
-    "stats_mutual_information", "dedup_winnowing_fingerprints",
-    "dedup_tfidf_cosine", "ann_signbit_recall", "bpe_merge_sequence",
-    "bpe_apply_fertility", "multimodal_ahash_fingerprint",
-    "multimodal_ahash_neardup", "multimodal_wav_features",
-    "sample_time_split_embargo", "cdc_tombstone_compaction",
-    "curation_quota_per_source", "curation_source_overlap_matrix",
-    "curation_epoch_schedule", "dedup_span_multiscale",
-    "ads_last_touch_attribution", "dwd_bounce_streaming",
-    "stream_cusum_monitor", "stream_winnowing_index_store",
-    "graph_kcore_bounded", "source_partitioned_pruning",
-    "sketch_countmin_freq_audit", "sketch_kmv_distinct",
-    "sketch_heavy_hitter_skew", "layout_zorder_locality",
-    # round 7 (CORRECTNESS_r07.json, 50/50 green — exactly the 50
-    # round-7 additions; the gate window was fully owned by them)
-    "stats_welch_ttest", "stats_anova_oneway", "stats_runs_test",
-    "ads_seasonality_dow_index", "quality_referential_integrity",
-    "quality_order_total_consistency", "stats_qq_quantiles",
-    "quality_duplicate_pk_audit",
-    "stats_poisson_dispersion", "ads_repeat_purchase_rate",
-    "stats_ewma_anomaly",
-    "join_salted_skew", "join_bloom_prefilter", "dws_session_window_agg",
-    "dws_session_depth_histogram", "curation_dedup_rate_by_source",
-    "dedup_minhash_estimate_bias", "dedup_edit_distance_banded",
-    "ann_matryoshka_recall", "ann_ivf_imbalance_audit",
-    "embedding_dim_profile", "ann_two_stage_rerank",
-    "embedding_label_centroid_drift", "text_url_canonicalize",
-    "curation_boilerplate_ngrams", "text_flesch_readability",
-    "multimodal_png_pixels", "multimodal_gif_pixels",
-    "multimodal_wav_autocorr", "multimodal_container_stats",
-    "asof_join_forward", "ads_conversion_latency_quantiles",
-    "sample_group_holdout", "sample_class_balance",
-    "curation_contamination_by_source",
-    "ads_position_attribution", "ads_time_decay_attribution",
-    "dws_late_data_drop", "stream_countmin_maintenance",
-    "sketch_join_size_estimate", "sketch_quantile_histogram",
-    "stream_kmv_maintenance", "graph_degree_distribution",
-    "graph_assortativity", "graph_clustering_coefficient",
-    "graph_link_prediction", # round 8 (CORRECTNESS_r08.json, 50/50 green — the 39 round-8
-    # additions below, plus the 3 changed-in-r8 reverifies
-    # sample_weighted_priority / quality_funnel_order_audit /
-    # ads_pareto_lorenz, plus the five r1-vintage canary names folded
-    # back into the r1 block above)
-    "sample_weighted_priority", "quality_funnel_order_audit",
-    "ads_pareto_lorenz",
-    "stats_bootstrap_ci", "stats_ols_two_factor",
-    "stats_capture_recapture", "stats_kaplan_meier_churn",
-    "stats_kendall_tau", "stats_forecast_backtest",
-    "quality_functional_dependency_audit", "stats_logrank_test",
-    "stats_km_greenwood_band", "ads_hhi_concentration",
-    "stats_median_ci_orderstat", "ml_decision_stump_split",
-    "dws_dau_mau_stickiness", "text_feature_hash_collision_audit",
-    "multimodal_frame_sample", "multimodal_resize",
-    "multimodal_phash_invariance", "multimodal_motion_energy",
-    "asof_join_nearest", "sample_dsir_importance", "sample_ess_audit",
-    "curation_token_budget_allocation", "search_hybrid_rrf",
-    "ads_markov_attribution", "ads_cohort_ltv_curve",
-    "sketch_kmv_set_algebra", "stream_pca_scatter_maintenance",
-    "embedding_pca_power_iteration", "embedding_pca_variance_explained",
-    "embedding_abtt_whitening_audit", "embedding_whitening_neighbor_shift",
-    "stream_ols_maintenance", "graph_bfs_hops", "graph_hits_scores",
-    "graph_ppr_seeded", "source_dpp_pruned_join",
-    "cdc_schema_evolution_replay", "lake_merge_upsert",
-    "lake_compaction_plan",
-    # round 9 (CORRECTNESS_r09.json, 49/50 green).  The 46 green window
-    # names fold in here, INCLUDING the 7 round-9 canary names
-    # (5 batch r1-vintage + 2 streaming r2/r3-vintage) which re-passed.
-    # stats_cramers_v was the ONE red row (hash_match=false on a raw
-    # unordered double chi2 SUM) — it was reworked to the exact-integer
-    # discipline in round 10 and stays OUT of this list until a green
-    # driver row lands.
-    "ads_gmv_by_day", "dws_tumble_by_type", "dwd_order_graph_join",
-    "dwd_left_join_returns", "q3_shipping_priority",
-    "dws_daily_uv_detail_streaming", "dws_tumble_streaming",
-    "stats_durbin_watson", "stats_ljung_box", "stats_grubbs_outlier",
-    "stats_holt_linear_smoothing", "quality_date_order_audit",
-    "quality_freshness_lag_audit", "ml_naive_bayes_binary",
-    "stats_pacf_durbin_levinson", "ml_calibration_bins",
-    "dws_running_balance_per_part",
-    "ads_demand_max_drawdown", "stats_seasonal_decompose_dow",
-    "ml_ab_test_srm_audit", "stats_robust_means",
-    "quality_uniqueness_profile", "ads_new_vs_returning_revenue",
-    "embedding_clip_audit", "text_hapax_ratio", "multimodal_decode_meta",
-    "multimodal_wav_rms_windows", "multimodal_pixel_histogram",
-    "sample_neyman_allocation", "ads_price_elasticity_ols",
-    "curation_source_kl_divergence", "curation_mixture_entropy",
-    "ads_shapley_attribution", "ads_did_promo_lift",
-    "sketch_hll_registers", "sketch_bloom_fpr_measured",
-    "stream_hll_maintenance", "stream_holt_maintenance",
-    "graph_two_hop_neighborhood", "graph_diameter_double_sweep",
-    "lake_partition_skew_audit",
-    "multimodal_jpeg_pixels", "multimodal_jpeg_quant_mse",
-    "multimodal_jpeg_transcode",
-    # round 10 (CORRECTNESS_r10.json, 49 green rows of 50: the 5 batch +
-    # 2 streaming canaries re-proved, the 13 float-discipline-hardened
-    # re-gates, and the r10 additions.  stats_cramers_v stays OUT — its
-    # HUGEINT oracle-output bug is fixed this round (r11) and the driver
-    # must sample it again for a green row to exist.)
-    "dws_tumble_global", "ads_rollup_priority", "events_json_props",
-    "dim_lookup_join", "q5_local_supplier_volume",
-    "dws_backflow_streaming", "dws_ohlc_streaming", "stats_price_qty_corr",
-    "stats_levene_test", "stats_cusum_weekly_exact",
-    "stats_theil_sen_exact", "stats_mann_kendall", "stats_spearman_daily",
-    "stats_cross_correlation", "stats_friedman_dow", "text_heaps_law",
-    "dws_active_user_streaks", "stats_kruskal_wallis",
-    "stats_mann_whitney_u", "stats_wilcoxon_signed_rank",
-    "join_bucketed_range", "ann_label_centroids",
-    "ann_nearest_centroid_confusion", "ml_knn_regression_chars",
-    "text_word_entropy", "text_lm_score", "quality_threshold_calibration",
-    "text_yules_k", "text_char_trigram_entropy", "text_zipf_slope",
-    "multimodal_wav_dft_centroid", "sample_kcenter_coreset",
-    "ads_above_avg_orders", "ads_rfm_segments",
-    "ads_repeat_purchase_intervals", "quality_psi_drift",
-    "ads_value_tier_migration", "quality_time_spine_gaps",
-    "lake_ndv_stats_audit", "stream_cusum_maintenance",
-    "stream_psi_maintenance", "graph_lpa_modularity",
-    # (kmeans_lloyd, ann_ivf_kmeans_recall, ann_pq_recall,
-    #  ml_silhouette_simplified, semdedup_prune moved to _REVERIFY
-    #  round 16: train_centroids' per-iteration materialization now
-    #  routes through session.checkpoint — code motion -> re-gate)
-    "multimodal_jpeg_color_pixels",
-    "multimodal_jpeg_restart_pixels",
-    # round 11 (CORRECTNESS_r11.json, 50/50 green — the 43 round-11
-    # additions below plus the 7 round-11 canaries (5 batch r1-vintage +
-    # 2 streaming r3-vintage), all re-proven and folded back in)
-    "range_join_price_band", "q18_large_orders",
-    "dedup_first_per_user_day", "dedup_last_per_user", "dws_daily_uv",
-    "dwd_interval_join_streaming", "dws_session_window_streaming",
-    "stats_cramers_v", "stats_jarque_bera", "join_interval_overlap",
-    "dedup_cdc_chunking", "text_mattr_sliding", "text_burstiness_fano",
-    "text_mendenhall_spectrum", "text_bigram_novelty_decay",
-    "multimodal_png_palette_pixels", "multimodal_gif_interlaced_pixels",
-    "multimodal_bmp_rle_pixels", "multimodal_wav_ulaw_roundtrip",
-    # (sample_systematic_interval moved to _REVERIFY round 13:
-    #  blocking re-capped to the max-key-derived width)
-    "curation_source_js_divergence",
-    "quality_iqr_outlier_audit", "ads_basket_affinity", "sketch_ams_f2",
-    "stream_mg_heavy_hitters", "stream_ams_maintenance",
-    "graph_closeness_sampled", "graph_k_truss", "graph_rich_club",
-    "graph_square_count", "lake_clustering_depth_audit",
-    "multimodal_jpeg_progressive_pixels", "ml_isotonic_calibration_pava",
-    "ml_one_rule", "ml_ridge_path", "ml_roc_auc_exact",
-    "stats_cohens_kappa", "stats_mcnemar_paired", "stats_hodges_lehmann",
-    "stats_page_trend_test", "stats_jonckheere_terpstra",
-    "stats_chow_test", "stats_anderson_darling",
-    "stats_cramer_von_mises", "stats_two_proportion_z",
-    "stats_welch_anova", "stats_bartlett_test", "stats_cochran_armitage",
-    "stats_tost_equivalence", "stats_sign_test",
-    # round 12 (CORRECTNESS_r12.json, 50/50 green): first the 30
-    # rotation canaries (the whole remaining r1 block, the 3 oldest r2
-    # names, the 2 oldest streaming proofs), re-proven on r12 evidence
-    "ads_conditional_agg", "stats_quantity_distribution",
-    "dws_hierarchical_rollup", "dws_gapfill_locf", "stats_value_histogram",
-    "dws_ohlc_hourly", "stats_zscore_outliers", "ads_full_outer_stats",
-    "semi_join_active_customers", "anti_join_dormant_customers",
-    "set_ops_churned_customers", "dws_backflow_users",
-    "window_running_gmv", "topk_orders_by_price",
-    "window_sliding_frame_avg", "dws_hopping_window",
-    "dws_cumulate_window", "window_ntile_quartiles",
-    "dws_rolling_7d_distinct_users", "ads_mom_growth",
-    "window_percentile_position", "dedup_exact",
-    "dedup_simhash", "ann_cosine_topk",
-    # (dedup_ngram_jaccard, dedup_ngram_jaccard_capped,
-    #  dedup_cluster_canonical moved to _REVERIFY round 16: the shared
-    #  docsets materialization routes through session.checkpoint and
-    #  the prefix-pipeline was r15-edited — re-gate)
-    "ann_cosine_topk_pandas",
-    "dws_cumulate_streaming", "dwd_stream_dedup_within_watermark",
-    # then the 20 r12 additions, all green in the same gate
-    "stats_holtwinters_seasonal", "stats_theils_u", "stats_page_hinkley",
-    # (stats_partial_correlation moved to _REVERIFY round 13: its
-    #  Pearson expression now comes from the shared _pearson_from_sums
-    #  helper — pure code motion, but code changed -> re-gate)
-    "multimodal_adpcm_roundtrip",
-    "sketch_count_sketch", "stream_cs_maintenance",
-    "stream_holtwinters_maintenance", "stream_ph_maintenance",
-    # (stream_theil_maintenance re-entered _REVERIFY round 14: its
-    #  store build moved to the shared _drained_daily_count_store
-    #  builder the Cox-Stuart/Mood twins use — code motion -> re-gate)
-    "graph_katz_centrality",
-    "ml_mcc_confusion", "ml_lift_gains_deciles",
-    # (stats_hoeffding_d, stats_ansari_bradley, stats_kendalls_w moved
-    #  to _REVERIFY round 15: their readouts extracted into the shared
-    #  hoeffding_readout / ansari_bradley_readout / kendalls_w_readout
-    #  helpers the new r15 stream twins drain through, and the
-    #  Hoeffding / Kendall's-W batch wk expressions switched to
-    #  F.floor for store shape-identity — code motion -> re-gate)
-    "stats_gamma_somers_d",
-    "stats_quade",
-    # (stats_friedman_aligned_ranks moved to _REVERIFY round 13:
-    #  tie-exact denominator + new sum_rij2_x4 output column)
-    # round 13 (CORRECTNESS_r13.json, 50/50 green): the 39 rotation
-    # canaries (the full 33-name r2 block, 4 r3-head names, the two
-    # oldest streaming proofs), the 5 edited/refactored re-gates, and
-    # the 8 r13 additions — all re-proven on r13 evidence.
-    # (stats_cochran_q re-entered _REVERIFY round 14: dense-quarter
-    #  deviation fix changed code AND oracle)
-    # (stats_seasonal_mann_kendall re-entered _REVERIFY round 14: the
-    #  batch wk expression now uses F.floor like the stream store)
-    # (stats_durbin, stream_mk_maintenance re-entered _REVERIFY round
-    #  14: readout extracted into the shared durbin_readout helper /
-    #  the streaming drain now reuses it — code motion -> re-gate)
-    "ann_lsh_bucketed", "embedding_near_dup", "ann_ivf_probe",
-    "text_lang_id", "text_quality_score", "text_token_count",
-    "text_fingerprint", "text_repetition_ratio", "text_tfidf_keywords",
-    "text_normalize", "text_chunk_windows", "asof_join_pandas",
-    "fuzzy_join_customer_names", "sample_split_stratified",
-    "sample_stratified_downsample", "ads_union_metrics",
-    "ads_keyword_split", "ads_traffic_channel_stats",
-    "ads_user_stats_union", "ads_hourly_visitor_stats",
-    "ads_commodity_stats", "ads_subsidy_rate", "ads_keyword_score",
-    "ads_pivot_status_by_priority", "ads_cube_returnflag_linestatus",
-    "ads_category_stats", "ads_grouping_sets", "ads_cohort_retention",
-    "ads_funnel_view_click_purchase", "ads_copurchase_pairs",
-    "ads_supplier_scorecard", "ads_nation_market_share",
-    "cdc_envelope_roundtrip",
-    "stats_time_weighted_avg", "interval_join_click_error",
-    "stats_histogram_equi_depth", "sample_systematic_interval",
-    "stats_friedman_aligned_ranks", "stats_partial_correlation",
-    "dws_union_streams_window", "stream_dedup_exact_documents",
-    # (stats_cox_stuart, stats_mood_median re-entered _REVERIFY round
-    #  14 second wave: readouts extracted into the shared
-    #  cox_stuart_readout / mood_median_readout helpers the new stream
-    #  twins drain through — code motion -> re-gate)
-    "stats_semipartial_correlation", "stats_partial_correlation_gram",
-    "multimodal_adpcm_multirate",
-    # round 14 (CORRECTNESS_r14.json, 50/50 green): the 36 rotation
-    # canaries (the full remaining r3 block + the r4 head + the two
-    # r4-era streaming proofs), the 7 edited/twin re-gates, and the 7
-    # r14 additions — all re-proven on r14 evidence.
-    # (stream_durbin_maintenance re-entered _REVERIFY round 15: its
-    #  store build moved to the shared _drained_weekly_cents_store
-    #  builder the Kendall's-W twin uses — code motion -> re-gate)
-    # (multimodal_jpeg_arith_pixels re-entered _REVERIFY round 15:
-    #  the arith encoder gained ZRL emission and the range coder's
-    #  flush allowance now derives from the shared FLUSH_TAIL_BYTES
-    #  constant — ADVICE r14 closures touch its code path -> re-gate)
-    "stats_cochran_q", "stats_seasonal_mann_kendall", "stats_durbin",
-    "stream_mk_maintenance", "pii_redact_ids", "asof_join_window",
-    "dws_union_traffic_window",
-    # (dedup_minhash_recall moved to _REVERIFY round 16: consumes the
-    #  r15-edited prefix pipeline + session.checkpoint code motion)
-    "quality_filter_rules", "dwd_bounce_detection", "dws_sessionization",
-    "vocab_bigram_counts", "stream_quality_filter_documents",
-    "decontaminate_ngram", "knn_label_vote", "knn_label_vote_lsh",
-    "decontaminate_fuzzy_minhash", "q4_late_order_priority",
-    "q6_forecast_revenue", "q7_volume_shipping", "q10_returned_items",
-    "q14_promo_revenue_share", "q2_min_price_part", "q9_type_profit",
-    "q13_order_count_distribution",
-    # (q15_top_supplier moved to _REVERIFY round 16: r15-edited, and it
-    #  rotated OUT of the r15 window — VERDICT r15 item 6 asks for its
-    #  driver-side re-proof; also session.checkpoint code motion)
-    "q16_supplier_count_by_part", "q17_small_quantity_revenue",
-    "q19_disjunctive_revenue",
-    # (q21_sole_late_supplier moved to _REVERIFY round 16: IsNotNull
-    #  symmetrization changed its code this round -> re-gate)
-    "q22_sales_opportunity", "q20_dominant_supplier",
-    "q11_important_balance_share",
-    # (graph_components_copurchase moved to _REVERIFY round 16:
-    #  min_label_components now routes through session.checkpoint —
-    #  code motion -> re-gate)
-    "mixture_weighted_sample", "q12_lateness_priority",
-    "seq_pack_token_budget", "stats_key_skew",
-    "dwd_order_detail_join_streaming", "stream_sample_ingest",
-    "stats_cox_stuart", "stats_mood_median", "stream_theil_maintenance",
-    "multimodal_adpcm_polezero", "stream_cochran_maintenance",
-    "stream_cox_stuart_maintenance", "stream_mood_maintenance",
-    "layout_hilbert_locality",
-    # round 15 (CORRECTNESS_r15.json, 50/50 green): the r15 window —
-    # the 6 edited re-gates, the r4-block canaries (incl. five
-    # streaming proofs) and the r5-head canaries, all re-proven on r15
-    # evidence.  (dedup_threshold_sweep does NOT fold in: its docsets
-    # call path was touched again in r16 — stays in _REVERIFY)
-    "stats_hoeffding_d", "stats_ansari_bradley", "stats_kendalls_w",
-    "ads_rfm_segmentation", "stream_durbin_maintenance",
-    "multimodal_jpeg_arith_pixels",
-    "stats_hll_accuracy_audit", "stats_approx_percentile_audit",
-    "stats_mad_outliers", "dwd_jump_consecutive_entries",
-    "dws_gapfill_interpolate", "stats_exact_percentiles",
-    "ads_path_transition_matrix", "dim_scd2_history",
-    "dwd_temporal_scd2_join", "topk_gmv_days_with_ties",
-    "dedup_passage_exact", "dedup_containment",
-    "ann_ivf_recall", "ann_hard_negatives",
-    "vocab_pmi_topk", "bpe_top_merges", "multimodal_sniff_magic_bytes",
-    "multimodal_payload_dedup", "multimodal_header_decode",
-    "sample_deterministic_shuffle", "sample_weighted_ppswor",
-    "dataset_snapshot_diff", "ads_unpivot_metrics",
-    "cdc_dirty_side_output", "cdc_update_delta",
-    "dwd_stream_static_dim_join", "dws_tumble_append_streaming",
-    "dws_incremental_agg_maintenance", "stream_dedup_minhash_incremental",
-    "dim_scd2_stream_maintenance", "q8_market_share",
-    "graph_pagerank_copurchase", "graph_triangles_copurchase",
-    "dwd_log_split_fanout", "embedding_random_projection",
-    "ann_projected_recall", "ann_mmr_diversified",
-    "stats_regression_trend", "stats_ks_drift",
-    # ... and the four r15-NEW stream twins (registered after the r15
-    # _REVERIFY, green in the same gate):
-    "stream_ansari_maintenance", "stream_kendalls_w_maintenance",
-    "stream_hoeffding_maintenance", "stream_rfm_maintenance",
-)
+def _proof_ranks(evidence_dir: Path) -> dict[str, tuple[int, int]]:
+    """Gate rank of each name: the round of its latest gate row in
+    ``CORRECTNESS_rNN.json`` and that row's position in the file.
 
-# Queries that MUST be sampled first by this round's gate: the
-# STALENESS CANARY rotation (started round 8, VERDICT r7 item 1).  Each
-# round the OLDEST driver-proven names move here so their proofs get
-# refreshed by the driver instead of relying on judge spot-checks.
-# Round 16 (VERDICT r15 item 6): the r15 window folded back into
-# _DRIVER_PROVEN; the new window = r16-EDITED re-gates (q21 IsNotNull
-# symmetrization, dedup_minhash_lsh verify materialization), the
-# r15-edited-but-unsampled names VERDICT r15 flagged (q15_top_supplier
-# and the prefix-pipeline consumers), the session.checkpoint
-# code-motion consumers (graph components, k-means family), and
-# staleness canaries from the next-oldest evidence (the rest of the r5
-# block, incl. >= 2 streaming proofs) — exactly 50.  Fold back into
-# _DRIVER_PROVEN once CORRECTNESS_r16 lands, and rotate the
-# next-oldest batch in round 17 (the r6 block: stats_mannwhitney_drift
-# onward, plus pipeline_training_manifest left behind this round).
-# NOTE the window-count rule: the gate window = count of names NOT in
-# _DRIVER_PROVEN, which already INCLUDES these — budget new queries to
-# keep that single number <= 50 (tests/test_registry_budget.py
-# enforces it).
-_REVERIFY: tuple[str, ...] = (
-    # r16-EDITED queries (real code changes this round):
-    "q21_sole_late_supplier", "dedup_minhash_lsh",
-    # r15-edited names whose driver proof is stale (VERDICT r15 items
-    # 5/6: q15 rotated out of the r15 window; the five prefix-pipeline
-    # consumers ride the r15 docsets checkpoint) — all also sit on the
-    # r16 session.checkpoint code motion:
-    "q15_top_supplier", "dedup_ngram_jaccard",
-    "dedup_ngram_jaccard_capped", "dedup_threshold_sweep",
-    "dedup_cluster_canonical", "dedup_minhash_recall",
-    "dedup_minhash_band_sweep",
-    # session.checkpoint code-motion consumers (min_label_components,
-    # train_centroids now route through the env-gated helper):
-    "graph_components_copurchase", "kmeans_lloyd",
-    "ann_ivf_kmeans_recall", "ann_pq_recall", "ml_silhouette_simplified",
-    "semdedup_prune",
-    # r5-block staleness canaries (the oldest driver evidence on the
-    # books), incl. seven streaming-path proofs:
-    "stats_gini_revenue", "stats_benford_audit",
-    "stats_hourly_autocorr", "dwd_window_join_click_error",
-    "dedup_bloom_membership_audit",
-    "embedding_int8_quant_audit", "ann_ivf_nprobe_sweep",
-    "text_lang_confusion_audit", "sample_reservoir_per_group",
-    "sample_split_leakage_audit", "sample_temperature_rates",
-    "ads_basket_rules", "stream_decontaminate_ingest",
-    "decontaminate_span_report", "stream_last_value_compaction",
-    "stream_topk_gmv_maintenance", "stream_index_stats_maintenance",
-    "text_bm25_search", "dedup_span_exact", "text_ngram_novelty",
-    "text_zipf_fit", "vocab_coverage_curve", "dwd_window_join_streaming",
-    "dws_funnel_streaming", "ads_window_funnel",
-    "ads_sequence_match_negation", "ads_topn_with_others",
-    "ads_segment_overlap", "ads_prepurchase_paths",
-    "ads_hour_dow_heatmap",
-    "dwd_error_burst_windows", "stream_ks_drift_monitor",
-    "graph_label_propagation", "source_csv_roundtrip",
-    "source_json_roundtrip",
-)
+    A red latest row (a rows, schema or hash mismatch, or an error) ranks
+    (0, 0), as does a name with no row: those queries need the gate first.
+    The row position, not import order, breaks ties between proofs of one
+    round, because import order depends on what a process imported first.
+    """
+    files = {}
+    for f in evidence_dir.glob("CORRECTNESS_r*.json"):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", f.name)
+        if m:
+            files[int(m.group(1))] = f
+    ranks: dict[str, tuple[int, int]] = {}
+    for rnd in sorted(files):
+        rows = json.loads(files[rnd].read_text())
+        for i, (name, row) in enumerate(rows.items()):
+            green = row.get("err") is None and all(
+                row.get(k) is True
+                for k in ("rows_match", "schema_match", "hash_match"))
+            ranks[name] = (rnd, i) if green else (0, 0)
+    return ranks
 
 
 def load_all() -> None:
     """Import every module that registers queries (idempotent), then order
-    the registry so driver-unproven queries come first (the correctness
-    gate samples registration order)."""
+    the registry by ``_proof_ranks``: the correctness gate samples the first
+    50 names, so unproven queries come first, then the stalest proofs.
+    The sort is stable, so unproven queries keep registration order."""
     import gmall_211027_flink_spark.operators.aggregates  # noqa: F401
     import gmall_211027_flink_spark.operators.joins  # noqa: F401
     import gmall_211027_flink_spark.operators.windows  # noqa: F401
@@ -509,9 +90,6 @@ def load_all() -> None:
     import gmall_211027_flink_spark.plans.ads  # noqa: F401
     import gmall_211027_flink_spark.sources.cdc  # noqa: F401
     import gmall_211027_flink_spark.streaming.windows  # noqa: F401
-    # Round-2 modules import LAST: their (new, driver-unproven) queries
-    # must register AFTER round 1's unproven 50, which need this round's
-    # gate window first.
     import gmall_211027_flink_spark.operators.curation  # noqa: F401
     import gmall_211027_flink_spark.plans.tpch  # noqa: F401
     import gmall_211027_flink_spark.operators.graph  # noqa: F401
@@ -529,14 +107,8 @@ def load_all() -> None:
     import gmall_211027_flink_spark.operators.mlfit  # noqa: F401
     import gmall_211027_flink_spark.operators.inference  # noqa: F401
 
-    proven = set(_DRIVER_PROVEN)
-    overlap = proven & set(_REVERIFY)
-    assert not overlap, f"_REVERIFY names must be out of _DRIVER_PROVEN: {overlap}"
-    # _REVERIFY first (the gate samples registration order), then other
-    # unproven queries, then the driver-proven tail.
-    ordered = [n for n in _REVERIFY if n in QUERIES]
-    ordered += [n for n in QUERIES if n not in proven and n not in ordered]
-    ordered += [n for n in _DRIVER_PROVEN if n in QUERIES]
+    ranks = _proof_ranks(_EVIDENCE_DIR)
+    ordered = sorted(QUERIES, key=lambda n: ranks.get(n, (0, 0)))
     reordered = {n: QUERIES[n] for n in ordered}
     QUERIES.clear()
     QUERIES.update(reordered)

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..tempdir import temp_store
+
 
 def stream_parquet(spark: SparkSession, path: str,
                    schema: T.StructType | None = None) -> DataFrame:
@@ -79,7 +81,8 @@ def read_csv(spark: SparkSession, path: str, schema: T.StructType,
 # result must hash-match the DuckDB oracle computed on the original
 # parquet. Doubles survive because Spark writes shortest-round-trip
 # decimal text; the aggregate sums ride as DECIMAL(18,2) per repo
-# convention. Temp exports are removed after the result materializes.
+# convention. Each gate runs under ``temp_store``, which materializes the
+# result and removes the temp export.
 # ---------------------------------------------------------------------------
 
 _RT_ORACLE = """
@@ -96,55 +99,46 @@ _RT_SCHEMA = ("event_id bigint, user_id bigint, event_type string, "
               "value double")
 
 
-def _roundtrip(spark: SparkSession, sf_dir: str, fmt: str) -> DataFrame:
-    import shutil
-    import tempfile
-
+def _roundtrip(spark: SparkSession, sf_dir: str, tmp_dir: str,
+               fmt: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     from ..catalog import load_table
 
     src = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value")
-    d = tempfile.mkdtemp(prefix=f"rt_{fmt}_")
-    try:
-        path = f"{d}/events_{fmt}"
-        if fmt == "csv":
-            src.write.option("header", "true").csv(path)
-            back = read_csv(spark, path,
-                            T.StructType.fromDDL(_RT_SCHEMA)
-                            ).drop("_corrupt")
-        else:
-            src.write.json(path)
-            back = read_json(spark, path,
-                             T.StructType.fromDDL(_RT_SCHEMA))
-        out = (back.groupBy("event_type")
-               .agg(F.count("*").cast("bigint").alias("n_events"),
-                    F.countDistinct("user_id").cast("bigint")
-                     .alias("n_users"),
-                    F.sum(F.col("value").cast("decimal(18,2)"))
-                     .cast("double").alias("value_sum"),
-                    F.min("event_id").cast("bigint").alias("min_event_id"),
-                    F.max("event_id").cast("bigint").alias("max_event_id")))
-        # gate-harness materialization only: the temp export is removed
-        # in `finally`, so the (tiny, per-type) aggregate must leave it
-        # first; production reads land in real table paths
-        rows = out.collect()
-        return spark.createDataFrame(rows, out.schema)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
+    path = f"{tmp_dir}/events_{fmt}"
+    if fmt == "csv":
+        src.write.option("header", "true").csv(path)
+        back = read_csv(spark, path,
+                        T.StructType.fromDDL(_RT_SCHEMA)).drop("_corrupt")
+    else:
+        src.write.json(path)
+        back = read_json(spark, path, T.StructType.fromDDL(_RT_SCHEMA))
+    return (back.groupBy("event_type")
+            .agg(F.count("*").cast("bigint").alias("n_events"),
+                 F.countDistinct("user_id").cast("bigint")
+                  .alias("n_users"),
+                 F.sum(F.col("value").cast("decimal(18,2)"))
+                  .cast("double").alias("value_sum"),
+                 F.min("event_id").cast("bigint").alias("min_event_id"),
+                 F.max("event_id").cast("bigint").alias("max_event_id")))
 
 
 def _register_roundtrips() -> None:
     from ..registry import query
 
     @query("source_csv_roundtrip", oracle=_RT_ORACLE)
-    def source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _roundtrip(spark, sf_dir, "csv")
+    @temp_store
+    def source_csv_roundtrip(spark: SparkSession, sf_dir: str,
+                             tmp_dir: str) -> DataFrame:
+        return _roundtrip(spark, sf_dir, tmp_dir, "csv")
 
     @query("source_json_roundtrip", oracle=_RT_ORACLE)
-    def source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _roundtrip(spark, sf_dir, "json")
+    @temp_store
+    def source_json_roundtrip(spark: SparkSession, sf_dir: str,
+                              tmp_dir: str) -> DataFrame:
+        return _roundtrip(spark, sf_dir, tmp_dir, "json")
 
 
 _register_roundtrips()
@@ -199,28 +193,18 @@ def _register_partition_pruning() -> None:
     from ..registry import query
 
     @query("source_partitioned_pruning", oracle=_PRUNE_ORACLE)
-    def source_partitioned_pruning(spark: SparkSession,
-                                   sf_dir: str) -> DataFrame:
-        import shutil
-        import tempfile
-
+    @temp_store
+    def source_partitioned_pruning(spark: SparkSession, sf_dir: str,
+                                   tmp_dir: str) -> DataFrame:
         from pyspark.sql import functions as F
 
-        d = tempfile.mkdtemp(prefix="part_prune_")
-        try:
-            p = f"{d}/events_by_dt"
-            write_partitioned_events(spark, sf_dir, p)
-            out = (read_pruned(spark, p, _PRUNE_LO, _PRUNE_HI)
-                   .groupBy("event_type")
-                   .agg(F.count("*").cast("bigint").alias("n_events"),
-                        F.countDistinct("user_id").cast("bigint")
-                         .alias("n_users")))
-            # gate-harness materialization only: the temp layout is
-            # removed in `finally`; production reads live table paths
-            rows = out.collect()
-            return spark.createDataFrame(rows, out.schema)
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
+        p = f"{tmp_dir}/events_by_dt"
+        write_partitioned_events(spark, sf_dir, p)
+        return (read_pruned(spark, p, _PRUNE_LO, _PRUNE_HI)
+                .groupBy("event_type")
+                .agg(F.count("*").cast("bigint").alias("n_events"),
+                     F.countDistinct("user_id").cast("bigint")
+                      .alias("n_users")))
 
 
 _register_partition_pruning()
@@ -288,28 +272,19 @@ def _register_dpp() -> None:
     from ..registry import query
 
     @query("source_dpp_pruned_join", oracle=_DPP_ORACLE)
-    def source_dpp_pruned_join(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-        import shutil
-        import tempfile
-
+    @temp_store
+    def source_dpp_pruned_join(spark: SparkSession, sf_dir: str,
+                               tmp_dir: str) -> DataFrame:
         from pyspark.sql import functions as F
 
-        d = tempfile.mkdtemp(prefix="dpp_join_")
-        try:
-            write_partitioned_events(spark, sf_dir, f"{d}/fact")
-            write_events_dt_dim(spark, sf_dir, f"{d}/dim")
-            out = (read_dpp_pruned_join(spark, f"{d}/fact", f"{d}/dim")
-                   .groupBy("event_type")
-                   .agg(F.count("*").cast("bigint").alias("n_events"),
-                        F.countDistinct("user_id").cast("bigint")
-                         .alias("n_users")))
-            # gate-harness materialization only: the temp layout is
-            # removed in `finally`; production reads live table paths
-            rows = out.collect()
-            return spark.createDataFrame(rows, out.schema)
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
+        write_partitioned_events(spark, sf_dir, f"{tmp_dir}/fact")
+        write_events_dt_dim(spark, sf_dir, f"{tmp_dir}/dim")
+        return (read_dpp_pruned_join(spark, f"{tmp_dir}/fact",
+                                     f"{tmp_dir}/dim")
+                .groupBy("event_type")
+                .agg(F.count("*").cast("bigint").alias("n_events"),
+                     F.countDistinct("user_id").cast("bigint")
+                      .alias("n_users")))
 
 
 _register_dpp()
@@ -352,40 +327,31 @@ def _register_schema_evolution() -> None:
     from ..registry import query
 
     @query("cdc_schema_evolution_replay", oracle=_EVOLVE_ORACLE)
-    def cdc_schema_evolution_replay(spark: SparkSession,
-                                    sf_dir: str) -> DataFrame:
-        import shutil
-        import tempfile
-
+    @temp_store
+    def cdc_schema_evolution_replay(spark: SparkSession, sf_dir: str,
+                                    tmp_dir: str) -> DataFrame:
         from pyspark.sql import functions as F
 
         from ..catalog import load_table
 
-        d = tempfile.mkdtemp(prefix="evolve_")
-        try:
-            orders = load_table(spark, sf_dir, "orders")
-            (orders.filter(F.col("o_orderkey") % 2 == 0)
-             .select(F.col("o_orderkey").alias("id"),
-                     F.col("o_orderstatus").alias("status"))
-             .write.mode("overwrite").parquet(f"{d}/t/epoch=1"))
-            (orders.filter(F.col("o_orderkey") % 2 == 1)
-             .select(F.col("o_orderkey").alias("id"),
-                     F.col("o_orderstatus").alias("status"),
-                     F.col("o_orderpriority").alias("priority"))
-             .write.mode("overwrite").parquet(f"{d}/t/epoch=2"))
-            merged = (spark.read.option("mergeSchema", "true")
-                      .parquet(f"{d}/t"))
-            out = (merged.groupBy(
-                       "status", F.col("priority").isNotNull()
-                       .alias("has_priority"))
-                   .agg(F.count("*").cast("bigint").alias("row_ct"),
-                        F.countDistinct("id").cast("bigint").alias("id_ct"))
-                   .orderBy("status", "has_priority"))
-            # gate-harness materialization (temp layout removed below)
-            rows = out.collect()
-            return spark.createDataFrame(rows, out.schema)
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
+        orders = load_table(spark, sf_dir, "orders")
+        (orders.filter(F.col("o_orderkey") % 2 == 0)
+         .select(F.col("o_orderkey").alias("id"),
+                 F.col("o_orderstatus").alias("status"))
+         .write.mode("overwrite").parquet(f"{tmp_dir}/t/epoch=1"))
+        (orders.filter(F.col("o_orderkey") % 2 == 1)
+         .select(F.col("o_orderkey").alias("id"),
+                 F.col("o_orderstatus").alias("status"),
+                 F.col("o_orderpriority").alias("priority"))
+         .write.mode("overwrite").parquet(f"{tmp_dir}/t/epoch=2"))
+        merged = (spark.read.option("mergeSchema", "true")
+                  .parquet(f"{tmp_dir}/t"))
+        return (merged.groupBy(
+                    "status", F.col("priority").isNotNull()
+                    .alias("has_priority"))
+                .agg(F.count("*").cast("bigint").alias("row_ct"),
+                     F.countDistinct("id").cast("bigint").alias("id_ct"))
+                .orderBy("status", "has_priority"))
 
 
 _register_schema_evolution()

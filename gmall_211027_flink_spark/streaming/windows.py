@@ -14,16 +14,14 @@ anywhere in it — W3).
 
 The registered gate queries below prove each stream against a batch
 oracle. They share one drain path: ``_drain`` runs a stream through a
-memory sink (``_await`` is its checked wait), ``_temp_store`` gives a
+memory sink (``_await`` is its checked wait), ``temp_store`` gives a
 query a scratch dir and materializes its bounded result, and
 ``_persisted_fold`` folds input slices into a parquet-persisted state.
 """
 
 from __future__ import annotations
 
-import functools
 import shutil
-import tempfile
 import uuid
 from collections.abc import Callable, Iterable, Iterator
 
@@ -32,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from gmall_211027_flink_spark.registry import query
+from gmall_211027_flink_spark.tempdir import temp_store
 
 
 def tumbling_agg(events: DataFrame, ts_col: str, window_size: str,
@@ -70,7 +69,7 @@ def session_agg(events: DataFrame, ts_col: str, gap: str, watermark: str,
 # ---------------------------------------------------------------------------
 # The gate-query drain path. No registered query in this module starts
 # a sink, waits on a query, makes a temp dir or collects on its own;
-# these helpers do.
+# these helpers and ``tempdir.temp_store`` do.
 # ---------------------------------------------------------------------------
 
 def _await(q: StreamingQuery, label: str) -> None:
@@ -95,26 +94,6 @@ def _drain(spark: SparkSession, df: DataFrame, mode: str,
         return spark.table(name)
     finally:
         spark.catalog.dropTempView(name)
-
-
-def _temp_store(fn: Callable[[SparkSession, str, str], DataFrame]):
-    """Turn ``fn(spark, sf_dir, tmp_dir) -> DataFrame`` into a query
-    ``(spark, sf_dir) -> DataFrame`` that runs ``fn`` over a fresh temp dir
-    (its store, checkpoint or staged stream files) and removes the dir in
-    ``finally``. The result is collected into a local frame first, so it
-    never reads a deleted file. This is gate-harness materialization only:
-    ``fn``'s result must be bounded (each decorated query is an audited
-    collect site in tests/test_collect_lint.py), and production reads a
-    persistent store directly, with no driver collect."""
-    @functools.wraps(fn)
-    def run_in_temp_dir(spark: SparkSession, sf_dir: str) -> DataFrame:
-        d = tempfile.mkdtemp(prefix=f"{fn.__name__}_")
-        try:
-            out = fn(spark, sf_dir, d)
-            return spark.createDataFrame(out.collect(), out.schema)
-        finally:
-            shutil.rmtree(d, ignore_errors=True)
-    return run_in_temp_dir
 
 
 def _persisted_fold(spark: SparkSession, tmp_dir: str,
@@ -893,7 +872,7 @@ def dws_tumble_append_streaming(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY 1, 2
     """,
 )
-@_temp_store
+@temp_store
 def dws_incremental_agg_maintenance(spark: SparkSession, sf_dir: str,
                                     tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
@@ -940,7 +919,7 @@ def dws_incremental_agg_maintenance(spark: SparkSession, sf_dir: str,
     "stream_dedup_minhash_incremental",
     oracle=None,  # assigned below (reuses dedup.py band CTE fragments)
 )
-@_temp_store
+@temp_store
 def stream_dedup_minhash_incremental(spark: SparkSession, sf_dir: str,
                                      tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
@@ -1183,7 +1162,7 @@ _OR["stream_decontaminate_ingest"] = _stream_decon_oracle()
     ) WHERE rn = 1
     """,
 )
-@_temp_store
+@temp_store
 def stream_last_value_compaction(spark: SparkSession, sf_dir: str,
                                  tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.sources.files import stream_events
@@ -1243,7 +1222,7 @@ def stream_last_value_compaction(spark: SparkSession, sf_dir: str,
     FROM ranked WHERE rnk <= 5
     """,
 )
-@_temp_store
+@temp_store
 def stream_topk_gmv_maintenance(spark: SparkSession, sf_dir: str,
                                 tmp_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -1288,7 +1267,7 @@ def stream_topk_gmv_maintenance(spark: SparkSession, sf_dir: str,
     "stream_index_stats_maintenance",
     oracle=None,  # assigned below (shares the term list with search.py)
 )
-@_temp_store
+@temp_store
 def stream_index_stats_maintenance(spark: SparkSession, sf_dir: str,
                                    tmp_dir: str) -> DataFrame:
     import os
@@ -1523,7 +1502,7 @@ _OR["dwd_bounce_streaming"] = _bounce_stream_oracle()
     "stream_cusum_monitor",
     oracle=None,  # assigned below: identical to batch stats_cusum_changepoint
 )
-@_temp_store
+@temp_store
 def stream_cusum_monitor(spark: SparkSession, sf_dir: str,
                          tmp_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -1587,7 +1566,7 @@ _OR["stream_cusum_monitor"] = _cusum_stream_oracle()
     "stream_ks_drift_monitor",
     oracle=None,  # assigned below: identical to batch stats_ks_drift
 )
-@_temp_store
+@temp_store
 def stream_ks_drift_monitor(spark: SparkSession, sf_dir: str,
                             tmp_dir: str) -> DataFrame:
     import os
@@ -1670,7 +1649,7 @@ _OR["stream_ks_drift_monitor"] = _ks_stream_oracle()
     "stream_winnowing_index_store",
     oracle=None,  # assigned below: identical to the batch winnowing op
 )
-@_temp_store
+@temp_store
 def stream_winnowing_index_store(spark: SparkSession, sf_dir: str,
                                  tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
@@ -1756,7 +1735,7 @@ _OR["stream_winnowing_index_store"] = _winnow_stream_oracle()
     GROUP BY 1
     """,
 )
-@_temp_store
+@temp_store
 def dws_late_data_drop(spark: SparkSession, sf_dir: str,
                        tmp_dir: str) -> DataFrame:
     import os
@@ -1820,7 +1799,7 @@ def dws_late_data_drop(spark: SparkSession, sf_dir: str,
     "stream_countmin_maintenance",
     oracle=None,   # assigned below: identical to batch CM audit
 )
-@_temp_store
+@temp_store
 def stream_countmin_maintenance(spark: SparkSession, sf_dir: str,
                                 tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
@@ -1887,7 +1866,7 @@ _OR["stream_countmin_maintenance"] = _cm_stream_oracle()
     "stream_kmv_maintenance",
     oracle=None,   # assigned below: identical to batch KMV audit
 )
-@_temp_store
+@temp_store
 def stream_kmv_maintenance(spark: SparkSession, sf_dir: str,
                            tmp_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -1966,7 +1945,7 @@ _OR["stream_kmv_maintenance"] = _kmv_stream_oracle()
     "stream_pca_scatter_maintenance",
     oracle=None,   # assigned below: identical to the batch PCA oracle
 )
-@_temp_store
+@temp_store
 def stream_pca_scatter_maintenance(spark: SparkSession, sf_dir: str,
                                    tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.operators.pca import (
@@ -2034,7 +2013,7 @@ _OR["stream_pca_scatter_maintenance"] = _pca_stream_oracle()
     "stream_ols_maintenance",
     oracle=None,   # assigned below: identical to the batch OLS oracle
 )
-@_temp_store
+@temp_store
 def stream_ols_maintenance(spark: SparkSession, sf_dir: str,
                            tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
@@ -2083,7 +2062,7 @@ _OR["stream_ols_maintenance"] = _ols_stream_oracle()
     "stream_hll_maintenance",
     oracle=None,   # assigned below: identical to the batch HLL audit
 )
-@_temp_store
+@temp_store
 def stream_hll_maintenance(spark: SparkSession, sf_dir: str,
                            tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
@@ -2171,7 +2150,7 @@ _OR["stream_hll_maintenance"] = _hll_stream_oracle()
     "stream_holt_maintenance",
     oracle=None,   # assigned below: identical to the batch Holt oracle
 )
-@_temp_store
+@temp_store
 def stream_holt_maintenance(spark: SparkSession, sf_dir: str,
                             tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
@@ -2261,7 +2240,7 @@ _OR["stream_holt_maintenance"] = _holt_stream_oracle()
     "stream_cusum_maintenance",
     oracle=None,   # assigned below: identical to the batch CUSUM oracle
 )
-@_temp_store
+@temp_store
 def stream_cusum_maintenance(spark: SparkSession, sf_dir: str,
                              tmp_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -2342,7 +2321,7 @@ _OR["stream_cusum_maintenance"] = _cusum_weekly_stream_oracle()
     "stream_psi_maintenance",
     oracle=None,   # assigned below: identical to the batch PSI oracle
 )
-@_temp_store
+@temp_store
 def stream_psi_maintenance(spark: SparkSession, sf_dir: str,
                            tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
@@ -2520,7 +2499,7 @@ def _mg_stream_oracle() -> str:
 
 
 @query("stream_mg_heavy_hitters", oracle=_mg_stream_oracle())
-@_temp_store
+@temp_store
 def stream_mg_heavy_hitters(spark: SparkSession, sf_dir: str,
                             tmp_dir: str) -> DataFrame:
     """MG_K-counter Misra-Gries heavy-hitter store over 3 calendar
@@ -2588,7 +2567,7 @@ def _ams_sign_expr():
 
 
 @query("stream_ams_maintenance", oracle=None)  # assigned below
-@_temp_store
+@temp_store
 def stream_ams_maintenance(spark: SparkSession, sf_dir: str,
                            tmp_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -2674,7 +2653,7 @@ _OR["stream_ams_maintenance"] = _ams_stream_oracle()
     "stream_cs_maintenance",
     oracle=None,   # assigned below: identical to batch Count-Sketch audit
 )
-@_temp_store
+@temp_store
 def stream_cs_maintenance(spark: SparkSession, sf_dir: str,
                           tmp_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
@@ -2764,7 +2743,7 @@ _OR["stream_cs_maintenance"] = _cs_stream_oracle()
     "stream_holtwinters_maintenance",
     oracle=None,   # assigned below: identical to the batch HW oracle
 )
-@_temp_store
+@temp_store
 def stream_holtwinters_maintenance(spark: SparkSession, sf_dir: str,
                                    tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.operators.aggregates import (
@@ -2836,7 +2815,7 @@ _OR["stream_holtwinters_maintenance"] = _hw_stream_oracle()
     "stream_ph_maintenance",
     oracle=None,   # assigned below: identical to the batch PH oracle
 )
-@_temp_store
+@temp_store
 def stream_ph_maintenance(spark: SparkSession, sf_dir: str,
                           tmp_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -2931,7 +2910,7 @@ _OR["stream_ph_maintenance"] = _ph_stream_oracle()
     "stream_theil_maintenance",
     oracle=None,   # assigned below: identical to the batch Theil oracle
 )
-@_temp_store
+@temp_store
 def stream_theil_maintenance(spark: SparkSession, sf_dir: str,
                              tmp_dir: str) -> DataFrame:
     from pyspark.sql import Window
@@ -2995,7 +2974,7 @@ _OR["stream_theil_maintenance"] = _theil_stream_oracle()
     "stream_mk_maintenance",
     oracle=None,   # assigned below: identical to the batch seasonal-MK
 )
-@_temp_store
+@temp_store
 def stream_mk_maintenance(spark: SparkSession, sf_dir: str,
                           tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
@@ -3104,7 +3083,7 @@ def _drained_weekly_cents_store(spark: SparkSession, sf_dir: str,
     "stream_durbin_maintenance",
     oracle=None,   # assigned below: identical to the batch Durbin
 )
-@_temp_store
+@temp_store
 def stream_durbin_maintenance(spark: SparkSession, sf_dir: str,
                               tmp_dir: str) -> DataFrame:
     # readout from the drained store: the SAME readout callable the
@@ -3144,7 +3123,7 @@ _OR["stream_durbin_maintenance"] = _durbin_stream_oracle()
     "stream_cochran_maintenance",
     oracle=None,   # assigned below: identical to the batch Cochran Q
 )
-@_temp_store
+@temp_store
 def stream_cochran_maintenance(spark: SparkSession, sf_dir: str,
                                tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
@@ -3240,7 +3219,7 @@ def _drained_daily_count_store(spark: SparkSession, sf_dir: str,
     "stream_cox_stuart_maintenance",
     oracle=None,   # assigned below: identical to the batch Cox-Stuart
 )
-@_temp_store
+@temp_store
 def stream_cox_stuart_maintenance(spark: SparkSession, sf_dir: str,
                                   tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.operators.inference import (
@@ -3264,7 +3243,7 @@ _OR["stream_cox_stuart_maintenance"] = _cox_stuart_stream_oracle()
     "stream_mood_maintenance",
     oracle=None,   # assigned below: identical to the batch Mood median
 )
-@_temp_store
+@temp_store
 def stream_mood_maintenance(spark: SparkSession, sf_dir: str,
                             tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.operators.inference import (
@@ -3316,7 +3295,7 @@ _OR["stream_mood_maintenance"] = _mood_stream_oracle()
     "stream_ansari_maintenance",
     oracle=None,   # assigned below: identical to the batch Ansari
 )
-@_temp_store
+@temp_store
 def stream_ansari_maintenance(spark: SparkSession, sf_dir: str,
                               tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.operators.inference import (
@@ -3340,7 +3319,7 @@ _OR["stream_ansari_maintenance"] = _ansari_stream_oracle()
     "stream_kendalls_w_maintenance",
     oracle=None,   # assigned below: identical to the batch Kendall W
 )
-@_temp_store
+@temp_store
 def stream_kendalls_w_maintenance(spark: SparkSession, sf_dir: str,
                                   tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.operators.inference import (
@@ -3364,7 +3343,7 @@ _OR["stream_kendalls_w_maintenance"] = _kendalls_w_stream_oracle()
     "stream_hoeffding_maintenance",
     oracle=None,   # assigned below: identical to the batch Hoeffding
 )
-@_temp_store
+@temp_store
 def stream_hoeffding_maintenance(spark: SparkSession, sf_dir: str,
                                  tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table
@@ -3440,7 +3419,7 @@ _OR["stream_hoeffding_maintenance"] = _hoeffding_stream_oracle()
     "stream_rfm_maintenance",
     oracle=None,   # assigned below: identical to the batch RFM
 )
-@_temp_store
+@temp_store
 def stream_rfm_maintenance(spark: SparkSession, sf_dir: str,
                            tmp_dir: str) -> DataFrame:
     from gmall_211027_flink_spark.catalog import load_table

@@ -28,6 +28,7 @@ import datetime
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import numpy as np
@@ -36,7 +37,7 @@ import pandas as pd
 LOSSY_TYPES = {"HUGEINT", "UHUGEINT",
                "UBIGINT", "UINTEGER", "USMALLINT", "UTINYINT"}
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from gmall_211027_flink_spark import QUERIES, ORACLES, get_spark  # noqa: E402
 from gmall_211027_flink_spark.catalog import TABLES  # noqa: E402

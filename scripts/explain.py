@@ -10,7 +10,7 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from gmall_211027_flink_spark import get_spark  # noqa: E402
 from gmall_211027_flink_spark.registry import (  # noqa: E402

@@ -12,7 +12,7 @@ from __future__ import annotations
 import sys
 from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from gmall_211027_flink_spark import get_spark  # noqa: E402
 from gmall_211027_flink_spark.registry import (  # noqa: E402
@@ -30,7 +30,7 @@ def main() -> None:
     names = sys.argv[2:] or BENCH_QUERIES
     load_all()
     spark = get_spark("explain_r15")
-    out_dir = Path("/root/repo/plans/r15")
+    out_dir = Path(__file__).resolve().parent.parent / "plans" / "r15"
     out_dir.mkdir(parents=True, exist_ok=True)
     for name in names:
         df = QUERIES[name](spark, SF_DIR)

@@ -12,10 +12,11 @@ from __future__ import annotations
 
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from scripts.check import LOSSY_TYPES, compare  # noqa: E402
 

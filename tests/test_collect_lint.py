@@ -11,11 +11,12 @@ A new `.collect()` anywhere else fails this lint until it is audited
 and added to the allowlist below (sibling of test_module_hygiene.py's
 AST sweeps; pure ast, no SparkSession).
 
-streaming/windows.py's gate queries collect through one decorator,
-`_temp_store`, which materializes the decorated query's result before
-its temp dir is removed. The decorator's own `.collect()` is one site;
-each function it decorates counts as a collect site of its own, so a
-new store query still needs an audited entry here.
+The temp-dir gate queries in streaming/windows.py and sources/files.py
+collect through one decorator, `tempdir.temp_store`, which materializes
+the decorated query's result before its temp dir is removed. The
+decorator's own `.collect()` is one site; each function it decorates, in
+any module, counts as a collect site of its own, so a new temp-dir query
+still needs an audited entry here.
 """
 
 from __future__ import annotations
@@ -35,7 +36,9 @@ ALLOWED_COLLECT_SITES: dict[tuple[str, str], str] = {
         "N_QUERIES-row query-matrix fetch broadcast to every task",
     ("operators/text.py", "_bpe_train"):
         "BPE_MERGES-bounded merge table (one row per learned merge)",
-    ("sources/files.py", "_roundtrip"):
+    ("sources/files.py", "source_csv_roundtrip"):
+        "file-source sim drains the bounded sample it just wrote",
+    ("sources/files.py", "source_json_roundtrip"):
         "file-source sim drains the bounded sample it just wrote",
     ("sources/files.py", "cdc_schema_evolution_replay"):
         "bounded epoch-slice replay of the schema-evolution sim",
@@ -46,9 +49,9 @@ ALLOWED_COLLECT_SITES: dict[tuple[str, str], str] = {
     ("streaming/sinks.py", "write_batch"):
         "per-batch changelog keys for tombstone bookkeeping (batch- "
         "sized by the micro-batch contract, never corpus-sized)",
-    ("streaming/windows.py", "run_in_temp_dir"):
-        "the `_temp_store` decorator's collect; each decorated query is "
-        "audited below under its own name",
+    ("tempdir.py", "run_in_temp_dir"):
+        "the `temp_store` decorator's collect; each decorated query is "
+        "audited here under its own name",
     ("streaming/windows.py", "dws_late_data_drop"):
         "gate-harness materialization before temp checkpoint cleanup",
     ("streaming/windows.py", "dws_incremental_agg_maintenance"):
@@ -57,7 +60,7 @@ ALLOWED_COLLECT_SITES: dict[tuple[str, str], str] = {
 }
 
 # functions decorated with this count as collect sites (see docstring)
-STORE_DECORATOR = "_temp_store"
+STORE_DECORATOR = "temp_store"
 
 # every stream_* gate-harness store drains its BOUNDED state (grid- /
 # calendar- / k-sized, each pinned by a named RuntimeError invariant)
