@@ -14,9 +14,10 @@ the relation memo (one resolved DataFrame per path, file signature and
 ``_MEMO_CONFS``) and, on top of it, the panel memo (``prepared``: one
 built ADS panel DataFrame per panel and ``sf_dir``, valid while every
 relation it was built on is still the memoized one). A panel hit
-re-executes the same DataFrame, so its plan keeps the session confs it
-was analyzed and planned under. A change to a conf in ``_MEMO_CONFS``
-invalidates it. Every other session conf keeps its first-call value on
+only looks its loads up again and re-executes the same DataFrame; it
+registers no temp view, because the plan's relations are bound. So its
+plan keeps the session confs it was analyzed and planned under. A
+change to a conf in ``_MEMO_CONFS`` invalidates it. Every other session conf keeps its first-call value on
 a hit: planning confs (shuffle partitions, broadcast threshold, AQE),
 and also confs that change results, such as ``spark.sql.ansi.enabled``,
 ``spark.sql.caseSensitive`` or
@@ -217,7 +218,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                                  entry[3] if same else None)
         entry = (key, df, footer, schema)
     _remember(memo, path, entry)
-    _record(("load", sf_dir, name, entry[1]))
+    _record((sf_dir, name, entry[1]))
     return entry[1]
 
 
@@ -225,12 +226,7 @@ def register_views(spark: SparkSession, sf_dir: str,
                    names: tuple[str, ...] = TABLES) -> None:
     """Register each test table as a temp view (for spark.sql plans)."""
     for n in names:
-        _register_view(n, load_table(spark, sf_dir, n))
-
-
-def _register_view(name: str, rel: DataFrame) -> None:
-    rel.createOrReplaceTempView(name)
-    _record(("view", name, rel))
+        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
 
 
 def _remember(memo: dict, key, entry) -> None:
@@ -240,28 +236,21 @@ def _remember(memo: dict, key, entry) -> None:
         del memo[next(iter(memo))]
 
 
-# The calls of each panel build in progress on this thread, innermost
-# last: ("load", sf_dir, name, relation), ("view", name, relation), or
-# None for a load that is not memoized (so the panel cannot be).
+# The loads of each panel build in progress on this thread, innermost
+# last: (sf_dir, name, relation), or None for a load that is not
+# memoized (so the panel cannot be).
 _building = threading.local()
 
 
-def _record(call: tuple | None) -> None:
-    for calls in getattr(_building, "panels", ()):
-        calls.append(call)
+def _record(load: tuple | None) -> None:
+    for loads in getattr(_building, "panels", ()):
+        loads.append(load)
 
 
-def _replay(spark: SparkSession, calls: list[tuple]) -> bool:
-    """Repeat a panel build's catalog calls: False as soon as a load
-    returns another relation than the build got, else register the
-    build's views again, from the relations just checked current."""
-    if any(c[0] == "load" and load_table(spark, c[1], c[2]) is not c[3]
-           for c in calls):
-        return False
-    for c in calls:
-        if c[0] == "view":
-            _register_view(c[1], c[2])
-    return True
+def _replay(spark: SparkSession, loads: list[tuple]) -> bool:
+    """Repeat a panel build's loads: False as soon as one returns
+    another relation than the build got."""
+    return all(load_table(spark, d, name) is rel for d, name, rel in loads)
 
 
 Panel = Callable[[SparkSession, str], DataFrame]
@@ -271,12 +260,13 @@ def prepared(build: Panel) -> Panel:
     """An ADS panel that is built once per session and ``sf_dir`` and
     re-executed while its inputs are unchanged.
 
-    The first call records the panel's ``load_table`` and view calls
-    with the relations they returned, and keeps them with the built
-    DataFrame. A later call replays the loads, each a stat-only
-    relation-memo lookup. If every load returns the identical relation,
-    the call registers the panel's views again and returns the same
-    DataFrame; re-executing it reuses its planned ``QueryExecution``,
+    The first call records the panel's ``load_table`` calls with the
+    relations they returned, and keeps them with the built DataFrame. A
+    later call replays the loads, each a stat-only relation-memo lookup.
+    If every load returns the identical relation, the call returns the
+    same DataFrame and runs no other catalog command: its analyzed plan
+    already holds the relations its views named, so it registers no
+    view again. Re-executing it reuses its planned ``QueryExecution``,
     and Spark skips the shuffle stages that already ran. Any change the
     relation memo sees (a rewrite, a part file added or removed, a
     ``_MEMO_CONFS`` change) gives a new relation, and the call rebuilds
@@ -288,14 +278,14 @@ def prepared(build: Panel) -> Panel:
         key = (build, sf_dir)
         entry = memo.pop(key, None)
         if entry is None or not _replay(spark, entry[0]):
-            calls: list = []
+            loads: list = []
             stack = vars(_building).setdefault("panels", [])
-            stack.append(calls)
+            stack.append(loads)
             try:
-                entry = (calls, build(spark, sf_dir))
+                entry = (loads, build(spark, sf_dir))
             finally:
                 stack.pop()
-            if not calls or not all(calls):
+            if not loads or not all(loads):
                 return entry[1]
         _remember(memo, key, entry)
         return entry[1]

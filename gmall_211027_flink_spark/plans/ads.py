@@ -31,17 +31,19 @@ def query(name: str, **kw):
 
 def _sql(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
     """Plan ``text`` over the tables it names as words. Their views are
-    re-registered on every call (cheap over memoized loads), so a view
-    that other code replaced, or one from another ``sf_dir``, never
-    leaks into this query.
+    registered on every build, just before it plans, so a view that
+    other code replaced, or one from another ``sf_dir``, never leaks
+    into this query.
 
     Every panel here is ``prepared``: a repeat call over unchanged
-    tables replays only the loads and view registrations and returns
-    the DataFrame planned on the first call, so this text is not parsed
-    or planned again. That plan keeps every session conf it was planned
-    under, including ones that change results such as ANSI mode; only a
-    change to a table or to a conf in ``catalog._MEMO_CONFS`` makes the
-    next call plan anew."""
+    tables replays only the loads and returns the DataFrame planned on
+    the first call, whose analyzed plan already holds the relations.
+    So this text is not parsed or planned again, and no view is
+    registered again (each registration is a Spark SQL command of about
+    6 ms, SCALE.md §23). That plan keeps every session conf it was
+    planned under, including ones that change results such as ANSI
+    mode; only a change to a table or to a conf in
+    ``catalog._MEMO_CONFS`` makes the next call plan anew."""
     words = set(re.findall(r"\w+", text.lower()))
     register_views(spark, sf_dir, tuple(n for n in TABLES if n in words))
     return spark.sql(text)

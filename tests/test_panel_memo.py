@@ -1,12 +1,15 @@
 """The session panel memo: ``catalog.prepared`` on the ADS panels.
 
 A repeat call of a panel over unchanged tables returns the DataFrame
-built on the first call and starts no Spark job; re-executing it reuses
-the shuffle outputs of the first execution. So every case here checks
+built on the first call. It starts no Spark job and no SQL execution:
+it registers no temp view, whose command would start no job but would
+cost a SQL execution of its own. Re-executing the DataFrame reuses the
+shuffle outputs of the first execution. So every case here checks
 rows, not only identity: after each kind of change under a panel (an
 in-place rewrite that keeps the byte size, a part file added, a session
-timezone change, another ``sf_dir``), the next call returns the rows
-the DuckDB oracle computes over the same files.
+timezone change, another ``sf_dir``, a foreign view under a table's
+name), the next call returns the rows the DuckDB oracle computes over
+the same files.
 """
 
 from __future__ import annotations
@@ -82,6 +85,25 @@ def _jobs_started(spark, build) -> list[int]:
         sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return list(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _sql_executions_started(spark, build) -> int:
+    """How many SQL executions ``build()`` starts, temp-view commands
+    included. Read as the growth of the newest execution id in the
+    status store, because the store's execution count stops growing
+    once it holds ``spark.sql.ui.retainedExecutions`` of them."""
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def newest() -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        n = store.executionsCount()
+        return store.executionsList(n - 1, 1).head().executionId() if n \
+            else -1
+
+    before = newest()
+    build()
+    return newest() - before
 
 
 def test_second_call_returns_the_built_dataframe_and_starts_no_job(
@@ -199,3 +221,27 @@ def test_panel_hit_matches_oracle(spark, sf_dir, name):
     first = QUERIES[name](spark, sf_dir)
     first.toPandas()
     assert _read(spark, name, sf_dir) is first
+
+
+@pytest.mark.parametrize("name", ADS_PANELS)
+def test_panel_hit_starts_no_sql_execution(spark, sf_dir, name):
+    QUERIES[name](spark, sf_dir).toPandas()
+    assert _sql_executions_started(spark, lambda: spark.range(1).count())
+    assert _sql_executions_started(
+        spark, lambda: QUERIES[name](spark, sf_dir)) == 0
+
+
+def test_foreign_view_then_rewrite_rebuilds_over_the_files(spark, sf_dir,
+                                                           tmp_path):
+    """A hit registers no view, so a build must: after a foreign
+    ``orders`` view with the same columns and a rewrite of
+    orders.parquet, the next call misses and reads the rewritten file,
+    not the view."""
+    d = _copy_tables(sf_dir, tmp_path / "t")
+    first = _read(spark, PANEL, d)
+    load_table(spark, sf_dir, "orders").limit(5) \
+        .createOrReplaceTempView("orders")
+    path = os.path.join(d, "orders.parquet")
+    orders = pq.read_table(path)
+    pq.write_table(orders.slice(0, orders.num_rows // 3), path)
+    assert _read(spark, PANEL, d) is not first

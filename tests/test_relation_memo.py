@@ -3,12 +3,14 @@
 A load over unchanged files returns the memoized DataFrame and starts no
 Spark job; a load after any change to the files, the directory or the
 session confs the load depends on returns the new rows. The ADS ``_sql``
-panels register only the views their text names, on every call.
+panels register only the views their text names, on every build; a
+panel-memo hit registers none, because its plan's relations are bound.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 
 import pyarrow as pa
@@ -135,10 +137,15 @@ def test_second_sql_panel_build_starts_no_job(spark, sf_dir):
     assert _jobs_started(spark, lambda: QUERIES[PANEL](spark, sf_dir)) == []
 
 
-def test_sql_panel_registers_only_named_views(spark, sf_dir):
+def test_sql_panel_registers_only_named_views(spark, sf_dir, tmp_path):
+    """A build registers the views; a copied ``sf_dir`` makes this call
+    a build even when the panel is memoized for ``sf_dir``."""
+    for t in PANEL_TABLES:
+        shutil.copyfile(os.path.join(sf_dir, f"{t}.parquet"),
+                        tmp_path / f"{t}.parquet")
     for t in TABLES:
         spark.catalog.dropTempView(t)
-    QUERIES[PANEL](spark, sf_dir)
+    QUERIES[PANEL](spark, str(tmp_path))
     views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
     assert views & set(TABLES) == PANEL_TABLES
 
